@@ -1,7 +1,7 @@
-"""The fan-out align emission (SPARK_GRAFT_ALIGN_FANOUT=1, default) must
-produce exactly the same triple set as the per-triple union-branch spelling
-(=0) — including the conditional references_person/references_place elif
-fan-out and every gated group — on the full fixture world."""
+"""align_stage's full-graph dedup branch (``assume_distinct=False``, for
+inputs that may repeat triples) must give the same triple set as the
+default branch, which dedups only the fraction that can collide with the
+alignment delta — on a distinct merged graph of the full fixture world."""
 
 from __future__ import annotations
 
@@ -28,27 +28,12 @@ def merged(spark, world, dims):
     return merge_stage(spark, [a, w, r]).localCheckpoint(eager=True)
 
 
-def _aligned_set(spark, merged, dims, monkeypatch, flag: str):
-    monkeypatch.setenv("SPARK_GRAFT_ALIGN_FANOUT", flag)
-    return triples_to_python_set(
-        align_stage(spark, merged, dims["wd_external_ids"]))
-
-
-def test_fanout_equals_union_branches(spark, world, dims, merged, monkeypatch):
-    fan = _aligned_set(spark, merged, dims, monkeypatch, "1")
-    legacy = _aligned_set(spark, merged, dims, monkeypatch, "0")
-    assert fan == legacy, (
-        len(fan), len(legacy),
-        sorted(fan - legacy)[:8], sorted(legacy - fan)[:8])
-
-
-def test_fanout_equals_union_branches_full_dedup_path(
-        spark, world, dims, merged, monkeypatch):
-    """assume_distinct=False exercises the full-graph dedup branch."""
-    monkeypatch.setenv("SPARK_GRAFT_ALIGN_FANOUT", "1")
-    fan = triples_to_python_set(align_stage(
+def test_full_dedup_path_equals_distinct_path(spark, dims, merged):
+    distinct = triples_to_python_set(align_stage(
+        spark, merged, dims["wd_external_ids"], assume_distinct=True))
+    full = triples_to_python_set(align_stage(
         spark, merged, dims["wd_external_ids"], assume_distinct=False))
-    monkeypatch.setenv("SPARK_GRAFT_ALIGN_FANOUT", "0")
-    legacy = triples_to_python_set(align_stage(
-        spark, merged, dims["wd_external_ids"], assume_distinct=False))
-    assert fan == legacy, (len(fan), len(legacy))
+    assert full == distinct, (
+        len(full), len(distinct),
+        sorted(full - distinct)[:8], sorted(distinct - full)[:8])
+    assert len(full) > merged.count()  # the alignment delta is not empty

@@ -39,17 +39,18 @@ def test_multi_hop_uses_broadcast_for_dims(spark):
 def test_triple_fanout_is_shuffle_free(spark, dims):
     from pyspark.sql import functions as F
 
-    from wikidata_to_cidoc_crm_spark.model import Rule, emit_triples
     from wikidata_to_cidoc_crm_spark.functions.uris import mint
+    from wikidata_to_cidoc_crm_spark.model import Rule
+    from wikidata_to_cidoc_crm_spark.plans.sql_stages import _emit_inline_sql
 
-    wide = dims["wd_labels"]
-    out = emit_triples(wide, [
+    emit = _emit_inline_sql(spark, [
         Rule(mint("person", "qid"), "p:x", F.col("label"), obj_is_iri=False),
         Rule(mint("person", "qid"), "p:y", F.col("lang"), obj_is_iri=False),
-    ])
+    ], "test:fanout")
+    out = spark.sql(f"SELECT {emit} FROM {{t}}", t=dims["wd_labels"])
     plan = _plan(out, "simple")
     assert "Exchange" not in plan  # pure Project+Generate, no shuffle
-    assert "Generate explode" in plan
+    assert "Generate inline" in plan
     # '*(n)' prefixes mark whole-stage-codegen spans in simpleString
     assert "*(" in plan
 
@@ -60,55 +61,20 @@ def test_aggregate_is_partial_then_final(spark):
     assert "HashAggregate" in plan  # partial/final hash aggregation
 
 
-def test_merge_single_exchange_for_dedup_and_label_window(spark, dims, world):
-    """merge_stage's repartition(subj) must be the ONLY full-graph exchange:
-    dropDuplicates (subj is a key prefix) and the label window
-    (partitionBy subj) both reuse it instead of shuffling again."""
-    from wikidata_to_cidoc_crm_spark.plans.authors import authors_stage
-    from wikidata_to_cidoc_crm_spark.plans.merge import merge_stage
-
-    qids = spark.createDataFrame([(p["qid"],) for p in world.persons],
-                                 "qid string")
-    a = authors_stage(spark, qids, dims["wd_statements"], dims["wd_labels"]) \
-        .localCheckpoint(eager=True)
-    merged = merge_stage(spark, [a], strategy="subj-exchange",
-                         checkpoint=False)
-    plan = _plan(merged, "simple")
-    # the forced subj repartition is the ONLY exchange shape over the full
-    # graph (dedup and the label window both reuse its clustering); the
-    # un-checkpointed explain may repeat the shared subtree per union
-    # branch, so assert by distinct shape, not occurrence count
-    import re as _re
-
-    big_exchanges = {
-        _re.sub(r"#\d+", "#", m.group(0))
-        for m in _re.finditer(
-            r"Exchange hashpartitioning\([^)]*\), REPARTITION_BY_COL", plan)}
-    assert len(big_exchanges) == 1, plan
-    # and nothing else exchanges the full graph: every non-repartition
-    # exchange is over a pruned (label/ontology-subject) subtree
-    others = [ln for ln in plan.splitlines()
-              if "Exchange hashpartitioning" in ln
-              and "REPARTITION_BY_COL" not in ln]
-    assert not [ln for ln in others
-                if "pred" in ln and "obj" in ln and "lang" in ln], plan
-
-
 def test_label_broadcast_gate_falls_back_to_shuffle_join(spark, dims, world, monkeypatch):
     """When the label table exceeds LABEL_BROADCAST_MAX the forced broadcast
     must give way to a shuffle join (fact-sized labels would OOM a forced
     broadcast at real-Wikidata scale) — and the result set is identical."""
-    from pyspark.sql import functions as F
-
+    from wikidata_to_cidoc_crm_spark.model import triples_to_python_set
     from wikidata_to_cidoc_crm_spark.plans import relations as relmod
-    from wikidata_to_cidoc_crm_spark.plans.works import wide_works
+    from wikidata_to_cidoc_crm_spark.plans.works import works_stage
 
     works = spark.createDataFrame(
         [(w["qid"],) for w in world.works], "qid string")
-    bcast = wide_works(works, dims["wd_statements"], dims["wd_labels"],
-                       broadcast_labels=True)
-    shuffled = wide_works(works, dims["wd_statements"], dims["wd_labels"],
-                          broadcast_labels=False)
+    bcast = works_stage(spark, works, dims["wd_statements"], dims["wd_labels"],
+                        broadcast_labels=True)
+    shuffled = works_stage(spark, works, dims["wd_statements"],
+                           dims["wd_labels"], broadcast_labels=False)
     # disable the size-based auto-broadcast so only the explicit hint
     # decides (the fixture label dim is tiny and would auto-broadcast)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -120,13 +86,11 @@ def test_label_broadcast_gate_falls_back_to_shuffle_join(spark, dims, world, mon
         assert n_shuffled < n_bcast
         # and the auto gate flips when the threshold is exceeded
         monkeypatch.setattr(relmod, "LABEL_BROADCAST_MAX", 0)
-        auto = wide_works(works, dims["wd_statements"], dims["wd_labels"])
+        auto = works_stage(spark, works, dims["wd_statements"], dims["wd_labels"])
         assert _plan(auto, "simple").count("BroadcastHashJoin") == n_shuffled
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    cols = ["qid", "label", "label_lang", "manif_label", "manif_lang"]
-    assert sorted(map(tuple, bcast.select(*cols).collect())) \
-        == sorted(map(tuple, shuffled.select(*cols).collect()))
+    assert triples_to_python_set(bcast) == triples_to_python_set(shuffled)
 
 
 def test_jaccard_avoids_stopword_hub_join_on_both_paths(spark):
@@ -211,46 +175,46 @@ def test_jaccard_mask_count_gate_falls_back_to_prefix_path(
         == sorted(map(tuple, slow.collect()))
 
 
-def test_merge_full_key_strategy_matches_and_shuffles_labels_only(
-        spark, dims, world):
-    """The skew-robust full-key merge strategy must produce the identical
-    triple set, shuffle the big dedup on the full key (uniform), and
-    re-shuffle only the label fraction for the window."""
-    from wikidata_to_cidoc_crm_spark.model import triples_to_python_set
+def test_merge_dedups_on_full_key_and_shuffles_labels_only(
+        spark, dims, world, monkeypatch):
+    """The skew-robust merge shuffles the big dedup on the full triple key
+    (uniform under hub subjects) and re-shuffles only the label fraction
+    for the window — never a forced full-graph subj repartition."""
+    from wikidata_to_cidoc_crm_spark.plans import merge as mergemod
     from wikidata_to_cidoc_crm_spark.plans.authors import authors_stage
-    from wikidata_to_cidoc_crm_spark.plans.merge import merge_stage
 
     qids = spark.createDataFrame([(p["qid"],) for p in world.persons],
                                  "qid string")
     a = authors_stage(spark, qids, dims["wd_statements"], dims["wd_labels"]) \
         .localCheckpoint(eager=True)
-    subj_x = merge_stage(spark, [a], strategy="subj-exchange")
-    full_k = merge_stage(spark, [a], strategy="full-key")
-    assert triples_to_python_set(subj_x) == triples_to_python_set(full_k)
-    plan = _plan(merge_stage(spark, [a], strategy="full-key",
-                             checkpoint=False), "simple")
+    # the checkpoint truncates the plan, so catch the first statement (the
+    # dedup + label window) as it is handed to it
+    first: list = []
+    monkeypatch.setattr(mergemod, "lazy_checkpoint",
+                        lambda df: first.append(df) or df)
+    mergemod.merge_stage(spark, [a])
+    plan = _plan(first[0], "simple")
     exchanges = [ln for ln in plan.splitlines()
                  if "Exchange hashpartitioning" in ln]
-    # the dedup shuffles on the FULL 6-tuple key (uniform under hub
-    # subjects), never via a forced full-graph subj repartition (the
-    # un-checkpointed explain repeats the shared subtree per union branch,
-    # so we assert shape, not count; execution shares it via checkpoint)
-    full_graph = [ln for ln in exchanges
-                  if "subj" in ln and "pred" in ln and "obj" in ln]
-    assert len(full_graph) >= 1, plan
+    full_key = [ln for ln in exchanges
+                if "subj" in ln and "pred" in ln and "obj" in ln]
+    subj_only = [ln for ln in exchanges if ln not in full_key]
+    assert full_key, plan
+    # the label window's exchange sits above a pred = rdfs:label filter
+    assert subj_only and all("subj" in ln for ln in subj_only), plan
     assert "REPARTITION_BY_COL" not in plan, plan
 
 
 def test_final_align_stage_plans_adaptive_by_default(spark, monkeypatch):
     """README invariant (round-5 advice): the pipeline's final align stage
-    executes under AQE by default (its many dimension-sized shuffles rely
-    on runtime coalescing) and goes static under SPARK_GRAFT_FINAL_AQE=0.
+    executes under AQE (its many dimension-sized shuffles rely on runtime
+    coalescing).
 
     The checkpoint truncates the returned plan to a Scan ExistingRDD, so
     the AQE-ness is asserted where it is decided: the adaptive conf active
     at each ``localCheckpoint`` call during the pipeline build. The final
-    (aligned) checkpoint must run with AQE on by default — every
-    lazy_checkpoint scopes it off — and with AQE off under the knob."""
+    (aligned) checkpoint must run with AQE on — every lazy_checkpoint
+    scopes it off."""
     import pyspark.sql.classic.dataframe as pdf
 
     from wikidata_to_cidoc_crm_spark.pipeline import run_pipeline
@@ -265,7 +229,6 @@ def test_final_align_stage_plans_adaptive_by_default(spark, monkeypatch):
 
     monkeypatch.setattr(pdf.DataFrame, "localCheckpoint", recording)
 
-    monkeypatch.delenv("SPARK_GRAFT_FINAL_AQE", raising=False)
     out = run_pipeline(spark, "/root/testdata/sf0.001", check_invariant=False)
     out._pipeline_runner.wait()
     lazy_calls = [aqe for eager, aqe in seen if not eager]
@@ -274,10 +237,3 @@ def test_final_align_stage_plans_adaptive_by_default(spark, monkeypatch):
     # through lazy_checkpoint's AQE-off window
     assert lazy_calls and lazy_calls[-1] == "true", seen
     assert all(v == "false" for v in lazy_calls[:-1]), seen
-
-    seen.clear()
-    monkeypatch.setenv("SPARK_GRAFT_FINAL_AQE", "0")
-    out = run_pipeline(spark, "/root/testdata/sf0.001", check_invariant=False)
-    out._pipeline_runner.wait()
-    lazy_calls = [aqe for eager, aqe in seen if not eager]
-    assert lazy_calls and all(v == "false" for v in lazy_calls), seen

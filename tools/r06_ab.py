@@ -1,6 +1,6 @@
 """Round-6 interleaved A/B harness — reproduces OPTIMIZATION_r06.md claims.
 
-Usage: python tools/r06_ab.py [dedup|relations|align] [repeats]
+Usage: python tools/r06_ab.py [dedup] [repeats]
 
 Every comparison is interleaved (A, B, A, B …) in ONE session with noop
 sinks (guide §1.4) because this VM's absolute timings swing 3–4× between
@@ -108,104 +108,14 @@ def ab_dedup(spark, sf_dir: str, repeats: int) -> None:
         print(k, v, "min", min(v))
 
 
-def _pipeline_inputs(spark, sf_dir: str, scale: int = 20):
-    from wikidata_to_cidoc_crm_spark.fixtures import (
-        interleaved_corpus, make_world_scaled, world_to_spark)
-    from wikidata_to_cidoc_crm_spark.linking import detect_mentions, linked_qids
-
-    world = make_world_scaled(scale)
-    dims = world_to_spark(spark, world)
-    for n in ("wd_statements", "wd_labels", "wd_subclass_closure",
-              "wd_property_closure", "wd_entities"):
-        dims[n].cache()
-    corpus = interleaved_corpus(
-        spark, f"{sf_dir}/documents.parquet", dims["wd_entities"],
-        mentions_per_doc=3).localCheckpoint(eager=True)
-    mentions = detect_mentions(spark, corpus.select("doc_id", "spans"),
-                               dims["wd_entities"]).localCheckpoint(eager=True)
-    works_q = linked_qids(mentions, dims["wd_entities"], "work") \
-        .localCheckpoint(eager=True)
-    works_q.count()
-    return dims, works_q
-
-
-def ab_relations(spark, sf_dir: str, repeats: int) -> None:
-    """SQL vs DataFrame relations stage: build seconds + exec seconds."""
-    from wikidata_to_cidoc_crm_spark.plans.relations import relations_stage
-
-    dims, works_q = _pipeline_inputs(spark, sf_dir)
-    for _ in range(repeats):
-        for mode in ("1", "0"):
-            os.environ["SPARK_GRAFT_SQL_STAGES"] = mode
-            t0 = time.time()
-            df = relations_stage(
-                spark, works_q, dims["wd_statements"], dims["wd_labels"],
-                dims["wd_subclass_closure"], dims["wd_property_closure"],
-                broadcast_labels=True)
-            b = time.time() - t0
-            t0 = time.time()
-            noop(df)
-            print(f"relations {'SQL' if mode == '1' else 'DF '}: "
-                  f"build {b:.2f}s exec {time.time() - t0:.2f}s")
-
-
-def ab_align(spark, sf_dir: str, repeats: int) -> None:
-    """Fan-out vs per-triple-union align emission: build + exec seconds."""
-    from wikidata_to_cidoc_crm_spark.fixtures import world_to_spark, make_world_scaled
-    from wikidata_to_cidoc_crm_spark.linking import linked_qids
-    from wikidata_to_cidoc_crm_spark.plans.align import align_stage
-    from wikidata_to_cidoc_crm_spark.plans.authors import authors_stage
-    from wikidata_to_cidoc_crm_spark.plans.canonicalize import canonicalize_stage
-    from wikidata_to_cidoc_crm_spark.plans.merge import merge_stage
-    from wikidata_to_cidoc_crm_spark.plans.relations import relations_stage
-    from wikidata_to_cidoc_crm_spark.plans.works import works_stage
-
-    dims, works_q = _pipeline_inputs(spark, sf_dir)
-    from wikidata_to_cidoc_crm_spark.fixtures import interleaved_corpus
-    from wikidata_to_cidoc_crm_spark.linking import detect_mentions
-
-    corpus = interleaved_corpus(
-        spark, f"{sf_dir}/documents.parquet", dims["wd_entities"],
-        mentions_per_doc=3).localCheckpoint(eager=True)
-    mentions = detect_mentions(spark, corpus.select("doc_id", "spans"),
-                               dims["wd_entities"]).localCheckpoint(eager=True)
-    persons_q = linked_qids(mentions, dims["wd_entities"], "person") \
-        .localCheckpoint(eager=True)
-    a = authors_stage(spark, persons_q, dims["wd_statements"], dims["wd_labels"],
-                      dedupe=True, broadcast_labels=True)
-    w = works_stage(spark, works_q, dims["wd_statements"], dims["wd_labels"],
-                    dedupe=True, broadcast_labels=True)
-    r = relations_stage(spark, works_q, dims["wd_statements"], dims["wd_labels"],
-                        dims["wd_subclass_closure"], dims["wd_property_closure"],
-                        dedupe=True, broadcast_labels=True)
-    merged = merge_stage(spark, [a, w, r])
-    canonical = canonicalize_stage(spark, merged).localCheckpoint(eager=True)
-    print(f"canonical rows: {canonical.count()}")
-    for _ in range(repeats):
-        for mode in ("1", "0"):
-            os.environ["SPARK_GRAFT_ALIGN_FANOUT"] = mode
-            t0 = time.time()
-            df = align_stage(spark, canonical, dims["wd_external_ids"])
-            b = time.time() - t0
-            t0 = time.time()
-            noop(df)
-            print(f"align {'FAN' if mode == '1' else 'UNI'}: "
-                  f"build {b:.2f}s exec {time.time() - t0:.2f}s")
-
-
 def main() -> None:
     which = sys.argv[1] if len(sys.argv) > 1 else "dedup"
     repeats = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("r06-ab", cores=32, shuffle_partitions=32)
-    if which == "dedup":
-        ab_dedup(spark, sf_dir, repeats)
-    elif which == "relations":
-        ab_relations(spark, sf_dir, repeats)
-    elif which == "align":
-        ab_align(spark, sf_dir, repeats)
-    else:
+    if which != "dedup":
         raise SystemExit(f"unknown probe: {which}")
+    ab_dedup(spark, sf_dir, repeats)
 
 
 if __name__ == "__main__":

@@ -5,4 +5,3 @@ from .uris import (  # noqa: F401
     timespan_uri,
     wd_entity_uri,
 )
-from .dates import date_only, year_of  # noqa: F401

@@ -1,4 +1,4 @@
-"""Canonical triple model + the rule-driven triple-emission operator.
+"""Canonical triple model + the declarative triple-emission rule.
 
 The reference accumulates triples into an in-memory rdflib ``Graph``
 (set semantics, row-at-a-time ``g.add`` calls — e.g.
@@ -8,11 +8,11 @@ replaces that with:
 * one canonical triple DataFrame schema ``(subj, pred, obj, obj_is_iri,
   lang, dtype)`` (SURVEY.md §1.2),
 * a declarative :class:`Rule` table per mapping stage — one rule per
-  reference ``g.add`` line — compiled into a single
-  ``explode(filter(array(struct(...)...)))`` projection, i.e. a generated
-  *triple fan-out* that stays entirely inside whole-stage codegen
-  (SURVEY.md §2.2 P13),
-* set semantics restored by ``dropDuplicates`` on the triple key.
+  reference ``g.add`` line — compiled by ``plans/sql_stages.py`` into a
+  single ``inline(array_compact(array(...)))`` projection, i.e. a
+  generated *triple fan-out* that stays entirely inside whole-stage
+  codegen (SURVEY.md §2.2 P13),
+* set semantics restored by a DISTINCT on the full triple key.
 
 Scale notes: the emission projection is narrow (strings only), shuffles
 nothing by itself, and the dedup shuffle is keyed on the full triple so it
@@ -22,10 +22,8 @@ is uniformly distributed even when subjects are skewed.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterable, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
 
 # --- Namespaces (behavioral parity: authors.py:33-40, works.py:34-43,
@@ -103,64 +101,6 @@ class Rule:
     dtype: str | None = None
     cond: Column | None = None
     ref: str = ""
-
-
-def _lang_col(lang: Column | str | None) -> Column:
-    if lang is None:
-        return F.lit(None).cast("string")
-    if isinstance(lang, str):
-        return F.lit(lang)
-    return lang.cast("string")
-
-
-def emit_triples(df: DataFrame, rules: Sequence[Rule]) -> DataFrame:
-    """Compile a rule table into one narrow fan-out projection.
-
-    Produces ``len(rules)`` candidate structs per input row, drops the ones
-    whose condition/nullability fails, explodes. No Python in the hot path;
-    the whole operator is a single ``Project + Generate`` in the physical
-    plan (verified via ``.explain``), so it rides whole-stage codegen and
-    scales linearly with input rows.
-    """
-    structs = []
-    for r in rules:
-        subj = F.lit(r.subj) if isinstance(r.subj, str) else r.subj
-        obj = F.lit(r.obj) if isinstance(r.obj, str) else r.obj
-        cond = subj.isNotNull() & obj.isNotNull()
-        if r.cond is not None:
-            cond = cond & r.cond
-        structs.append(
-            F.when(
-                cond,
-                F.struct(
-                    subj.cast("string").alias("subj"),
-                    F.lit(r.pred).alias("pred"),
-                    obj.cast("string").alias("obj"),
-                    F.lit(bool(r.obj_is_iri)).alias("obj_is_iri"),
-                    _lang_col(r.lang).alias("lang"),
-                    F.lit(r.dtype).cast("string").alias("dtype"),
-                ),
-            )
-        )
-    arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-    return df.select(F.explode(arr).alias("t")).select("t.*")
-
-
-def const_triples(
-    spark: SparkSession,
-    triples: Iterable[tuple],
-) -> DataFrame:
-    """Constant triple block (ontology headers, equivalence axioms — e.g.
-    authors.py:148-179). Accepts (s, p, o), (s, p, o, is_iri),
-    (s, p, o, is_iri, lang) or full 6-tuples."""
-    rows = []
-    for t in triples:
-        s, p, o = t[0], t[1], t[2]
-        is_iri = t[3] if len(t) > 3 else True
-        lang = t[4] if len(t) > 4 else None
-        dtype = t[5] if len(t) > 5 else None
-        rows.append((s, p, o, is_iri, lang, dtype))
-    return spark.createDataFrame(rows, TRIPLE_SCHEMA)
 
 
 def dedupe_triples(df: DataFrame) -> DataFrame:

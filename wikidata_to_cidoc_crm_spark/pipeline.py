@@ -22,7 +22,6 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .fixtures import interleaved_corpus, make_world_scaled, world_to_spark
 from .invariants import assert_span_invariant
@@ -236,33 +235,37 @@ def run_pipeline(
     # need the flag — off the driver's serial critical path.
     from .plans.relations import LABEL_BROADCAST_MAX
 
-    _label_pool = ThreadPoolExecutor(max_workers=1,
-                                     thread_name_prefix="label-count")
-    f_broadcast_labels = _label_pool.submit(
+    label_pool = ThreadPoolExecutor(max_workers=1,
+                                    thread_name_prefix="label-count")
+    f_broadcast_labels = label_pool.submit(
         lambda: dims["wd_labels"].count() <= LABEL_BROADCAST_MAX)
-    _label_pool.shutdown(wait=False)
+    try:
+        corpus = runner.run(
+            "corpus", fp,
+            lambda: interleaved_corpus(
+                spark, os.path.join(sf_dir, "documents.parquet"),
+                dims["wd_entities"], mentions_per_doc=mentions_per_doc),
+        )
+        docs = corpus.select("doc_id", "spans")
 
-    corpus = runner.run(
-        "corpus", fp,
-        lambda: interleaved_corpus(
-            spark, os.path.join(sf_dir, "documents.parquet"),
-            dims["wd_entities"], mentions_per_doc=mentions_per_doc),
-    )
-    docs = corpus.select("doc_id", "spans")
+        if check_invariant:
+            # ingest must not disturb the span sequence (BASELINE.json input_hint)
+            assert_span_invariant(corpus.select("doc_id", "spans"), docs)
 
-    if check_invariant:
-        # ingest must not disturb the span sequence (BASELINE.json input_hint)
-        assert_span_invariant(corpus.select("doc_id", "spans"), docs)
-
-    mentions = runner.run(
-        "mentions", fp,
-        lambda: detect_mentions(spark, docs, dims["wd_entities"]),
-    )
-    # LAZY checkpoints: the mapping stages' first background action
-    # materializes these (once — per-block locks), so the corpus→mentions→
-    # link chain executes off the driver's plan-construction critical path
-    persons = linked_qids(mentions, dims["wd_entities"], "person").transform(lazy_checkpoint)
-    works = linked_qids(mentions, dims["wd_entities"], "work").transform(lazy_checkpoint)
+        mentions = runner.run(
+            "mentions", fp,
+            lambda: detect_mentions(spark, docs, dims["wd_entities"]),
+        )
+        # LAZY checkpoints: the mapping stages' first background action
+        # materializes these (once — per-block locks), so the corpus→mentions→
+        # link chain executes off the driver's plan-construction critical path
+        persons = linked_qids(mentions, dims["wd_entities"], "person").transform(lazy_checkpoint)
+        works = linked_qids(mentions, dims["wd_entities"], "work").transform(lazy_checkpoint)
+        broadcast_labels = f_broadcast_labels.result()
+    finally:
+        # on an early failure too: wait out the count and join its thread,
+        # so no Spark job outlives the failed run
+        label_pool.shutdown(wait=True, cancel_futures=True)
 
     # dedupe per stage BEFORE the checkpoint: the relation families emit
     # quadratically many duplicate triples on hub features (C(n,2) pairs
@@ -278,7 +281,6 @@ def run_pipeline(
     # builds the ~90-rule relations DAG), and multi-threaded plan building
     # against one SparkSession is supported — each thread gets its own
     # py4j connection, analysis is JVM-side and parallel.
-    broadcast_labels = f_broadcast_labels.result()
     with ThreadPoolExecutor(max_workers=3,
                             thread_name_prefix="stage-plan") as plan_pool:
         f_authors = plan_pool.submit(
@@ -308,17 +310,13 @@ def run_pipeline(
         "canonicalized", fp,
         lambda: canonicalize_stage(spark, merged),
     )
-    # final stage: nothing downstream to overlap, so by default keep AQE
-    # (lazy=False) — its runtime coalescing beats a static plan on the many
-    # dimension-sized shuffles at small scale. SPARK_GRAFT_FINAL_AQE=0
-    # switches to the static (lazy) plan for A/B measurement: static exec
-    # submits independent branches concurrently instead of AQE's
-    # stage-wave driver coordination, which may win at larger world scales.
-    final_aqe = os.environ.get("SPARK_GRAFT_FINAL_AQE", "1") != "0"
+    # final stage: nothing downstream to overlap, so keep AQE (lazy=False)
+    # — its runtime coalescing beats a static plan on the many
+    # dimension-sized shuffles at small scale
     aligned = runner.run(
         "aligned", fp,
         lambda: align_stage(spark, canonical, dims["wd_external_ids"]),
-        lazy=not final_aqe,
+        lazy=False,
     )
     aligned._pipeline_metrics = runner.metrics  # introspection for bench
     aligned._pipeline_runner = runner  # callers: runner.wait() before reading exec_sec

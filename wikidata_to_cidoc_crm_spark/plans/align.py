@@ -35,8 +35,6 @@ collect): conditional blocks semi-join a broadcast one-row gate.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,8 +45,6 @@ from ..model import (
     OWL_SAMEAS,
     RDF_TYPE,
     RDFS_LABEL,
-    TRIPLE_SCHEMA,
-    WD,
     dedupe_triples,
 )
 from .align_spec import (
@@ -95,7 +91,7 @@ def _triple_struct(s, pred: str, o) -> F.Column:
 def _fan(df: DataFrame, emits: list[tuple]) -> DataFrame:
     """Emit several (optionally conditional) triples per source row through
     ONE ``inline(array_compact(array(...)))`` Generate — the align spelling
-    of ``model.emit_triples``'s fan-out.  ``emits`` rows are
+    of the mapping stages' rule fan-out.  ``emits`` rows are
     ``(cond_or_None, s, pred, o)``; a null condition drops that element via
     ``array_compact``.  Replaces one union branch (and one re-execution of
     the shared source subtree) per emitted triple with a single branch."""
@@ -218,23 +214,15 @@ def align_stage(
 
     parts: list[DataFrame] = []
 
-    # fan-out emission (default): triples that share one source DataFrame
-    # and one presence gate emit through a single inline() branch instead
-    # of one union branch each (~21 → ~11 branches; each dropped branch
-    # cost a scheduled AQE stage wave plus a re-execution of the shared,
-    # un-checkpointed source subtree). SPARK_GRAFT_ALIGN_FANOUT=0 restores
-    # the per-triple union branches for A/B and equality tests.
-    fanout = os.environ.get("SPARK_GRAFT_ALIGN_FANOUT", "1") != "0"
-
+    # fan-out emission: triples that share one source DataFrame and one
+    # presence gate emit through a single inline() branch instead of one
+    # union branch each (~21 → ~11 branches; each dropped branch cost a
+    # scheduled AQE stage wave plus a re-execution of the shared,
+    # un-checkpointed source subtree)
     def emit_group(src: DataFrame, reqs, emits: list[tuple]) -> None:
         for _c, _s, p, _o in emits:
             dyn_preds.add(p)
-        if fanout:
-            parts.append(_gated(_fan(src, emits), *reqs))
-        else:
-            for cond, s, p, o in emits:
-                assert cond is None  # legacy spelling has no conditionals
-                parts.append(_gated(_mk(src, s, p, o), *reqs))
+        parts.append(_gated(_fan(src, emits), *reqs))
 
     # subjects any constant block can emit — a triple of g can only equal
     # a constant-block triple if it shares the subject
@@ -452,30 +440,19 @@ def align_stage(
     )
     is_person = typed(E + "E21_Person").withColumnRenamed("e", "target")
     is_place = typed(E + "E53_Place").withColumnRenamed("e", "target")
-    if fanout:
-        # person/place markers as nullable flags (typed sets are distinct,
-        # so the left joins cannot multiply rows); the place condition
-        # reproduces the reference's elif exactly: place AND NOT person
-        flagged = (
-            refs.join(is_person.withColumn("__p", F.lit(True)), "target", "left")
-            .join(is_place.withColumn("__q", F.lit(True)), "target", "left"))
-        emit_group(flagged, _req, [
-            (None, "expr", SP + "expr_references", "target"),
-            (F.coalesce(F.col("__p"), F.lit(False)),
-             "expr", SP + "references_person", "target"),
-            (F.coalesce(F.col("__q"), F.lit(False)) & F.col("__p").isNull(),
-             "expr", SP + "references_place", "target"),
-        ])
-    else:
-        persons = refs.join(is_person, "target", "left_semi")
-        places = refs.join(is_place, "target", "left_semi").join(
-            is_person, "target", "left_anti")  # elif semantics
-        for part in (
-            mk(refs, "expr", SP + "expr_references", "target"),
-            mk(persons, "expr", SP + "references_person", "target"),
-            mk(places, "expr", SP + "references_place", "target"),
-        ):
-            parts.append(_gated(part, *_req))
+    # person/place markers as nullable flags (typed sets are distinct, so
+    # the left joins cannot multiply rows); the place condition reproduces
+    # the reference's elif exactly: place AND NOT person
+    flagged = (
+        refs.join(is_person.withColumn("__p", F.lit(True)), "target", "left")
+        .join(is_place.withColumn("__q", F.lit(True)), "target", "left"))
+    emit_group(flagged, _req, [
+        (None, "expr", SP + "expr_references", "target"),
+        (F.coalesce(F.col("__p"), F.lit(False)),
+         "expr", SP + "references_person", "target"),
+        (F.coalesce(F.col("__q"), F.lit(False)) & F.col("__p").isNull(),
+         "expr", SP + "references_place", "target"),
+    ])
 
     # has_character (962-991)
     _req = (("class", I + "INT_Character"),)

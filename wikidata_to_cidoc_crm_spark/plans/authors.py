@@ -4,9 +4,9 @@ Behavioral spec: ``/root/reference/src/wiki2crm/authors.py:254-363``
 (``process_authors``); SPARQL optionals at authors.py:190-198. The
 reference loops per QID and row; here it is one declarative plan:
 
-    person QIDs ⟕ pivoted statements ⟕ labels → wide author DF
-      → rule-driven triple fan-out (model.emit_triples)
-      → union constant header → dropDuplicates
+    person QIDs ⟕ pivoted statements ⟕ labels → wide author rows
+      → rule-driven triple fan-out (sql_stages._emit_inline_sql)
+      → union constant header → DISTINCT
 
 Determinism decision (SURVEY.md §4.4.7 / §2.4 A5): the reference keeps the
 *first* SPARQL binding per person (arrival order — non-deterministic); this
@@ -19,9 +19,10 @@ README.md:269-273) are emitted here.
 
 Scale notes: statements are filtered to 6 pids *before* the pivot
 (predicate pushdown to the parquet scan), the pivot is a single hash
-aggregate keyed by subject QID, and label joins broadcast the dimension.
-The person-QID side may be huge (every person linked in 10^12 docs) — it
-shuffles only for the final dedup.
+aggregate keyed by subject QID, and label joins broadcast the dimension
+(gated on its size, LABEL_BROADCAST_MAX). The person-QID side may be huge
+(every person linked in 10^12 docs) — it shuffles only for the final
+dedup. The stage compiles to one ``spark.sql`` statement.
 """
 
 from __future__ import annotations
@@ -29,8 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.dates import date_only
-from ..functions.uris import mint, qid_from_uri, timespan_uri, wd_entity_uri
+from ..functions.uris import mint, timespan_uri, wd_entity_uri
 from ..model import (
     ECRM,
     OWL_SAMEAS,
@@ -41,86 +41,13 @@ from ..model import (
     SAPPHO,
     XSD,
     Rule,
-    dedupe_triples,
-    emit_triples,
 )
-from .constants import authors_header
-from ..session import lazy_checkpoint
+from .sql_stages import _const_values_sql, _emit_inline_sql, _wrap
 
 AUTHOR_PIDS = ["P21", "P19", "P20", "P569", "P570", "P18"]
 XSD_DATE = XSD + "date"
 ID_TYPE_WIKIDATA = SAPPHO + "id_type/wikidata"
 GENDER_TYPE_WIKIDATA = SAPPHO + "gender_type/wikidata"
-
-
-def wide_authors(
-    person_qids: DataFrame,
-    statements: DataFrame,
-    labels: DataFrame,
-    broadcast_labels: bool | None = None,
-) -> DataFrame:
-    """Build the wide author DataFrame (one row per person QID).
-
-    Equivalent of the authors SPARQL SELECT (authors.py:187-200): each
-    OPTIONAL property becomes a pivoted nullable column; the label service
-    becomes broadcast joins against ``wd_labels``.
-    """
-    stmts = statements.filter(F.col("pid").isin(AUTHOR_PIDS)).join(
-        person_qids.withColumnRenamed("qid", "subject_qid"),
-        "subject_qid",
-        "left_semi",
-    )
-    # deterministic first-binding rule: per-attribute min (SURVEY §2.4 A5)
-    pivoted = (
-        stmts.groupBy("subject_qid")
-        .pivot("pid", AUTHOR_PIDS)
-        .agg(F.min("object_value"))
-        .withColumnRenamed("subject_qid", "qid")
-    )
-    wide = person_qids.join(pivoted, "qid", "left")
-
-    # ONE canonical (qid, label) build side shared by all four label joins:
-    # identical build-side subtrees let Spark reuse a single broadcast
-    # exchange (ReusedExchange) instead of building the hash relation per
-    # join site. The checkpoint pins the subtree so canonical equality is
-    # structural, not incidental.
-    lab_en = labels.filter(F.col("lang") == "en").select(
-        F.col("qid").alias("_lqid"), F.col("label").alias("_label")
-    ).transform(lazy_checkpoint)
-    # gate the forced label broadcast on dimension size (shuffle-join
-    # fallback for fact-sized label tables — same rule as relations_stage)
-    from .relations import LABEL_BROADCAST_MAX
-
-    if broadcast_labels is None:
-        broadcast_labels = labels.count() <= LABEL_BROADCAST_MAX
-    _maybe_bcast = F.broadcast if broadcast_labels else (lambda df: df)
-
-    def attach_label(df: DataFrame, key: str, out: str) -> DataFrame:
-        return df.join(
-            _maybe_bcast(lab_en),
-            F.col(key) == F.col("_lqid"),
-            "left",
-        ).withColumnRenamed("_label", out).drop("_lqid")
-
-    wide = attach_label(wide, "qid", "item_label")
-    wide = attach_label(wide, "P21", "gender_label")
-    wide = attach_label(wide, "P19", "birth_place_label")
-    wide = attach_label(wide, "P20", "death_place_label")
-
-    return wide.select(
-        "qid",
-        # authors.py:273-275 label fallback
-        F.coalesce("item_label", F.format_string("Unknown (%s)", "qid")).alias("label"),
-        F.col("P21").alias("gender_qid"),
-        "gender_label",
-        date_only("P569").alias("birth_date"),
-        date_only("P570").alias("death_date"),
-        F.col("P19").alias("birth_place_qid"),
-        "birth_place_label",
-        F.col("P20").alias("death_place_qid"),
-        "death_place_label",
-        F.col("P18").alias("image_url"),
-    )
 
 
 def _event_rules(kind: str, date_col: str, place_qid: str, place_label: str,
@@ -236,19 +163,66 @@ def authors_stage(
     dedupe: bool = True,
     broadcast_labels: bool | None = None,
 ) -> DataFrame:
-    import os as _os
+    from ..oracle import authors_header_triples
+    from .relations import LABEL_BROADCAST_MAX
 
-    if _os.environ.get("SPARK_GRAFT_SQL_STAGES", "1") != "0":
-        from .sql_stages import authors_stage_sql
+    if broadcast_labels is None:
+        broadcast_labels = labels.count() <= LABEL_BROADCAST_MAX
+    hint = ("/*+ BROADCAST(l0), BROADCAST(l1), BROADCAST(l2), BROADCAST(l3) */ "
+            if broadcast_labels else "")
+    emit = _emit_inline_sql(spark, author_rules(), "authors")
+    header = _const_values_sql(sorted(
+        (s, p, o, ii, lang, dt)
+        for (s, p, o, lang, dt, ii) in authors_header_triples()
+    )) if include_header else None
 
-        return authors_stage_sql(
-            spark, person_qids, statements, labels,
-            include_header=include_header, dedupe=dedupe,
-            broadcast_labels=broadcast_labels)
-    wide = wide_authors(person_qids, statements, labels, broadcast_labels)
-    triples = emit_triples(wide, author_rules())
-    if include_header:
-        triples = triples.unionByName(authors_header(spark))
-    # dedupe=False lets the pipeline defer set semantics to the merge stage
-    # (one shuffle instead of four); the triple *set* is identical
-    return dedupe_triples(triples) if dedupe else triples
+    pin = ",".join(f"'{p}'" for p in AUTHOR_PIDS)
+    piv_cols = ",\n    ".join(
+        f"min(CASE WHEN pid = '{p}' THEN object_value END) AS {p}"
+        for p in AUTHOR_PIDS)
+    # piv keeps the per-attribute min (deterministic first binding, SURVEY
+    # §2.4 A5); wide applies the label fallback (authors.py:273-275) and
+    # format_date's split('T')[0] (authors.py:251-252).
+    # the person-QID side is bounded by the entity dimension (linked_qids
+    # semi-joins against wd_entities), so it broadcasts unconditionally —
+    # same membership-broadcast rule as relations' in_W. This keeps the
+    # statements scan shuffle-free through the semi join.
+    query = _wrap(f"""
+WITH stmts AS (
+  SELECT /*+ BROADCAST(pq) */ subject_qid, pid, object_value
+  FROM {{statements}}
+  LEFT SEMI JOIN {{persons2}} pq ON subject_qid = pq.qid
+  WHERE pid IN ({pin})
+),
+piv AS (
+  SELECT subject_qid AS qid,
+    {piv_cols}
+  FROM stmts GROUP BY subject_qid
+),
+lab_en AS (SELECT qid AS _lqid, label AS _label FROM {{labels}} WHERE lang = 'en'),
+joined AS (
+  SELECT {hint}
+    p.qid, piv.P21, piv.P19, piv.P20, piv.P569, piv.P570, piv.P18,
+    l0._label AS item_label, l1._label AS gender_label,
+    l2._label AS birth_place_label, l3._label AS death_place_label
+  FROM {{persons}} p
+  LEFT JOIN piv ON piv.qid = p.qid
+  LEFT JOIN lab_en l0 ON p.qid = l0._lqid
+  LEFT JOIN lab_en l1 ON piv.P21 = l1._lqid
+  LEFT JOIN lab_en l2 ON piv.P19 = l2._lqid
+  LEFT JOIN lab_en l3 ON piv.P20 = l3._lqid
+),
+wide AS (
+  SELECT qid,
+    coalesce(item_label, format_string('Unknown (%s)', qid)) AS label,
+    P21 AS gender_qid, gender_label,
+    substring_index(P569, 'T', 1) AS birth_date,
+    substring_index(P570, 'T', 1) AS death_date,
+    P19 AS birth_place_qid, birth_place_label,
+    P20 AS death_place_qid, death_place_label,
+    P18 AS image_url
+  FROM joined
+)
+SELECT {emit} FROM wide""", header, dedupe)
+    return spark.sql(query, statements=statements, persons=person_qids,
+                     persons2=person_qids, labels=labels)

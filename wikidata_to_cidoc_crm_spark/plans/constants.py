@@ -1,26 +1,22 @@
 """Constant triple blocks (ontology headers + alignment axioms).
 
 Mirrors the reference's ``create_graph``/``build_graph`` static emissions:
-authors.py:148-179, works.py:159-231, relations.py:138-166. These are
-O(1)-sized and unioned into each stage's output.
+authors.py:148-179, works.py:159-231. These are O(1)-sized and unioned
+into each stage's output as a VALUES block.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
 
 from ..model import (
     CRM,
     ECRM,
     EFRBROO,
     FRBROO,
-    INTRO,
     LRMOO,
     LRMOO_ONTO,
     OWL,
     RDF_TYPE,
     SAPPHO,
-    const_triples,
 )
 
 OWL_ONTOLOGY = OWL + "Ontology"
@@ -57,16 +53,6 @@ def _equivalence_block(classes, props, ecrm_ns=ECRM, crm_ns=CRM):
         triples.append((ecrm_ns + inverse, OWL_INVERSE, ecrm_ns + direct))
         triples.append((ecrm_ns + inverse, OWL_EQ_PROP, crm_ns + inverse))
     return triples
-
-
-def authors_header(spark: SparkSession) -> DataFrame:
-    onto = SAPPHO + "ontology/authors"
-    triples = [
-        (onto, RDF_TYPE, OWL_ONTOLOGY),
-        (onto, OWL_IMPORTS, ECRM),
-    ]
-    triples += _equivalence_block(AUTHOR_CLASSES, AUTHOR_PROPS)
-    return const_triples(spark, triples)
 
 
 # works.py:160-233 — ontology node, eCRM↔CRM class/property equivalences,
@@ -111,10 +97,6 @@ WORK_LRMOO_PROPS = [
 ]
 
 
-def works_header(spark: SparkSession) -> DataFrame:
-    return const_triples(spark, works_header_triples())
-
-
 def works_header_triples() -> list[tuple]:
     onto = SAPPHO + "ontology/works"
     triples = [
@@ -122,13 +104,7 @@ def works_header_triples() -> list[tuple]:
         (onto, OWL_IMPORTS, ECRM),
         (onto, OWL_IMPORTS, LRMOO_ONTO),
     ]
-    for cls in WORK_ECRM_CLASSES:
-        triples.append((ECRM + cls, OWL_EQ_CLASS, CRM + cls))
-    for direct, inverse in WORK_ECRM_PROPS:
-        triples.append((ECRM + direct, OWL_INVERSE, ECRM + inverse))
-        triples.append((ECRM + direct, OWL_EQ_PROP, CRM + direct))
-        triples.append((ECRM + inverse, OWL_INVERSE, ECRM + direct))
-        triples.append((ECRM + inverse, OWL_EQ_PROP, CRM + inverse))
+    triples += _equivalence_block(WORK_ECRM_CLASSES, WORK_ECRM_PROPS)
     for lrm, frbr in WORK_LRMOO_CLASSES:
         triples.append((LRMOO + lrm, OWL_EQ_CLASS, FRBROO + frbr))
         triples.append((LRMOO + lrm, OWL_EQ_CLASS, EFRBROO + frbr))
@@ -140,15 +116,3 @@ def works_header_triples() -> list[tuple]:
         triples.append((LRMOO + lr_i, OWL_EQ_PROP, FRBROO + fr_i))
         triples.append((LRMOO + lr_i, OWL_EQ_PROP, EFRBROO + fr_i))
     return triples
-
-
-def relations_header(spark: SparkSession) -> DataFrame:
-    """relations.py:154-166 — ontology node importing eCRM/LRMoo/INTRO."""
-    onto = SAPPHO + "ontology/relations"
-    triples = [
-        (onto, RDF_TYPE, OWL_ONTOLOGY),
-        (onto, OWL_IMPORTS, ECRM),
-        (onto, OWL_IMPORTS, LRMOO_ONTO),
-        (onto, OWL_IMPORTS, INTRO),
-    ]
-    return const_triples(spark, triples)

@@ -9,122 +9,68 @@ Behavioral spec: ``/root/reference/src/wiki2crm/merge.py:34-77``.
 * ontology-node rewrite (U5): drop every triple whose subject is typed
   owl:Ontology, then add the merged header.
 
-Scale notes: the label dedup is a single window over subjects filtered to
-label triples only (tiny fraction); the anti-join against ontology subjects
-broadcasts (constant-sized set).
+Scale notes: the dedup exchanges on the full 6-tuple key, which is uniform
+by construction even under hub subjects; only the label fraction
+re-shuffles by subject for the window. A subject-keyed single exchange was
+measured 2.2x slower on a hub-skewed graph (BENCH/SKEW.md). The anti-join
+against ontology subjects broadcasts (constant-sized set).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from ..model import (
-    ECRM,
-    INTRO,
-    LRMOO_ONTO,
-    OWL,
-    RDF_TYPE,
-    RDFS_LABEL,
-    SAPPHO,
-    const_triples,
-    dedupe_triples,
-)
+from ..model import ECRM, INTRO, LRMOO_ONTO, OWL, RDF_TYPE, RDFS_LABEL, SAPPHO
 from ..session import lazy_checkpoint
+from .sql_stages import _const_values_sql
 
 OWL_ONTOLOGY = OWL + "Ontology"
 OWL_IMPORTS = OWL + "imports"
 
 
-def merged_header(spark: SparkSession) -> DataFrame:
+def merge_stage(spark: SparkSession, graphs: list[DataFrame]) -> DataFrame:
+    """Two statements: union → full-key DISTINCT → label-window dedup, a
+    lineage checkpoint, then the ontology-node rewrite over the
+    checkpoint."""
+    union = "\nUNION ALL\n".join(
+        f"SELECT subj, pred, obj, obj_is_iri, lang, dtype FROM {{g{i}}}"
+        for i in range(len(graphs)))
+    # the label order is total over the remaining triple columns — a tie
+    # would make the surviving label partition-dependent (merge.py:41-63)
+    q1 = f"""
+WITH g AS (SELECT DISTINCT * FROM (
+{union}
+)),
+lbl AS (
+  SELECT subj, pred, obj, obj_is_iri, lang, dtype FROM (
+    SELECT *, row_number() OVER (
+      PARTITION BY subj
+      ORDER BY (lang IS NULL) ASC, coalesce(lang, '') ASC, obj ASC,
+               coalesce(dtype, '') ASC, obj_is_iri ASC) AS _rn
+    FROM g WHERE pred = '{RDFS_LABEL}'
+  ) WHERE _rn = 1
+)
+SELECT * FROM g WHERE pred <> '{RDFS_LABEL}'
+UNION ALL
+SELECT * FROM lbl"""
+    ck = spark.sql(q1, **{f"g{i}": df for i, df in enumerate(graphs)}) \
+        .transform(lazy_checkpoint)
+
+    # merge.py:65-77: remove all ontology-node triples, add merged header
     onto = SAPPHO + "ontology/all"
-    return const_triples(spark, [
+    header = _const_values_sql([
         (onto, RDF_TYPE, OWL_ONTOLOGY),
         (onto, OWL_IMPORTS, ECRM),
         (onto, OWL_IMPORTS, LRMOO_ONTO),
         (onto, OWL_IMPORTS, INTRO),
     ])
-
-
-def cleanup_duplicate_labels(g: DataFrame) -> DataFrame:
-    """Keep exactly one rdfs:label per subject (merge.py:41-63)."""
-    labels = g.filter(F.col("pred") == RDFS_LABEL)
-    others = g.filter(F.col("pred") != RDFS_LABEL)
-    # total order over the remaining triple columns — a tie would make the
-    # surviving label partition-dependent
-    w = Window.partitionBy("subj").orderBy(
-        F.col("lang").isNull().asc(),
-        F.coalesce("lang", F.lit("")).asc(),
-        F.col("obj").asc(),
-        F.coalesce("dtype", F.lit("")).asc(),
-        F.col("obj_is_iri").asc(),
-    )
-    kept = (
-        labels.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    return others.unionByName(kept)
-
-
-def cleanup_ontology(spark: SparkSession, g: DataFrame) -> DataFrame:
-    """Remove all ontology-node triples, add merged header (merge.py:65-77)."""
-    onto_subjects = (
-        g.filter((F.col("pred") == RDF_TYPE) & (F.col("obj") == OWL_ONTOLOGY))
-        .select("subj")
-        .distinct()
-    )
-    kept = g.join(F.broadcast(onto_subjects), "subj", "left_anti")
-    return kept.unionByName(merged_header(spark))
-
-
-def merge_stage(spark: SparkSession, graphs: list[DataFrame],
-                strategy: str = "full-key",
-                checkpoint: bool = True) -> DataFrame:
-    """Deduplicating union. Two exchange strategies (identical output):
-
-    * ``full-key`` (default): dedup shuffles on the full 6-tuple key
-      (uniform by construction, skew-immune), then ONLY the label fraction
-      re-shuffles by subj for the window — a second, but small, exchange.
-    * ``subj-exchange``: ONE full-graph exchange hash-partitioned by subj
-      serves both heavy steps — it satisfies the dropDuplicates clustering
-      (subj is a subset of the triple key) AND the label window's
-      partitionBy(subj), so Catalyst reuses the repartition instead of
-      shuffling the full graph twice. Skew exposure: ALL distinct triples
-      of one hub subject land on one reducer.
-
-    Measured (tools/skew_probe.py, 20M uniform + 4M-triple hub subject,
-    local[16], best-of-2): uniform 4.79s vs 4.98s (subj-exchange ~4%
-    ahead, noise-level); skewed 10.54s vs 4.71s (full-key 2.2x faster —
-    the hub pins subj-exchange's single reducer). Measured WITH AQE +
-    skew-join enabled — AQE cannot split the hub partition because the
-    window/dedup require key co-location (BENCH/SKEW.md). Hub subjects are
-    guaranteed in web-scale graphs, so full-key is the default;
-    ``subj-exchange`` is test-only (plan-equality gates + skew probe).
-    """
-    import os as _os
-
-    if (strategy == "full-key" and checkpoint
-            and _os.environ.get("SPARK_GRAFT_SQL_STAGES", "1") != "0"):
-        from .sql_stages import merge_stage_sql
-
-        return merge_stage_sql(spark, graphs)
-    g = graphs[0]
-    for other in graphs[1:]:
-        g = g.unionByName(other)
-    if strategy == "subj-exchange":
-        # The lineage-truncating checkpoint comes AFTER the window — a
-        # checkpoint in between would erase the partitioning info and force
-        # a second full shuffle (and make the ontology anti-join's
-        # broadcast side recompute the window subtree).
-        g = g.repartition(F.col("subj"))
-        g = dedupe_triples(g)
-        g = cleanup_duplicate_labels(g)
-    elif strategy == "full-key":
-        g = dedupe_triples(g)  # partial agg map-side, full-key exchange
-        g = cleanup_duplicate_labels(g)
-    else:
-        raise ValueError(f"unknown merge strategy: {strategy}")
-    if checkpoint:  # checkpoint=False keeps the full lineage visible for
-        g = g.transform(lazy_checkpoint)  # plan assertions (tests)
-    return cleanup_ontology(spark, g)
+    q2 = f"""
+SELECT /*+ BROADCAST(o) */ k.subj, k.pred, k.obj, k.obj_is_iri, k.lang, k.dtype
+FROM {{ck}} k
+LEFT ANTI JOIN (
+  SELECT DISTINCT subj FROM {{ck2}}
+  WHERE pred = '{RDF_TYPE}' AND obj = '{OWL_ONTOLOGY}'
+) o ON k.subj = o.subj
+UNION ALL
+{header}"""
+    return spark.sql(q2, ck=ck, ck2=ck)

@@ -2,22 +2,23 @@
 
 Behavioral spec: ``/root/reference/src/wiki2crm/relations.py:299-877`` —
 nine sequential processors (int31, plots, citations, topics, motifs,
-persons, places, characters, work references). Rebuilt as parallel
-DataFrame pipelines over a shared (work, feature) edge table:
+persons, places, characters, work references). Rebuilt as a few
+checkpointed ``spark.sql`` blocks over a shared (work, feature) edge table,
+then ONE emission statement over those blocks:
 
 * property subsumption (``wdt:P1647*``) → broadcast join against
   ``wd_property_closure`` (J4),
 * type checks (``wdt:P31/wdt:P279*``) → semi-join against
   ``wd_subclass_closure`` (J5),
-* ``combinations(works, 2)`` → self-join pair generation (J8,
-  operators.pairs.pair_join) — skew-prone on hub features; AQE skew-join
-  plus optional salting handle it,
-* rdflib idempotency guards → generate-then-dropDuplicates (U4), with two
+* ``combinations(works, 2)`` → self-join pair generation (J8, the SQL
+  spelling of operators.pairs.pair_join) — skew-prone on hub features, so
+  features shared by more than 256 works take a salted join,
+* rdflib idempotency guards → generate-then-DISTINCT (U4), with two
   order-dependent exceptions reproduced explicitly:
   - **first-pair-wins actualization links** (add_actualization's early
     return, relations.py:252-253): an act/expression R24-links only to the
-    relation of the first sorted pair its work appears in
-    (operators.pairs.first_partner);
+    relation of the first sorted pair its work appears in (a min window,
+    the SQL spelling of operators.pairs.first_partner);
   - **interpretation-tid collisions** (add_interpretation keys interps by
     the last URI segment, relations.py:206-233): when a work_ref act's tid
     equals its own relation's tid (tgt < src) the relation's interpretation
@@ -37,7 +38,9 @@ broadcast; the final dedup shuffles on the full triple key.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.uris import mint, wd_entity_uri
@@ -45,6 +48,7 @@ from ..model import (
     ECRM,
     INTRO,
     LRMOO,
+    LRMOO_ONTO,
     OWL_SAMEAS,
     PROV_DERIVED,
     RDF_TYPE,
@@ -52,12 +56,9 @@ from ..model import (
     SAPPHO,
     WD,
     Rule,
-    dedupe_triples,
-    emit_triples,
 )
-from ..operators.pairs import first_partner, pair_join
-from .constants import relations_header
 from ..session import lazy_checkpoint
+from .sql_stages import _const_values_sql, _emit_inline_sql, _wrap
 
 ID_TYPE = SAPPHO + "id_type/wikidata"
 
@@ -81,33 +82,9 @@ FAMILIES = [
 ]
 
 
-def _label_lookup(labels: DataFrame) -> DataFrame:
-    """(qid, lbl): label-service semantics en → de → QID (relations.py:122-135)."""
-    en = labels.filter(F.col("lang") == "en").select("qid", F.col("label").alias("_en"))
-    de = labels.filter(F.col("lang") == "de").select("qid", F.col("label").alias("_de"))
-    return en.join(de, "qid", "full_outer").select(
-        "qid", F.coalesce("_en", "_de").alias("_lbl")
-    )
-
-
 # above this many label rows the dimension no longer broadcasts safely
 # (~90M Wikidata labels ≈ several GB) — fall back to a shuffle join
 LABEL_BROADCAST_MAX = 20_000_000
-
-
-def _attach_label(df: DataFrame, lab: DataFrame, key: str, out: str,
-                  broadcast_hint: bool = True) -> DataFrame:
-    """Join ``lab`` (canonical ``(__lk, __lv)`` build side) onto ``df``.
-
-    All ~15 call sites share the SAME build-side subtree, so Spark builds
-    the broadcast hash relation once and ReusedExchange serves the rest —
-    per-site aliasing would defeat the exchange-reuse rule."""
-    l = F.broadcast(lab) if broadcast_hint else lab
-    return (
-        df.join(l, F.col(key) == F.col("__lk"), "left")
-        .withColumn(out, F.coalesce("__lv", key))
-        .drop("__lk", "__lv")
-    )
 
 
 def _identifier_rules(entity, qid_col: str) -> list[Rule]:
@@ -125,9 +102,7 @@ def _identifier_rules(entity, qid_col: str) -> list[Rule]:
     ]
 
 
-# --- shared emission rule tables (used by BOTH the classic DataFrame build
-# below and the SQL-compiled build in plans/sql_stages.py — single source of
-# truth so the two paths cannot drift) ---
+# --- emission rule tables, one per source block of relations_stage ---
 
 def rel_rules() -> list[Rule]:
     rel_label = F.format_string(
@@ -334,407 +309,427 @@ def relations_stage(
     dedupe: bool = True,
     broadcast_labels: bool | None = None,
 ) -> DataFrame:
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_SQL_STAGES", "1") != "0":
-        from .sql_stages import relations_stage_sql
-
-        return relations_stage_sql(
-            spark, work_qids, statements, labels, subclass_closure,
-            property_closure, include_header=include_header, dedupe=dedupe,
-            broadcast_labels=broadcast_labels)
-    # Driver-side plan construction is this stage's dominant fixed cost
-    # (~10 checkpoint plannings + py4j traffic), so the independent
-    # checkpointed subplans are built from a small thread pool — JVM-side
-    # Catalyst planning of distinct subtrees runs in parallel, and the
-    # resulting PLANS are identical to the serial build (threading only
-    # reorders construction, never content).
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=4, thread_name_prefix="rel-plan")
-    # try/finally: reap worker threads if any plan build raises —
-    # otherwise in-flight builds keep running (and mutating the shared
-    # AQE toggle) after the stage has aborted, and the pool leaks
-    try:
-
-        # canonical build side for every label attach (see _attach_label) —
-        # the checkpoint pins the subtree so exchange reuse is structural
-        f_lab = pool.submit(lambda: _label_lookup(labels).select(
-            F.col("qid").alias("__lk"), F.col("_lbl").alias("__lv")
-        ).transform(lazy_checkpoint))
-        # gate the forced label broadcast on dimension size (shuffle-join
-        # fallback for fact-sized label tables); callers that already know the
-        # dimension size pass the flag to avoid a per-stage recount
-        lab_bcast = (labels.count() <= LABEL_BROADCAST_MAX
-                     if broadcast_labels is None else broadcast_labels)
-
-        def _attach(df, l, k, o):
-            return _attach_label(df, l, k, o, broadcast_hint=lab_bcast)
-
-        W = work_qids.select("qid").distinct()
-        # canonical membership build side: every "∈ W" semi-join shares this
-        # exact subtree so the broadcast hash relation is built once and
-        # ReusedExchange serves the ~8 other sites (per-site renames would
-        # force a fresh single-threaded build each time)
-        Wb = W.select(F.col("qid").alias("__wq")).transform(lazy_checkpoint)
-
-        def in_W(df: DataFrame, key: str) -> DataFrame:
-            return df.join(F.broadcast(Wb), F.col(key) == F.col("__wq"), "left_semi")
-
-        def pids_of(bases: list[str]) -> DataFrame:
-            return property_closure.filter(F.col("base_pid").isin(bases)).select("pid").distinct()
-
-        def edges(bases: list[str]) -> DataFrame:
-            """(work, tgt) claims whose pid subsumes one of ``bases``, work ∈ W."""
-            return (
-                statements.join(F.broadcast(pids_of(bases)), "pid")
-                .filter(F.col("object_is_entity"))
-                .select(F.col("subject_qid").alias("work"), F.col("object_value").alias("tgt"))
-                .transform(lambda d: in_W(d, "work"))
-                .distinct()
-            )
-
-        def typed(ancestors: tuple[str, ...]) -> DataFrame:
-            """entities with P31/P279* reaching one of ``ancestors`` (J5)."""
-            p31 = statements.filter(F.col("pid") == "P31").select(
-                F.col("subject_qid").alias("tgt"), F.col("object_value").alias("cls"))
-            anc = subclass_closure.filter(F.col("ancestor").isin(list(ancestors))).select(
-                F.col("qid").alias("cls"))
-            return p31.join(F.broadcast(anc), "cls", "left_semi").select("tgt").distinct()
-
-        # --- ONE tagged edge table for all six families (single statements
-        # scan routed through a broadcast (pid → family) dim; type requirements
-        # via a broadcast (ancestor → family) dim). This collapses the six
-        # per-family pipelines into one qualify + one pair join + one
-        # first-partner window — far fewer jobs, and at scale one shuffle
-        # instead of six. ---
-        fam_bases = {f[0]: f[1] for f in FAMILIES}
-        fam_bases["character_typed"] = ["P180", "P921"]  # relations.py:700-707
-        pid_fam = None
-        for fam, bases in fam_bases.items():
-            part = pids_of(bases).withColumn("family", F.lit(fam))
-            pid_fam = part if pid_fam is None else pid_fam.unionByName(part)
-        typed_req = {
-            "plot": ["Q42109240"], "topic": ["Q26256810"], "person_ref": ["Q5"],
-            "place_ref": ["Q2221906"], "character_typed": ["Q3658341", "Q15632617"],
-        }
-        anc_fam = spark.createDataFrame(
-            [(a, f) for f, ancs in typed_req.items() for a in ancs],
-            "ancestor string, family string")
-        p31 = statements.filter(F.col("pid") == "P31").select(
-            F.col("subject_qid").alias("tgt"), F.col("object_value").alias("cls"))
-        typed_pairs = (
-            p31.join(F.broadcast(subclass_closure.withColumnRenamed("qid", "cls")), "cls")
-            .join(F.broadcast(anc_fam), "ancestor")
-            .select("tgt", "family")
-            .distinct()
-        )
-        def _build_fw_chain():
-            """fw_all → qfw_all → all_pairs: the stage's longest dependent
-            checkpoint chain, built on one thread."""
-            fw_all0 = (
-                statements.filter(F.col("object_is_entity"))
-                .join(F.broadcast(pid_fam), "pid")
-                .select("family", F.col("subject_qid").alias("work"),
-                        F.col("object_value").alias("tgt"))
-                .transform(lambda d: in_W(d, "work"))
-            )
-            fw_typed = fw_all0.filter(F.col("family").isin(list(typed_req))).join(
-                typed_pairs, ["tgt", "family"], "left_semi")
-            fw_untyped = fw_all0.filter(F.col("family").isin(["motif", "character"]))
-            fw_all = (
-                fw_typed.unionByName(fw_untyped)
-                .withColumn("family",
-                            F.when(F.col("family") == "character_typed", "character")
-                            .otherwise(F.col("family")))
-                .distinct()
-                .transform(lazy_checkpoint)
-            )
-            # qualifying features: shared by ≥2 works (HAVING COUNT(DISTINCT
-            # ?wrk)>1, relations.py:371-372 / len(works)<2 guards)
-            q = (
-                fw_all.groupBy("family", "tgt").agg(F.countDistinct("work").alias("n"))
-                .filter(F.col("n") >= 2).select("family", "tgt")
-            )
-            qfw = fw_all.join(q, ["family", "tgt"], "left_semi").transform(lazy_checkpoint)
-            # --- pairs for all families at once (J8) ---
-            # hub features (> heavy_threshold works) go through the salted join
-            # so one popular topic cannot pin the whole stage on a single
-            # reducer: a key with n members generates C(n,2) pairs in ONE task
-            # otherwise (measured 3.4x stage speedup at world_scale=400 on
-            # local[32]). threshold 256 caps the unsalted per-key burst at ~32k.
-            pairs = pair_join(qfw, key=["family", "tgt"], work="work",
-                              salt_partitions=32, heavy_threshold=256) \
-                .transform(lazy_checkpoint)
-            return qfw, pairs
-
-        def _build_workref():
-            # work references (relations.py:616-669): tgt ∈ W too; no ≥2 gate
-            return (
-                edges(["P921"])
-                .filter(F.col("tgt").startswith("Q"))
-                .transform(lambda d: in_W(d, "tgt"))
-                .transform(lazy_checkpoint)
-            )
-
-        def _build_cite_kept():
-            # citations (relations.py:765-818): (tgt=subject) cites (src=object);
-            # both-directions dedup keeps lexicographically smaller (src, tgt)
-            cite_directed = (
-                edges(["P2860", "P6166"])
-                .transform(lambda d: in_W(d, "tgt"))
-                .select(F.col("tgt").alias("src"), F.col("work").alias("tgt"))
-                .filter(F.col("src") != F.col("tgt"))
-            )
-            return (
-                cite_directed.groupBy(
-                    F.least("src", "tgt").alias("_a"), F.greatest("src", "tgt").alias("_b"))
-                .agg(F.min(F.struct("src", "tgt")).alias("_p"))
-                .select(F.col("_p.src").alias("src"), F.col("_p.tgt").alias("tgt"))
-                .transform(lazy_checkpoint)
-            )
-
-        f_fw = pool.submit(_build_fw_chain)
-        f_workref = pool.submit(_build_workref)
-        f_cite = pool.submit(_build_cite_kept)
-
-        # int31 direct links (relations.py:299-354): forward P4969; reversed
-        # P144/P5059/P941 (SURVEY §4.4.3)
-        int31_fwd = in_W(edges(["P4969"]), "tgt").select(F.col("work").alias("wa"), F.col("tgt").alias("wb"))
-        int31_bwd = in_W(edges(["P144", "P5059", "P941"]), "tgt").select(F.col("tgt").alias("wa"), F.col("work").alias("wb"))
-        int31_pairs = int31_fwd.unionByName(int31_bwd).filter(F.col("wa") != F.col("wb"))
-
-        qfw_all, all_pairs = f_fw.result()
-        workref = f_workref.result()
-        cite_kept = f_cite.result()
-        lab = f_lab.result()
-        fam_acts = first_partner(qfw_all, key=["family", "tgt"], work="work")
-
-        # workref pairs/acts: rel per (src, tgt); act key {tgt}_{src}
-        workref_pairs = workref.select(
-            F.col("tgt"), F.col("work").alias("src")).filter(F.col("src") != F.col("tgt"))
-
-        # --- relation nodes: every pair from every source (canonical, distinct) ---
-        rel_members = (
-            all_pairs.select("w1", "w2")
-            .unionByName(int31_pairs.select(F.col("wa").alias("w1"), F.col("wb").alias("w2")))
-            .unionByName(workref_pairs.select(F.col("src").alias("w1"), F.col("tgt").alias("w2")))
-            .unionByName(cite_kept.select(F.col("src").alias("w1"), F.col("tgt").alias("w2")))
-        )
-        def _build_rels():
-            r = (
-                rel_members.select(
-                    F.least("w1", "w2").alias("w1"), F.greatest("w1", "w2").alias("w2"))
-                .distinct()
-            )
-            r = _attach(r, lab, "w1", "l1")
-            r = _attach(r, lab, "w2", "l2")
-            # casefold-sorted label pair (relations.py:284)
-            return r.withColumn(
-                "la", F.when(F.lower("l1") <= F.lower("l2"), F.col("l1")).otherwise(F.col("l2"))
-            ).withColumn(
-                "lb", F.when(F.lower("l1") <= F.lower("l2"), F.col("l2")).otherwise(F.col("l1"))
-            ).withColumn("rel", F.concat(F.lit(SAPPHO + "relation/"), "w1", F.lit("_"), "w2")
-            ).withColumn("tid", F.concat("w1", F.lit("_"), "w2")).transform(lazy_checkpoint)
-
-        f_rels = pool.submit(_build_rels)
-
-        # --- acts (family + workref); per-family label/priority as expressions ---
-        def _build_acts():
-            fa = _attach(fam_acts, lab, "tgt", "tlbl")
-            fa = _attach(fa, lab, "work", "wlbl")
-            prio_map = F.create_map(*[x for f in FAMILIES for x in (F.lit(f[0]), F.lit(f[8]))])
-            is_ref_fam = F.col("family").isin(["person_ref", "place_ref"])
-            a = fa.select(
-                "tgt", "work", "rel_w1", "rel_w2", "tlbl", "wlbl", "family",
-                F.col("family").alias("typ"),
-                F.when(is_ref_fam, F.format_string("Reference to %s in %s", "tlbl", "wlbl"))
-                .otherwise(F.format_string("%s in %s", "tlbl", "wlbl")).alias("alabel"),
-                prio_map[F.col("family")].alias("prio"),
-            )
-            workref_acts = _attach(workref_pairs, lab, "tgt", "tlbl")
-            workref_acts = _attach(workref_acts, lab, "src", "wlbl")
-            workref_acts = workref_acts.select(
-                "tgt", F.col("src").alias("work"),
-                F.least("src", "tgt").alias("rel_w1"), F.greatest("src", "tgt").alias("rel_w2"),
-                "tlbl", "wlbl",
-                F.lit("work_ref").alias("family"), F.lit("work_ref").alias("typ"),
-                F.format_string("Reference to %s in %s", "tlbl", "wlbl").alias("alabel"),
-                F.lit(9).alias("prio"),
-            )
-            a = a.unionByName(workref_acts)
-            return a.withColumn(
-                "act", F.concat(F.lit(SAPPHO + "actualization/"), "typ", F.lit("/"),
-                                "tgt", F.lit("_"), "work")
-            ).withColumn(
-                "feat_uri",
-                F.concat(F.lit(SAPPHO + "feature/"), "typ", F.lit("/"), "tgt"),
-            ).withColumn(
-                "rel", F.concat(F.lit(SAPPHO + "relation/"), "rel_w1", F.lit("_"), "rel_w2")
-            ).withColumn("expr", mint("expression", "work")).transform(lazy_checkpoint)
-
-        f_acts = pool.submit(_build_acts)
-
-        rels = f_rels.result()
-
-        rel_triples = emit_triples(rels, rel_rules())
-
-        # --- interpretations ---
-        # creation candidates carry a priority; per tid the lowest priority wins
-        # (rdflib first-writer-wins guard, relations.py:206-233)
-        rel_interp_src = rels.select(
-            "tid",
-            F.format_string("Interpretation of intertextual relation between %s and %s",
-                            "la", "lb").alias("ilabel"),
-            F.array("w1", "w2").alias("derived"),
-            F.col("rel").alias("target"),
-            F.lit(0).alias("prio"),
-        )
-
-        acts = f_acts.result()
-    finally:
-        pool.shutdown(wait=True, cancel_futures=True)
-
-    act_triples = emit_triples(acts, act_rules())
-
-    # act interpretations (add_interpretation via add_actualization,
-    # relations.py:260-273)
-    act_interp_src = acts.select(
-        F.concat("tgt", F.lit("_"), "work").alias("tid"),
-        F.format_string(
-            "Interpretation of %s",
-            F.regexp_replace("alabel", "^Reference to ", "")).alias("ilabel"),
-        F.array("work").alias("derived"),
-        F.col("act").alias("target"),
-        "prio",
-    )
-
-    interp_all = rel_interp_src.unionByName(act_interp_src)
-    # ilabel tiebreak keeps the winner deterministic even if two sources
-    # ever emit the same (tid, prio, target) with different labels
-    wnd = Window.partitionBy("tid").orderBy("prio", "target", "ilabel")
-    interp_all = interp_all.withColumn("rank", F.row_number().over(wnd)).transform(lazy_checkpoint)
-    creators = interp_all.filter(F.col("rank") == 1)
-
-    interp_creation = emit_triples(creators, interp_creation_rules())
-    interp_derived = emit_triples(
-        creators.select("tid", F.explode("derived").alias("dq")),
-        interp_derived_rules(),
-    )
-    interp_links = emit_triples(interp_all, interp_links_rules())
-
-    # --- R22 similarity links: per (feature, pair) for ALL pairs
-    # (relations.py:396-398) ---
-    r22_fam = all_pairs.select(
-        "family", "tgt", "w1", "w2",
-        F.concat(F.lit(SAPPHO + "feature/"), "family", F.lit("/"), "tgt").alias("feat_uri"),
-    )
-    r22_workref = workref_pairs.select(
-        F.lit("work_ref").alias("family"), "tgt",
-        F.least("src", "tgt").alias("w1"), F.greatest("src", "tgt").alias("w2"),
-        F.concat(F.lit(SAPPHO + "feature/work_ref/"), "tgt").alias("feat_uri"),
-    )
-    r22 = r22_fam.unionByName(r22_workref).withColumn(
-        "rel", F.concat(F.lit(SAPPHO + "relation/"), "w1", F.lit("_"), "w2"))
-    r22_triples = emit_triples(r22, r22_rules())
-
-    # --- P67 reference links: per act (relations.py:552-558,605-611,
-    # 754-758, 667-668) ---
-    p67_map = {"person_ref": "person", "place_ref": "place"}
-    p67 = acts.filter(F.col("family").isin(list(p67_map)))
-    p67 = p67.withColumn(
-        "p67_target",
-        F.when(F.col("family") == "person_ref", mint("person", "tgt"))
-        .otherwise(mint("place", "tgt")),
-    )
-    # character acts link to person/{char} when the char is typed Q5
-    char_persons = typed(("Q5",)).withColumnRenamed("tgt", "cq")
-    char_p67 = acts.filter(F.col("family") == "character").join(
-        char_persons, F.col("tgt") == F.col("cq"), "left_semi"
-    ).withColumn("p67_target", mint("person", "tgt"))
-    # work_ref acts link to expression/{tgt}
-    workref_p67 = acts.filter(F.col("family") == "work_ref").withColumn(
-        "p67_target", mint("expression", "tgt"))
-    p67_all = p67.unionByName(char_p67).unionByName(workref_p67)
-    p67_triples = emit_triples(p67_all, p67_rules())
-
-    # --- feature nodes: one emission over the tagged (family, tgt) set ---
-    feat_triple_parts = []
-    ftgts = qfw_all.select("family", "tgt").distinct()
-    ftgts = _attach(ftgts, lab, "tgt", "tlbl").withColumn(
-        "feat_uri", F.concat(F.lit(SAPPHO + "feature/"), "family", F.lit("/"), "tgt"))
-    feat_triple_parts.append(emit_triples(ftgts, feat_node_rules()))
-
-    # person/place entity nodes for the *_ref families (relations.py:528-537,
-    # 582-591) + person nodes & person_ref features for person-characters
-    # (ensure_person_reference, relations.py:670-684)
-    person_tgts = qfw_all.filter(F.col("family") == "person_ref").select("tgt").distinct()
-    char_person_tgts = qfw_all.filter(F.col("family") == "character") \
-        .select("tgt").distinct().join(
-        char_persons, F.col("tgt") == F.col("cq"), "left_semi")
-    person_nodes = person_tgts.unionByName(char_person_tgts).distinct()
-    person_nodes = _attach(person_nodes, lab, "tgt", "tlbl")
-    feat_triple_parts.append(emit_triples(person_nodes, person_node_rules()))
-    # person_ref feature node also exists for person-characters
-    charp_feats = _attach(char_person_tgts, lab, "tgt", "tlbl")
-    feat_triple_parts.append(emit_triples(charp_feats, charp_feat_rules()))
-
-    place_tgts = _attach(
-        qfw_all.filter(F.col("family") == "place_ref").select("tgt").distinct(),
-        lab, "tgt", "tlbl")
-    feat_triple_parts.append(emit_triples(place_tgts, place_node_rules()))
-
-    # work_ref feature nodes — every target, no ≥2 gate (relations.py:641-647)
-    workref_tgts = _attach(workref.select("tgt").distinct(), lab, "tgt", "tlbl")
-    feat_triple_parts.append(emit_triples(workref_tgts, workref_feat_rules()))
-
-    # --- expressions (ensure_expression, relations.py:182-188) ---
-    expr_works = (
-        all_pairs.select(F.col("w1").alias("q"))
-        .unionByName(all_pairs.select(F.col("w2").alias("q")))
-        .unionByName(int31_pairs.select(F.col("wa").alias("q")))
-        .unionByName(int31_pairs.select(F.col("wb").alias("q")))
-        .unionByName(cite_kept.select(F.col("src").alias("q")))
-        .unionByName(cite_kept.select(F.col("tgt").alias("q")))
-        .unionByName(workref.select(F.col("tgt").alias("q")))
-        .unionByName(workref_pairs.select(F.col("src").alias("q")))
-        .distinct()
-    )
-    expr_works = _attach(expr_works, lab, "q", "qlbl")
-    expr_triples = emit_triples(expr_works, expr_rules())
-
-    # --- citation text passages (relations.py:795-816) ---
-    tps = _attach(cite_kept, lab, "src", "slbl")
-    tps = _attach(tps, lab, "tgt", "tlbl")
-    tps = tps.withColumn(
-        "rel",
-        F.concat(F.lit(SAPPHO + "relation/"), F.least("src", "tgt"),
-                 F.lit("_"), F.greatest("src", "tgt")))
-    tp_triples = emit_triples(tps, tp_rules())
-
-    # --- alignment block (relations.py:879-902) ---
-    from ..model import const_triples
     from ..oracle_relations import relations_alignment_triples
 
-    align = const_triples(
-        spark,
-        [(s, p, o, is_iri, lang, dtype)
-         for (s, p, o, lang, dtype, is_iri) in sorted(
-             relations_alignment_triples(),
-             key=lambda t: tuple("" if v is None else str(v) for v in t))],
-    )
+    lab_bcast = (labels.count() <= LABEL_BROADCAST_MAX
+                 if broadcast_labels is None else broadcast_labels)
 
-    out = rel_triples
-    for part in ([act_triples, interp_creation, interp_derived, interp_links,
-                  r22_triples, p67_triples, expr_triples, tp_triples, align]
-                 + feat_triple_parts):
-        out = out.unionByName(part)
+    def lab_hint(*aliases: str) -> str:
+        if not lab_bcast:
+            return ""
+        return "/*+ " + ", ".join(f"BROADCAST({a})" for a in aliases) + " */ "
+
+    # --- checkpointed building blocks (downstream plans stay shallow and
+    # each block materializes exactly once). The spark.sql analyses are
+    # cheap, but each lazy checkpoint still pays a JVM physical planning —
+    # the independent blocks build on a small thread pool so those
+    # plannings overlap (JVM-side Catalyst planning of distinct queries is
+    # thread-safe). ---
+    pool = ThreadPoolExecutor(max_workers=4, thread_name_prefix="relsql-plan")
+
+    # label service en→de (relations.py:122-135); canonical (__lk, __lv)
+    f_lab = pool.submit(lambda: spark.sql("""
+SELECT coalesce(e.qid, d.qid) AS __lk, coalesce(e._en, d._de) AS __lv
+FROM (SELECT qid, label AS _en FROM {labels} WHERE lang = 'en') e
+FULL OUTER JOIN (SELECT qid, label AS _de FROM {labels} WHERE lang = 'de') d
+  ON e.qid = d.qid""", labels=labels).transform(lazy_checkpoint))
+
+    # canonical membership build side (in_W)
+    wb = spark.sql("SELECT DISTINCT qid FROM {w}", w=work_qids) \
+        .transform(lazy_checkpoint)
+
+    fam_bases = {f[0]: f[1] for f in FAMILIES}
+    fam_bases["character_typed"] = ["P180", "P921"]  # relations.py:700-707
+    fam_base_rows = ",".join(
+        f"('{fam}','{b}')" for fam, bases in fam_bases.items() for b in bases)
+    typed_req = {
+        "plot": ["Q42109240"], "topic": ["Q26256810"], "person_ref": ["Q5"],
+        "place_ref": ["Q2221906"],
+        "character_typed": ["Q3658341", "Q15632617"],
+    }
+    anc_fam_rows = ",".join(
+        f"('{a}','{fam}')" for fam, ancs in typed_req.items() for a in ancs)
+    typed_fams = ",".join(f"'{fam}'" for fam in typed_req)
+
+    def _build_fw_chain():
+        # ONE tagged edge table for all six families (single statements scan)
+        fw_all = spark.sql(f"""
+WITH fam_base AS (SELECT * FROM (VALUES {fam_base_rows}) AS fb(family, base)),
+pid_fam AS (
+  SELECT DISTINCT pc.pid, fb.family
+  FROM {{pc}} pc JOIN fam_base fb ON pc.base_pid = fb.base
+),
+anc_fam AS (SELECT * FROM (VALUES {anc_fam_rows}) AS af(ancestor, family)),
+typed_pairs AS (
+  SELECT /*+ BROADCAST(sc), BROADCAST(af) */ DISTINCT
+         st.subject_qid AS tgt, af.family
+  FROM {{statements}} st
+  JOIN {{sc}} sc ON sc.qid = st.object_value
+  JOIN anc_fam af ON af.ancestor = sc.ancestor
+  WHERE st.pid = 'P31'
+),
+fw_all0 AS (
+  SELECT /*+ BROADCAST(pf), BROADCAST(wb) */
+         pf.family, st.subject_qid AS work, st.object_value AS tgt
+  FROM {{statements}} st
+  JOIN pid_fam pf ON pf.pid = st.pid
+  LEFT SEMI JOIN {{wb}} wb ON st.subject_qid = wb.qid
+  WHERE st.object_is_entity
+),
+fw_typed AS (
+  SELECT f.* FROM fw_all0 f
+  LEFT SEMI JOIN typed_pairs tp ON f.tgt = tp.tgt AND f.family = tp.family
+  WHERE f.family IN ({typed_fams})
+),
+fw_untyped AS (
+  SELECT * FROM fw_all0 WHERE family IN ('motif', 'character')
+)
+SELECT DISTINCT
+  CASE WHEN family = 'character_typed' THEN 'character' ELSE family END AS family,
+  work, tgt
+FROM (SELECT * FROM fw_typed UNION ALL SELECT * FROM fw_untyped)""",
+                          pc=property_closure, statements=statements,
+                          sc=subclass_closure, wb=wb).transform(lazy_checkpoint)
+
+        # qualifying features: shared by ≥2 works (relations.py:371-372)
+        qfw = spark.sql("""
+SELECT f.* FROM {fw} f
+LEFT SEMI JOIN (
+  SELECT family, tgt FROM {fw} GROUP BY family, tgt
+  HAVING count(DISTINCT work) >= 2
+) q ON f.family = q.family AND f.tgt = q.tgt""", fw=fw_all) \
+            .transform(lazy_checkpoint)
+
+        # pairs for all families at once (the salted self-join of
+        # operators.pairs.pair_join: salt_partitions=32, heavy_threshold=256)
+        pairs = spark.sql("""
+WITH fw AS (SELECT DISTINCT family, tgt, work AS _w FROM {qfw}),
+counts AS (SELECT family, tgt, count(*) AS _n FROM fw GROUP BY family, tgt),
+heavy_keys AS (SELECT family, tgt FROM counts WHERE _n > 256),
+heavy AS (SELECT /*+ BROADCAST(h) */ f.* FROM fw f
+          LEFT SEMI JOIN heavy_keys h ON f.family = h.family AND f.tgt = h.tgt),
+light AS (SELECT /*+ BROADCAST(h) */ f.* FROM fw f
+          LEFT ANTI JOIN heavy_keys h ON f.family = h.family AND f.tgt = h.tgt),
+light_pairs AS (
+  SELECT a.family, a.tgt, a._w AS w1, b._w AS w2
+  FROM light a JOIN light b ON a.family = b.family AND a.tgt = b.tgt
+  WHERE a._w < b._w
+),
+ha AS (SELECT family, tgt, _w AS w1,
+              CAST(pmod(xxhash64(_w), 32) AS INT) AS _salt FROM heavy),
+hb AS (SELECT family, tgt, _w AS w2, explode(sequence(0, 31)) AS _salt FROM heavy),
+heavy_pairs AS (
+  SELECT a.family, a.tgt, a.w1, b.w2
+  FROM ha a JOIN hb b
+    ON a.family = b.family AND a.tgt = b.tgt AND a._salt = b._salt
+  WHERE a.w1 < b.w2
+)
+SELECT family, tgt, w1, w2 FROM light_pairs
+UNION ALL
+SELECT family, tgt, w1, w2 FROM heavy_pairs""", qfw=qfw) \
+            .transform(lazy_checkpoint)
+        return qfw, pairs
+
+    f_fw = pool.submit(_build_fw_chain)
+
+    def edges_sql(bases: list[str]) -> str:
+        bl = ",".join(f"'{b}'" for b in bases)
+        return f"""
+  SELECT /*+ BROADCAST(p), BROADCAST(wb) */ DISTINCT
+         st.subject_qid AS work, st.object_value AS tgt
+  FROM {{statements}} st
+  JOIN (SELECT DISTINCT pid FROM {{pc}} WHERE base_pid IN ({bl})) p
+    ON st.pid = p.pid
+  LEFT SEMI JOIN {{wb}} wb ON st.subject_qid = wb.qid
+  WHERE st.object_is_entity"""
+
+    kw = dict(statements=statements, pc=property_closure, wb=wb)
+
+    # work references (relations.py:616-669): tgt ∈ W too; no ≥2 gate
+    f_workref = pool.submit(lambda: spark.sql(f"""
+WITH ed AS ({edges_sql(["P921"])})
+SELECT /*+ BROADCAST(wb2) */ e.work, e.tgt FROM ed e
+LEFT SEMI JOIN {{wb2}} wb2 ON e.tgt = wb2.qid
+WHERE e.tgt LIKE 'Q%'""", wb2=wb, **kw).transform(lazy_checkpoint))
+
+    # citations (relations.py:765-818): keep lexicographically smaller
+    # directed (src, tgt) per unordered pair
+    f_cite = pool.submit(lambda: spark.sql(f"""
+WITH ed AS ({edges_sql(["P2860", "P6166"])}),
+cd AS (
+  SELECT /*+ BROADCAST(wb2) */ e.tgt AS src, e.work AS tgt FROM ed e
+  LEFT SEMI JOIN {{wb2}} wb2 ON e.tgt = wb2.qid
+  WHERE e.tgt <> e.work
+)
+SELECT _p.src AS src, _p.tgt AS tgt FROM (
+  SELECT min(named_struct('src', src, 'tgt', tgt)) AS _p
+  FROM cd GROUP BY least(src, tgt), greatest(src, tgt)
+)""", wb2=wb, **kw).transform(lazy_checkpoint))
+
+    # int31 direct links (relations.py:299-354): forward P4969; reversed
+    # P144/P5059/P941
+    f_int31 = pool.submit(lambda: spark.sql(f"""
+WITH fwd AS ({edges_sql(["P4969"])}),
+bwd AS ({edges_sql(["P144", "P5059", "P941"])})
+SELECT wa, wb FROM (
+  SELECT /*+ BROADCAST(wbf) */ f.work AS wa, f.tgt AS wb FROM fwd f
+  LEFT SEMI JOIN {{wbf}} wbf ON f.tgt = wbf.qid
+  UNION ALL
+  SELECT /*+ BROADCAST(wbb) */ b.tgt AS wa, b.work AS wb FROM bwd b
+  LEFT SEMI JOIN {{wbb}} wbb ON b.tgt = wbb.qid
+) WHERE wa <> wb""", wbf=wb, wbb=wb, **kw).transform(lazy_checkpoint))
+
+    # person-typed entities (typed(("Q5",)) — used by char_p67 and the
+    # person-node emissions)
+    f_charp = pool.submit(lambda: spark.sql("""
+SELECT /*+ BROADCAST(a) */ DISTINCT st.subject_qid AS cq
+FROM {statements} st
+LEFT SEMI JOIN (SELECT qid FROM {sc} WHERE ancestor = 'Q5') a
+  ON st.object_value = a.qid
+WHERE st.pid = 'P31'""", statements=statements, sc=subclass_closure) \
+        .transform(lazy_checkpoint))
+
+    qfw, pairs = f_fw.result()
+    lab = f_lab.result()
+    workref = f_workref.result()
+    cite_kept = f_cite.result()
+    int31 = f_int31.result()
+    charp = f_charp.result()
+
+    # relation nodes: every pair from every source, canonical + labels
+    def _build_rels():
+        return spark.sql(f"""
+WITH members AS (
+  SELECT w1, w2 FROM {{pairs}}
+  UNION ALL SELECT wa, wb FROM {{int31}}
+  UNION ALL SELECT wr.work AS w1, wr.tgt AS w2 FROM {{workref}} wr
+            WHERE wr.work <> wr.tgt
+  UNION ALL SELECT src, tgt FROM {{cite}}
+),
+canon AS (
+  SELECT DISTINCT least(w1, w2) AS w1, greatest(w1, w2) AS w2 FROM members
+),
+labeled AS (
+  SELECT {lab_hint('l1', 'l2')}
+    c.w1, c.w2,
+    coalesce(l1.__lv, c.w1) AS l1, coalesce(l2.__lv, c.w2) AS l2
+  FROM canon c
+  LEFT JOIN {{lab}} l1 ON c.w1 = l1.__lk
+  LEFT JOIN {{lab}} l2 ON c.w2 = l2.__lk
+)
+SELECT w1, w2, l1, l2,
+  CASE WHEN lower(l1) <= lower(l2) THEN l1 ELSE l2 END AS la,
+  CASE WHEN lower(l1) <= lower(l2) THEN l2 ELSE l1 END AS lb,
+  concat('{SAPPHO}relation/', w1, '_', w2) AS rel,
+  concat(w1, '_', w2) AS tid
+FROM labeled""", pairs=pairs, int31=int31, workref=workref, cite=cite_kept,
+                         lab=lab).transform(lazy_checkpoint)
+
+    # actualizations (first_partner over qfw + workref acts), labeled
+    fam_prio = " ".join(f"WHEN '{f[0]}' THEN {f[8]}" for f in FAMILIES)
+
+    def _build_acts():
+        return spark.sql(f"""
+WITH fw AS (SELECT DISTINCT family, tgt, work FROM {{qfw}}),
+fw2 AS (SELECT *, min(work) OVER (PARTITION BY family, tgt) AS _min FROM fw),
+second AS (
+  SELECT family, tgt, min(work) AS _second FROM fw2
+  WHERE work > _min GROUP BY family, tgt
+),
+fam_acts AS (
+  SELECT f.family, f.tgt, f.work, f._min AS rel_w1,
+         CASE WHEN f.work = f._min THEN s._second ELSE f.work END AS rel_w2
+  FROM fw2 f LEFT JOIN second s ON f.family = s.family AND f.tgt = s.tgt
+),
+fam_acts_nn AS (SELECT * FROM fam_acts WHERE rel_w2 IS NOT NULL),
+fam_labeled AS (
+  SELECT {lab_hint('lt', 'lw')}
+    a.tgt, a.work, a.rel_w1, a.rel_w2,
+    coalesce(lt.__lv, a.tgt) AS tlbl, coalesce(lw.__lv, a.work) AS wlbl,
+    a.family, a.family AS typ,
+    CASE WHEN a.family IN ('person_ref', 'place_ref')
+         THEN format_string('Reference to %s in %s',
+                            coalesce(lt.__lv, a.tgt), coalesce(lw.__lv, a.work))
+         ELSE format_string('%s in %s',
+                            coalesce(lt.__lv, a.tgt), coalesce(lw.__lv, a.work))
+    END AS alabel,
+    CASE a.family {fam_prio} END AS prio
+  FROM fam_acts_nn a
+  LEFT JOIN {{lab}} lt ON a.tgt = lt.__lk
+  LEFT JOIN {{lab}} lw ON a.work = lw.__lk
+),
+wr_pairs AS (
+  SELECT tgt, work AS src FROM {{workref}} WHERE work <> tgt
+),
+wr_labeled AS (
+  SELECT {lab_hint('lt', 'lw')}
+    p.tgt, p.src AS work,
+    least(p.src, p.tgt) AS rel_w1, greatest(p.src, p.tgt) AS rel_w2,
+    coalesce(lt.__lv, p.tgt) AS tlbl, coalesce(lw.__lv, p.src) AS wlbl,
+    'work_ref' AS family, 'work_ref' AS typ,
+    format_string('Reference to %s in %s',
+                  coalesce(lt.__lv, p.tgt), coalesce(lw.__lv, p.src)) AS alabel,
+    9 AS prio
+  FROM wr_pairs p
+  LEFT JOIN {{lab}} lt ON p.tgt = lt.__lk
+  LEFT JOIN {{lab}} lw ON p.src = lw.__lk
+),
+unioned AS (SELECT * FROM fam_labeled UNION ALL SELECT * FROM wr_labeled)
+SELECT *,
+  concat('{SAPPHO}actualization/', typ, '/', tgt, '_', work) AS act,
+  concat('{SAPPHO}feature/', typ, '/', tgt) AS feat_uri,
+  concat('{SAPPHO}relation/', rel_w1, '_', rel_w2) AS rel,
+  concat('{SAPPHO}expression/', work) AS expr
+FROM unioned""", qfw=qfw, workref=workref, lab=lab).transform(lazy_checkpoint)
+
+    f_rels = pool.submit(_build_rels)
+    f_acts = pool.submit(_build_acts)
+    rels = f_rels.result()
+    acts = f_acts.result()
+    pool.shutdown(wait=True)
+
+    # interpretation candidates with priority rank (relations.py:206-233)
+    interp_all = spark.sql("""
+WITH cand AS (
+  SELECT tid,
+    format_string('Interpretation of intertextual relation between %s and %s',
+                  la, lb) AS ilabel,
+    array(w1, w2) AS derived, rel AS target, 0 AS prio
+  FROM {rels}
+  UNION ALL
+  SELECT concat(tgt, '_', work) AS tid,
+    format_string('Interpretation of %s',
+                  regexp_replace(alabel, '^Reference to ', '')) AS ilabel,
+    array(work) AS derived, act AS target, prio
+  FROM {acts}
+)
+SELECT *, row_number() OVER (
+  PARTITION BY tid ORDER BY prio, target, ilabel) AS _rank
+FROM cand""", rels=rels, acts=acts).transform(lazy_checkpoint)
+
+    # --- ONE emission query over the checkpointed blocks ---
+    e = lambda name, rules: _emit_inline_sql(spark, rules, f"relations:{name}")  # noqa: E731
+    branches = [
+        f"SELECT {e('rel', rel_rules())} FROM {{rels}}",
+        f"SELECT {e('act', act_rules())} FROM {{acts}}",
+        f"SELECT {e('interp_creation', interp_creation_rules())} "
+        "FROM {interp} WHERE _rank = 1",
+        f"SELECT {e('interp_derived', interp_derived_rules())} FROM "
+        "(SELECT tid, explode(derived) AS dq FROM {interp2} WHERE _rank = 1)",
+        f"SELECT {e('interp_links', interp_links_rules())} FROM {{interp3}}",
+        # R22 similarity links: per (feature, pair) for ALL pairs
+        f"""SELECT {e('r22', r22_rules())} FROM (
+  SELECT concat('{SAPPHO}feature/', family, '/', tgt) AS feat_uri,
+         concat('{SAPPHO}relation/', w1, '_', w2) AS rel
+  FROM {{pairs}}
+  UNION ALL
+  SELECT concat('{SAPPHO}feature/work_ref/', tgt),
+         concat('{SAPPHO}relation/', least(work, tgt), '_', greatest(work, tgt))
+  FROM {{workref2}} WHERE work <> tgt
+)""",
+        # P67 reference links per act
+        f"""SELECT {e('p67', p67_rules())} FROM (
+  SELECT act, CASE WHEN family = 'person_ref'
+                   THEN concat('{SAPPHO}person/', tgt)
+                   ELSE concat('{SAPPHO}place/', tgt) END AS p67_target
+  FROM {{acts2}} WHERE family IN ('person_ref', 'place_ref')
+  UNION ALL
+  SELECT a.act, concat('{SAPPHO}person/', a.tgt) AS p67_target
+  FROM {{acts3}} a
+  LEFT SEMI JOIN {{charp}} c ON a.tgt = c.cq
+  WHERE a.family = 'character'
+  UNION ALL
+  SELECT act, concat('{SAPPHO}expression/', tgt) AS p67_target
+  FROM {{acts4}} WHERE family = 'work_ref'
+)""",
+        # feature nodes over the qualifying (family, tgt) set
+        f"""SELECT {e('feat', feat_node_rules())} FROM (
+  SELECT {lab_hint('l')} f.family, f.tgt, coalesce(l.__lv, f.tgt) AS tlbl,
+         concat('{SAPPHO}feature/', f.family, '/', f.tgt) AS feat_uri
+  FROM (SELECT DISTINCT family, tgt FROM {{qfw2}}) f
+  LEFT JOIN {{lab2}} l ON f.tgt = l.__lk
+)""",
+        # person nodes: person_ref targets ∪ person-typed character targets
+        f"""SELECT {e('person', person_node_rules())} FROM (
+  SELECT {lab_hint('l')} p.tgt, coalesce(l.__lv, p.tgt) AS tlbl FROM (
+    SELECT DISTINCT tgt FROM {{qfw3}} WHERE family = 'person_ref'
+    UNION
+    SELECT t.tgt FROM (SELECT DISTINCT tgt FROM {{qfw4}}
+                       WHERE family = 'character') t
+    LEFT SEMI JOIN {{charp2}} c ON t.tgt = c.cq
+  ) p LEFT JOIN {{lab3}} l ON p.tgt = l.__lk
+)""",
+        # person_ref feature nodes for person-characters
+        f"""SELECT {e('charp_feat', charp_feat_rules())} FROM (
+  SELECT {lab_hint('l')} t.tgt, coalesce(l.__lv, t.tgt) AS tlbl
+  FROM (SELECT DISTINCT tgt FROM {{qfw5}} WHERE family = 'character') t
+  LEFT SEMI JOIN {{charp3}} c ON t.tgt = c.cq
+  LEFT JOIN {{lab4}} l ON t.tgt = l.__lk
+)""",
+        # place nodes
+        f"""SELECT {e('place', place_node_rules())} FROM (
+  SELECT {lab_hint('l')} t.tgt, coalesce(l.__lv, t.tgt) AS tlbl
+  FROM (SELECT DISTINCT tgt FROM {{qfw6}} WHERE family = 'place_ref') t
+  LEFT JOIN {{lab5}} l ON t.tgt = l.__lk
+)""",
+        # work_ref feature nodes — every target, no ≥2 gate
+        f"""SELECT {e('workref_feat', workref_feat_rules())} FROM (
+  SELECT {lab_hint('l')} t.tgt, coalesce(l.__lv, t.tgt) AS tlbl
+  FROM (SELECT DISTINCT tgt FROM {{workref3}}) t
+  LEFT JOIN {{lab6}} l ON t.tgt = l.__lk
+)""",
+        # expressions ensured across processors
+        f"""SELECT {e('expr', expr_rules())} FROM (
+  SELECT {lab_hint('l')} u.q, coalesce(l.__lv, u.q) AS qlbl FROM (
+    SELECT DISTINCT q FROM (
+      SELECT w1 AS q FROM {{pairs2}} UNION ALL SELECT w2 FROM {{pairs3}}
+      UNION ALL SELECT wa FROM {{int31b}} UNION ALL SELECT wb FROM {{int31c}}
+      UNION ALL SELECT src FROM {{cite2}} UNION ALL SELECT tgt FROM {{cite3}}
+      UNION ALL SELECT tgt FROM {{workref4}}
+      UNION ALL SELECT work FROM {{workref5}} WHERE work <> tgt
+    )
+  ) u LEFT JOIN {{lab7}} l ON u.q = l.__lk
+)""",
+        # citation text passages (relations.py:795-816)
+        f"""SELECT {e('tp', tp_rules())} FROM (
+  SELECT {lab_hint('ls', 'lt')} c.src, c.tgt,
+         coalesce(ls.__lv, c.src) AS slbl, coalesce(lt.__lv, c.tgt) AS tlbl,
+         concat('{SAPPHO}relation/', least(c.src, c.tgt), '_',
+                greatest(c.src, c.tgt)) AS rel
+  FROM {{cite4}} c
+  LEFT JOIN {{lab8}} ls ON c.src = ls.__lk
+  LEFT JOIN {{lab9}} lt ON c.tgt = lt.__lk
+)""",
+    ]
+    # alignment block (relations.py:879-902) + header + ID-Type block
+    consts = [(s, p, o, is_iri, lang, dtype)
+              for (s, p, o, lang, dtype, is_iri)
+              in sorted(relations_alignment_triples(),
+                        key=lambda t: tuple("" if v is None else str(v)
+                                            for v in t))]
+    branches.append(_const_values_sql(consts))
+    header = None
     if include_header:
-        # ontology node + ID-Type block (relations.py:147-166)
-        header = relations_header(spark).unionByName(const_triples(spark, [
+        onto = SAPPHO + "ontology/relations"
+        header = _const_values_sql([
+            (onto, RDF_TYPE, "http://www.w3.org/2002/07/owl#Ontology"),
+            (onto, "http://www.w3.org/2002/07/owl#imports", ECRM),
+            (onto, "http://www.w3.org/2002/07/owl#imports", LRMOO_ONTO),
+            (onto, "http://www.w3.org/2002/07/owl#imports", INTRO),
             (ID_TYPE, RDF_TYPE, ECRM + "E55_Type"),
             (ID_TYPE, RDFS_LABEL, "Wikidata ID", False, "en"),
             (ID_TYPE, OWL_SAMEAS, WD + "Q43649390"),
-        ]))
-        out = out.unionByName(header)
-    return dedupe_triples(out) if dedupe else out
+        ])
+    query = _wrap("\nUNION ALL\n".join(branches), header, dedupe)
+    return spark.sql(
+        query,
+        rels=rels, acts=acts, interp=interp_all, interp2=interp_all,
+        interp3=interp_all, pairs=pairs, pairs2=pairs, pairs3=pairs,
+        workref2=workref, workref3=workref, workref4=workref,
+        workref5=workref, acts2=acts, acts3=acts, acts4=acts,
+        charp=charp, charp2=charp, charp3=charp,
+        qfw2=qfw, qfw3=qfw, qfw4=qfw, qfw5=qfw, qfw6=qfw,
+        int31b=int31, int31c=int31, cite2=cite_kept, cite3=cite_kept,
+        cite4=cite_kept, lab2=lab, lab3=lab, lab4=lab, lab5=lab, lab6=lab,
+        lab7=lab, lab8=lab, lab9=lab,
+    )

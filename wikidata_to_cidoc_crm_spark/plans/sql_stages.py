@@ -1,37 +1,27 @@
-"""SQL-compiled mapping stages — one ``spark.sql`` per plan fragment.
+"""Shared SQL helpers for the stage builds in ``plans/``.
 
-Why this exists (BENCH/PLANCOST.md): the classic DataFrame API analyzes
-eagerly — every ``.select``/``.join``/``.withColumn`` creates a JVM Dataset
-and re-resolves its whole subtree, so a stage built from ~200 incremental
-ops pays ~700 Catalyst analyses plus thousands of py4j round-trips. At
-sf0.1 this driver-side fixed cost dominated ``kg_pipeline_plan`` (~32 s
-for the relations stage alone). Compiling each stage to a handful of SQL
-strings costs ONE parse+analysis per string: identical logical content,
-same physical plan shape (broadcast hints replace ``F.broadcast``, the
-salted pair join and first-partner window are spelled out in SQL), ~10x
-less driver work.
+Each mapping stage (authors, works, relations) and the merge stage compile
+to a handful of ``spark.sql`` statements: one parse and analysis per
+statement, instead of the ~700 eager Catalyst analyses an op-by-op
+DataFrame build of the same plan pays (BENCH/PLANCOST.md). Broadcast hints,
+the salted pair join and the first-partner window are spelled out in the
+SQL text of each stage module.
 
-Single source of truth: the triple-emission ``Rule`` tables stay in
-``plans/authors.py`` / ``plans/works.py`` / ``plans/relations.py``; their
-Column expressions are converted to SQL text through the session's
-ColumnNode→Expression converter (classic mode), so the emission surface
-cannot drift between the two builds. Equality of the two paths is pinned
-by ``tests/test_sql_stages.py`` (exact triple-set comparison) and by the
-golden-parity pytests, which exercise the SQL path by default
-(``SPARK_GRAFT_SQL_STAGES=0`` switches back to the DataFrame build).
+The triple-emission ``Rule`` tables stay the single source of truth for
+what a stage emits. ``_emit_inline_sql`` turns a table into one
+``inline(array_compact(array(CASE ...)))`` fan-out by converting the rule
+Columns to SQL text through the session's ColumnNode→Expression converter
+(classic mode). ``_const_values_sql`` spells a constant triple block as a
+VALUES select, and ``_wrap`` unions emission and header under an optional
+full-key DISTINCT.
 """
 
 from __future__ import annotations
 
 import threading
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-
-from ..model import SAPPHO, WD
-from ..session import lazy_checkpoint
-
-# --------------------------------------------------------------- utilities
 
 _compile_lock = threading.Lock()
 _EMIT_CACHE: dict[str, str] = {}
@@ -42,17 +32,18 @@ def _col_sql(spark: SparkSession, col) -> str:
 
     Spark's FunctionRegistry registers operators under function names
     (``and``, ``>``, ``isnotnull`` …), so ``Expression.sql()`` output
-    round-trips through the parser; tests/test_sql_stages.py pins the
-    round-trip by comparing full stage outputs."""
+    round-trips through the parser; the golden and DuckDB-twin suites pin
+    the round-trip by comparing full stage outputs."""
     return spark._jsparkSession.converter().apply(col._jc.node()).sql()
 
 
 def _emit_inline_sql(spark: SparkSession, rules, cache_key: str) -> str:
-    """Compile a Rule table to ``inline(array_compact(array(CASE …)))`` —
-    the SQL spelling of model.emit_triples' explode(filter(array(structs)))
-    fan-out (array_compact ≡ filter(x -> x IS NOT NULL); both prune the
-    null structs, order-preserving). Cached per rule table: the py4j
-    conversion costs ~0.5 s for a 90-rule list and the tables are static."""
+    """Compile a Rule table to ``inline(array_compact(array(CASE …)))``:
+    one struct per rule, null when the rule's condition or the subject/
+    object non-null check fails, pruned by ``array_compact`` and expanded
+    by one Generate, so the fan-out shuffles nothing and stays inside
+    whole-stage codegen. Cached per rule table: the py4j conversion costs
+    ~0.5 s for a 90-rule list and the tables are static."""
     with _compile_lock:
         if cache_key in _EMIT_CACHE:
             return _EMIT_CACHE[cache_key]
@@ -89,8 +80,7 @@ def _q(s) -> str:
 
 def _const_values_sql(triples) -> str:
     """Constant triple block as a VALUES select (model-order tuples:
-    (s, p, o[, is_iri[, lang[, dtype]]]) — same contract as
-    model.const_triples)."""
+    (s, p, o[, is_iri[, lang[, dtype]]]); is_iri defaults to true)."""
     rows = []
     for t in triples:
         s, p, o = t[0], t[1], t[2]
@@ -109,707 +99,10 @@ def _const_values_sql(triples) -> str:
 
 def _wrap(emission_sql: str, header_sql: str | None, dedupe: bool) -> str:
     """Emission ∪ header, optionally DISTINCT over the full triple key
-    (≡ model.dedupe_triples: dropDuplicates on all six columns)."""
+    (the set semantics of model.dedupe_triples)."""
     body = emission_sql
     if header_sql:
         body = f"{body}\nUNION ALL\n{header_sql}"
     sel = "SELECT DISTINCT" if dedupe else "SELECT"
     return (f"{sel} subj, pred, obj, obj_is_iri, lang, dtype FROM (\n"
             f"{body}\n) __triples")
-
-
-# --------------------------------------------------------------- authors
-
-def authors_stage_sql(
-    spark: SparkSession,
-    person_qids: DataFrame,
-    statements: DataFrame,
-    labels: DataFrame,
-    include_header: bool = True,
-    dedupe: bool = True,
-    broadcast_labels: bool | None = None,
-) -> DataFrame:
-    from ..oracle import authors_header_triples
-    from .authors import AUTHOR_PIDS, author_rules
-    from .relations import LABEL_BROADCAST_MAX
-
-    if broadcast_labels is None:
-        broadcast_labels = labels.count() <= LABEL_BROADCAST_MAX
-    hint = ("/*+ BROADCAST(l0), BROADCAST(l1), BROADCAST(l2), BROADCAST(l3) */ "
-            if broadcast_labels else "")
-    emit = _emit_inline_sql(spark, author_rules(), "authors")
-    header = _const_values_sql(sorted(
-        (s, p, o, ii, lang, dt)
-        for (s, p, o, lang, dt, ii) in authors_header_triples()
-    )) if include_header else None
-
-    pin = ",".join(f"'{p}'" for p in AUTHOR_PIDS)
-    piv_cols = ",\n    ".join(
-        f"min(CASE WHEN pid = '{p}' THEN object_value END) AS {p}"
-        for p in AUTHOR_PIDS)
-    # the person-QID side is bounded by the entity dimension (linked_qids
-    # semi-joins against wd_entities), so it broadcasts unconditionally —
-    # same membership-broadcast rule as relations' in_W. This keeps the
-    # statements scan shuffle-free through the semi join.
-    query = _wrap(f"""
-WITH stmts AS (
-  SELECT /*+ BROADCAST(pq) */ subject_qid, pid, object_value
-  FROM {{statements}}
-  LEFT SEMI JOIN {{persons2}} pq ON subject_qid = pq.qid
-  WHERE pid IN ({pin})
-),
-piv AS (
-  SELECT subject_qid AS qid,
-    {piv_cols}
-  FROM stmts GROUP BY subject_qid
-),
-lab_en AS (SELECT qid AS _lqid, label AS _label FROM {{labels}} WHERE lang = 'en'),
-joined AS (
-  SELECT {hint}
-    p.qid, piv.P21, piv.P19, piv.P20, piv.P569, piv.P570, piv.P18,
-    l0._label AS item_label, l1._label AS gender_label,
-    l2._label AS birth_place_label, l3._label AS death_place_label
-  FROM {{persons}} p
-  LEFT JOIN piv ON piv.qid = p.qid
-  LEFT JOIN lab_en l0 ON p.qid = l0._lqid
-  LEFT JOIN lab_en l1 ON piv.P21 = l1._lqid
-  LEFT JOIN lab_en l2 ON piv.P19 = l2._lqid
-  LEFT JOIN lab_en l3 ON piv.P20 = l3._lqid
-),
-wide AS (
-  SELECT qid,
-    coalesce(item_label, format_string('Unknown (%s)', qid)) AS label,
-    P21 AS gender_qid, gender_label,
-    substring_index(P569, 'T', 1) AS birth_date,
-    substring_index(P570, 'T', 1) AS death_date,
-    P19 AS birth_place_qid, birth_place_label,
-    P20 AS death_place_qid, death_place_label,
-    P18 AS image_url
-  FROM joined
-)
-SELECT {emit} FROM wide""", header, dedupe)
-    return spark.sql(query, statements=statements, persons=person_qids,
-                     persons2=person_qids, labels=labels)
-
-
-# --------------------------------------------------------------- works
-
-_WORK_SLICES = [("P136", "genre_qid"), ("P50", "author_qid"),
-                ("P291", "pub_place_qid"), ("P123", "publisher_qid"),
-                ("P953", "digital_copy"), ("P98", "editor_qid"),
-                ("P1433", "published_in"), ("P361", "part_of")]
-
-_WORK_LABELS = [("qid", "work_label"), ("genre_qid", "genre_label"),
-                ("author_qid", "author_label"), ("pub_place_qid", "pub_place_label"),
-                ("publisher_qid", "publisher_label"), ("editor_qid", "editor_label")]
-
-
-def works_stage_sql(
-    spark: SparkSession,
-    work_qids: DataFrame,
-    statements: DataFrame,
-    labels: DataFrame,
-    include_header: bool = True,
-    dedupe: bool = True,
-    broadcast_labels: bool | None = None,
-) -> DataFrame:
-    from .constants import works_header_triples
-    from .relations import LABEL_BROADCAST_MAX
-    from .works import work_rules
-
-    if broadcast_labels is None:
-        broadcast_labels = labels.count() <= LABEL_BROADCAST_MAX
-    emit = _emit_inline_sql(spark, work_rules(), "works")
-    header = _const_values_sql(sorted(works_header_triples())) \
-        if include_header else None
-
-    slice_ctes = ",\n".join(
-        f"sl_{pid} AS (SELECT subject_qid AS qid, object_value AS v "
-        f"FROM stmts WHERE pid = '{pid}')"
-        for pid, _ in _WORK_SLICES)
-    slice_joins = "\n  ".join(
-        f"LEFT JOIN sl_{pid} {pid.lower()} ON {pid.lower()}.qid = w.qid"
-        for pid, _ in _WORK_SLICES)
-    svc_keys = ["w.qid", "p136.v", "p50.v", "p291.v", "p123.v", "p98.v"]
-    svc_joins = "\n  ".join(
-        f"LEFT JOIN svc s{i} ON s{i}._lq = {key}"
-        for i, key in enumerate(svc_keys))
-    svc_cols = ",\n    ".join(
-        # label-service en→de→key fallback; the work's own label falls back
-        # to its qid (works.py label service always returns a value)
-        f"coalesce(s{i}._len, s{i}._lde, {key}) AS {out}"
-        for i, (key, (_, out)) in enumerate(zip(svc_keys, _WORK_LABELS)))
-    if broadcast_labels:
-        bl = ", ".join([f"BROADCAST(s{i})" for i in range(6)]
-                       + ["BROADCAST(d1)", "BROADCAST(d2)"])
-        hint = f"/*+ {bl} */ "
-    else:
-        hint = ""
-
-    # work-QID membership broadcasts unconditionally (dimension-bounded,
-    # same rule as relations' in_W) so the statements scan never shuffles
-    # for the semi join — the inlined stmts copies each stay map-side.
-    query = _wrap(f"""
-WITH stmts AS (
-  SELECT /*+ BROADCAST(wq) */ subject_qid, pid, object_value
-  FROM {{statements}}
-  LEFT SEMI JOIN {{works2}} wq ON subject_qid = wq.qid
-),
-title_de AS (SELECT subject_qid AS qid, object_value AS v FROM {{statements}}
-             WHERE pid = 'P1476' AND object_lang = 'de'),
-title_en AS (SELECT subject_qid AS qid, object_value AS v FROM {{statements}}
-             WHERE pid = 'P1476' AND object_lang = 'en'),
-{slice_ctes},
-pub AS (SELECT subject_qid AS qid, min(object_value) AS pub_date_raw
-        FROM stmts WHERE pid = 'P577' GROUP BY subject_qid),
-creation AS (SELECT subject_qid AS qid, object_value AS creation_date_raw
-             FROM stmts WHERE pid IN ('P571', 'P2754')),
-svc AS (SELECT qid AS _lq,
-               min(CASE WHEN lang = 'en' THEN label END) AS _len,
-               min(CASE WHEN lang = 'de' THEN label END) AS _lde
-        FROM {{labels}} GROUP BY qid),
-dl AS (SELECT qid AS _dq, label AS _dl FROM {{labels}} WHERE lang = 'de'),
-joined AS (
-  SELECT {hint}
-    w.qid, td.v AS title_de, te.v AS title_en,
-    p136.v AS genre_qid, p50.v AS author_qid, p291.v AS pub_place_qid,
-    p123.v AS publisher_qid, p953.v AS digital_copy, p98.v AS editor_qid,
-    p1433.v AS published_in, p361.v AS part_of,
-    pub.pub_date_raw, cr.creation_date_raw,
-    {svc_cols},
-    d1._dl AS published_in_de, d2._dl AS part_of_de
-  FROM {{works}} w
-  LEFT JOIN title_de td ON td.qid = w.qid
-  LEFT JOIN title_en te ON te.qid = w.qid
-  {slice_joins}
-  LEFT JOIN pub ON pub.qid = w.qid
-  LEFT JOIN creation cr ON cr.qid = w.qid
-  {svc_joins}
-  LEFT JOIN dl d1 ON d1._dq = p1433.v
-  LEFT JOIN dl d2 ON d2._dq = p361.v
-),
-wide AS (
-  SELECT *,
-    coalesce(title_de, title_en, work_label, 'Untitled') AS label,
-    CASE WHEN title_de IS NOT NULL THEN 'de'
-         WHEN title_en IS NOT NULL THEN 'en'
-         WHEN work_label IS NOT NULL THEN 'de'
-         ELSE 'en' END AS label_lang,
-    substring(creation_date_raw, 1, 4) AS creation_year,
-    substring(pub_date_raw, 1, 4) AS pub_year
-  FROM joined
-),
-wide2 AS (
-  SELECT *,
-    CASE WHEN published_in IS NOT NULL THEN coalesce(published_in_de, 'Untitled')
-         WHEN part_of IS NOT NULL THEN coalesce(part_of_de, 'Untitled')
-         ELSE label END AS manif_label,
-    CASE WHEN published_in IS NOT NULL
-           THEN (CASE WHEN published_in_de IS NOT NULL THEN 'de' ELSE 'en' END)
-         WHEN part_of IS NOT NULL
-           THEN (CASE WHEN part_of_de IS NOT NULL THEN 'de' ELSE 'en' END)
-         ELSE label_lang END AS manif_lang
-  FROM wide
-)
-SELECT {emit} FROM wide2""", header, dedupe)
-    return spark.sql(query, statements=statements, works=work_qids,
-                     works2=work_qids, labels=labels)
-
-
-# --------------------------------------------------------------- relations
-
-def relations_stage_sql(
-    spark: SparkSession,
-    work_qids: DataFrame,
-    statements: DataFrame,
-    labels: DataFrame,
-    subclass_closure: DataFrame,
-    property_closure: DataFrame,
-    include_header: bool = True,
-    dedupe: bool = True,
-    broadcast_labels: bool | None = None,
-) -> DataFrame:
-    from ..model import WD as _WD
-    from ..oracle_relations import relations_alignment_triples
-    from . import relations as R
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    lab_bcast = (labels.count() <= R.LABEL_BROADCAST_MAX
-                 if broadcast_labels is None else broadcast_labels)
-
-    def lab_hint(*aliases: str) -> str:
-        if not lab_bcast:
-            return ""
-        return "/*+ " + ", ".join(f"BROADCAST({a})" for a in aliases) + " */ "
-
-    # --- checkpointed building blocks (same truncation topology as the
-    # DataFrame build: downstream plans stay shallow and each block
-    # materializes exactly once). The spark.sql analyses are cheap, but each
-    # lazy checkpoint still pays a JVM physical planning — the independent
-    # blocks build on a small thread pool so those plannings overlap
-    # (JVM-side Catalyst planning of distinct queries is thread-safe). ---
-    pool = ThreadPoolExecutor(max_workers=4, thread_name_prefix="relsql-plan")
-
-    # label service en→de (relations.py:122-135); canonical (__lk, __lv)
-    f_lab = pool.submit(lambda: spark.sql("""
-SELECT coalesce(e.qid, d.qid) AS __lk, coalesce(e._en, d._de) AS __lv
-FROM (SELECT qid, label AS _en FROM {labels} WHERE lang = 'en') e
-FULL OUTER JOIN (SELECT qid, label AS _de FROM {labels} WHERE lang = 'de') d
-  ON e.qid = d.qid""", labels=labels).transform(lazy_checkpoint))
-
-    # canonical membership build side (in_W)
-    wb = spark.sql("SELECT DISTINCT qid FROM {w}", w=work_qids) \
-        .transform(lazy_checkpoint)
-
-    fam_bases = {f[0]: f[1] for f in R.FAMILIES}
-    fam_bases["character_typed"] = ["P180", "P921"]  # relations.py:700-707
-    fam_base_rows = ",".join(
-        f"('{fam}','{b}')" for fam, bases in fam_bases.items() for b in bases)
-    typed_req = {
-        "plot": ["Q42109240"], "topic": ["Q26256810"], "person_ref": ["Q5"],
-        "place_ref": ["Q2221906"],
-        "character_typed": ["Q3658341", "Q15632617"],
-    }
-    anc_fam_rows = ",".join(
-        f"('{a}','{fam}')" for fam, ancs in typed_req.items() for a in ancs)
-    typed_fams = ",".join(f"'{fam}'" for fam in typed_req)
-
-    def _build_fw_chain():
-        # ONE tagged edge table for all six families (single statements scan)
-        fw_all = spark.sql(f"""
-WITH fam_base AS (SELECT * FROM (VALUES {fam_base_rows}) AS fb(family, base)),
-pid_fam AS (
-  SELECT DISTINCT pc.pid, fb.family
-  FROM {{pc}} pc JOIN fam_base fb ON pc.base_pid = fb.base
-),
-anc_fam AS (SELECT * FROM (VALUES {anc_fam_rows}) AS af(ancestor, family)),
-typed_pairs AS (
-  SELECT /*+ BROADCAST(sc), BROADCAST(af) */ DISTINCT
-         st.subject_qid AS tgt, af.family
-  FROM {{statements}} st
-  JOIN {{sc}} sc ON sc.qid = st.object_value
-  JOIN anc_fam af ON af.ancestor = sc.ancestor
-  WHERE st.pid = 'P31'
-),
-fw_all0 AS (
-  SELECT /*+ BROADCAST(pf), BROADCAST(wb) */
-         pf.family, st.subject_qid AS work, st.object_value AS tgt
-  FROM {{statements}} st
-  JOIN pid_fam pf ON pf.pid = st.pid
-  LEFT SEMI JOIN {{wb}} wb ON st.subject_qid = wb.qid
-  WHERE st.object_is_entity
-),
-fw_typed AS (
-  SELECT f.* FROM fw_all0 f
-  LEFT SEMI JOIN typed_pairs tp ON f.tgt = tp.tgt AND f.family = tp.family
-  WHERE f.family IN ({typed_fams})
-),
-fw_untyped AS (
-  SELECT * FROM fw_all0 WHERE family IN ('motif', 'character')
-)
-SELECT DISTINCT
-  CASE WHEN family = 'character_typed' THEN 'character' ELSE family END AS family,
-  work, tgt
-FROM (SELECT * FROM fw_typed UNION ALL SELECT * FROM fw_untyped)""",
-                          pc=property_closure, statements=statements,
-                          sc=subclass_closure, wb=wb).transform(lazy_checkpoint)
-
-        # qualifying features: shared by ≥2 works (relations.py:371-372)
-        qfw = spark.sql("""
-SELECT f.* FROM {fw} f
-LEFT SEMI JOIN (
-  SELECT family, tgt FROM {fw} GROUP BY family, tgt
-  HAVING count(DISTINCT work) >= 2
-) q ON f.family = q.family AND f.tgt = q.tgt""", fw=fw_all) \
-            .transform(lazy_checkpoint)
-
-        # pairs for all families at once (operators.pairs.pair_join, salted:
-        # salt_partitions=32, heavy_threshold=256 — same constants as the
-        # DataFrame build)
-        pairs = spark.sql("""
-WITH fw AS (SELECT DISTINCT family, tgt, work AS _w FROM {qfw}),
-counts AS (SELECT family, tgt, count(*) AS _n FROM fw GROUP BY family, tgt),
-heavy_keys AS (SELECT family, tgt FROM counts WHERE _n > 256),
-heavy AS (SELECT /*+ BROADCAST(h) */ f.* FROM fw f
-          LEFT SEMI JOIN heavy_keys h ON f.family = h.family AND f.tgt = h.tgt),
-light AS (SELECT /*+ BROADCAST(h) */ f.* FROM fw f
-          LEFT ANTI JOIN heavy_keys h ON f.family = h.family AND f.tgt = h.tgt),
-light_pairs AS (
-  SELECT a.family, a.tgt, a._w AS w1, b._w AS w2
-  FROM light a JOIN light b ON a.family = b.family AND a.tgt = b.tgt
-  WHERE a._w < b._w
-),
-ha AS (SELECT family, tgt, _w AS w1,
-              CAST(pmod(xxhash64(_w), 32) AS INT) AS _salt FROM heavy),
-hb AS (SELECT family, tgt, _w AS w2, explode(sequence(0, 31)) AS _salt FROM heavy),
-heavy_pairs AS (
-  SELECT a.family, a.tgt, a.w1, b.w2
-  FROM ha a JOIN hb b
-    ON a.family = b.family AND a.tgt = b.tgt AND a._salt = b._salt
-  WHERE a.w1 < b.w2
-)
-SELECT family, tgt, w1, w2 FROM light_pairs
-UNION ALL
-SELECT family, tgt, w1, w2 FROM heavy_pairs""", qfw=qfw) \
-            .transform(lazy_checkpoint)
-        return qfw, pairs
-
-    f_fw = pool.submit(_build_fw_chain)
-
-    def edges_sql(bases: list[str]) -> str:
-        bl = ",".join(f"'{b}'" for b in bases)
-        return f"""
-  SELECT /*+ BROADCAST(p), BROADCAST(wb) */ DISTINCT
-         st.subject_qid AS work, st.object_value AS tgt
-  FROM {{statements}} st
-  JOIN (SELECT DISTINCT pid FROM {{pc}} WHERE base_pid IN ({bl})) p
-    ON st.pid = p.pid
-  LEFT SEMI JOIN {{wb}} wb ON st.subject_qid = wb.qid
-  WHERE st.object_is_entity"""
-
-    kw = dict(statements=statements, pc=property_closure, wb=wb)
-
-    # work references (relations.py:616-669): tgt ∈ W too; no ≥2 gate
-    f_workref = pool.submit(lambda: spark.sql(f"""
-WITH ed AS ({edges_sql(["P921"])})
-SELECT /*+ BROADCAST(wb2) */ e.work, e.tgt FROM ed e
-LEFT SEMI JOIN {{wb2}} wb2 ON e.tgt = wb2.qid
-WHERE e.tgt LIKE 'Q%'""", wb2=wb, **kw).transform(lazy_checkpoint))
-
-    # citations (relations.py:765-818): keep lexicographically smaller
-    # directed (src, tgt) per unordered pair
-    f_cite = pool.submit(lambda: spark.sql(f"""
-WITH ed AS ({edges_sql(["P2860", "P6166"])}),
-cd AS (
-  SELECT /*+ BROADCAST(wb2) */ e.tgt AS src, e.work AS tgt FROM ed e
-  LEFT SEMI JOIN {{wb2}} wb2 ON e.tgt = wb2.qid
-  WHERE e.tgt <> e.work
-)
-SELECT _p.src AS src, _p.tgt AS tgt FROM (
-  SELECT min(named_struct('src', src, 'tgt', tgt)) AS _p
-  FROM cd GROUP BY least(src, tgt), greatest(src, tgt)
-)""", wb2=wb, **kw).transform(lazy_checkpoint))
-
-    # int31 direct links (relations.py:299-354): forward P4969; reversed
-    # P144/P5059/P941
-    f_int31 = pool.submit(lambda: spark.sql(f"""
-WITH fwd AS ({edges_sql(["P4969"])}),
-bwd AS ({edges_sql(["P144", "P5059", "P941"])})
-SELECT wa, wb FROM (
-  SELECT /*+ BROADCAST(wbf) */ f.work AS wa, f.tgt AS wb FROM fwd f
-  LEFT SEMI JOIN {{wbf}} wbf ON f.tgt = wbf.qid
-  UNION ALL
-  SELECT /*+ BROADCAST(wbb) */ b.tgt AS wa, b.work AS wb FROM bwd b
-  LEFT SEMI JOIN {{wbb}} wbb ON b.tgt = wbb.qid
-) WHERE wa <> wb""", wbf=wb, wbb=wb, **kw).transform(lazy_checkpoint))
-
-    # person-typed entities (typed(("Q5",)) — used by char_p67 and the
-    # person-node emissions)
-    f_charp = pool.submit(lambda: spark.sql("""
-SELECT /*+ BROADCAST(a) */ DISTINCT st.subject_qid AS cq
-FROM {statements} st
-LEFT SEMI JOIN (SELECT qid FROM {sc} WHERE ancestor = 'Q5') a
-  ON st.object_value = a.qid
-WHERE st.pid = 'P31'""", statements=statements, sc=subclass_closure) \
-        .transform(lazy_checkpoint))
-
-    qfw, pairs = f_fw.result()
-    lab = f_lab.result()
-    workref = f_workref.result()
-    cite_kept = f_cite.result()
-    int31 = f_int31.result()
-    charp = f_charp.result()
-
-    # relation nodes: every pair from every source, canonical + labels
-    def _build_rels():
-        return spark.sql(f"""
-WITH members AS (
-  SELECT w1, w2 FROM {{pairs}}
-  UNION ALL SELECT wa, wb FROM {{int31}}
-  UNION ALL SELECT wr.work AS w1, wr.tgt AS w2 FROM {{workref}} wr
-            WHERE wr.work <> wr.tgt
-  UNION ALL SELECT src, tgt FROM {{cite}}
-),
-canon AS (
-  SELECT DISTINCT least(w1, w2) AS w1, greatest(w1, w2) AS w2 FROM members
-),
-labeled AS (
-  SELECT {lab_hint('l1', 'l2')}
-    c.w1, c.w2,
-    coalesce(l1.__lv, c.w1) AS l1, coalesce(l2.__lv, c.w2) AS l2
-  FROM canon c
-  LEFT JOIN {{lab}} l1 ON c.w1 = l1.__lk
-  LEFT JOIN {{lab}} l2 ON c.w2 = l2.__lk
-)
-SELECT w1, w2, l1, l2,
-  CASE WHEN lower(l1) <= lower(l2) THEN l1 ELSE l2 END AS la,
-  CASE WHEN lower(l1) <= lower(l2) THEN l2 ELSE l1 END AS lb,
-  concat('{SAPPHO}relation/', w1, '_', w2) AS rel,
-  concat(w1, '_', w2) AS tid
-FROM labeled""", pairs=pairs, int31=int31, workref=workref, cite=cite_kept,
-                         lab=lab).transform(lazy_checkpoint)
-
-    # actualizations (first_partner over qfw + workref acts), labeled
-    fam_prio = " ".join(f"WHEN '{f[0]}' THEN {f[8]}" for f in R.FAMILIES)
-
-    def _build_acts():
-        return spark.sql(f"""
-WITH fw AS (SELECT DISTINCT family, tgt, work FROM {{qfw}}),
-fw2 AS (SELECT *, min(work) OVER (PARTITION BY family, tgt) AS _min FROM fw),
-second AS (
-  SELECT family, tgt, min(work) AS _second FROM fw2
-  WHERE work > _min GROUP BY family, tgt
-),
-fam_acts AS (
-  SELECT f.family, f.tgt, f.work, f._min AS rel_w1,
-         CASE WHEN f.work = f._min THEN s._second ELSE f.work END AS rel_w2
-  FROM fw2 f LEFT JOIN second s ON f.family = s.family AND f.tgt = s.tgt
-),
-fam_acts_nn AS (SELECT * FROM fam_acts WHERE rel_w2 IS NOT NULL),
-fam_labeled AS (
-  SELECT {lab_hint('lt', 'lw')}
-    a.tgt, a.work, a.rel_w1, a.rel_w2,
-    coalesce(lt.__lv, a.tgt) AS tlbl, coalesce(lw.__lv, a.work) AS wlbl,
-    a.family, a.family AS typ,
-    CASE WHEN a.family IN ('person_ref', 'place_ref')
-         THEN format_string('Reference to %s in %s',
-                            coalesce(lt.__lv, a.tgt), coalesce(lw.__lv, a.work))
-         ELSE format_string('%s in %s',
-                            coalesce(lt.__lv, a.tgt), coalesce(lw.__lv, a.work))
-    END AS alabel,
-    CASE a.family {fam_prio} END AS prio
-  FROM fam_acts_nn a
-  LEFT JOIN {{lab}} lt ON a.tgt = lt.__lk
-  LEFT JOIN {{lab}} lw ON a.work = lw.__lk
-),
-wr_pairs AS (
-  SELECT tgt, work AS src FROM {{workref}} WHERE work <> tgt
-),
-wr_labeled AS (
-  SELECT {lab_hint('lt', 'lw')}
-    p.tgt, p.src AS work,
-    least(p.src, p.tgt) AS rel_w1, greatest(p.src, p.tgt) AS rel_w2,
-    coalesce(lt.__lv, p.tgt) AS tlbl, coalesce(lw.__lv, p.src) AS wlbl,
-    'work_ref' AS family, 'work_ref' AS typ,
-    format_string('Reference to %s in %s',
-                  coalesce(lt.__lv, p.tgt), coalesce(lw.__lv, p.src)) AS alabel,
-    9 AS prio
-  FROM wr_pairs p
-  LEFT JOIN {{lab}} lt ON p.tgt = lt.__lk
-  LEFT JOIN {{lab}} lw ON p.src = lw.__lk
-),
-unioned AS (SELECT * FROM fam_labeled UNION ALL SELECT * FROM wr_labeled)
-SELECT *,
-  concat('{SAPPHO}actualization/', typ, '/', tgt, '_', work) AS act,
-  concat('{SAPPHO}feature/', typ, '/', tgt) AS feat_uri,
-  concat('{SAPPHO}relation/', rel_w1, '_', rel_w2) AS rel,
-  concat('{SAPPHO}expression/', work) AS expr
-FROM unioned""", qfw=qfw, workref=workref, lab=lab).transform(lazy_checkpoint)
-
-    f_rels = pool.submit(_build_rels)
-    f_acts = pool.submit(_build_acts)
-    rels = f_rels.result()
-    acts = f_acts.result()
-    pool.shutdown(wait=True)
-
-    # interpretation candidates with priority rank (relations.py:206-233)
-    interp_all = spark.sql("""
-WITH cand AS (
-  SELECT tid,
-    format_string('Interpretation of intertextual relation between %s and %s',
-                  la, lb) AS ilabel,
-    array(w1, w2) AS derived, rel AS target, 0 AS prio
-  FROM {rels}
-  UNION ALL
-  SELECT concat(tgt, '_', work) AS tid,
-    format_string('Interpretation of %s',
-                  regexp_replace(alabel, '^Reference to ', '')) AS ilabel,
-    array(work) AS derived, act AS target, prio
-  FROM {acts}
-)
-SELECT *, row_number() OVER (
-  PARTITION BY tid ORDER BY prio, target, ilabel) AS _rank
-FROM cand""", rels=rels, acts=acts).transform(lazy_checkpoint)
-
-    # --- ONE emission query over the checkpointed blocks ---
-    e = lambda name, rules: _emit_inline_sql(spark, rules, f"relations:{name}")  # noqa: E731
-    branches = [
-        f"SELECT {e('rel', R.rel_rules())} FROM {{rels}}",
-        f"SELECT {e('act', R.act_rules())} FROM {{acts}}",
-        f"SELECT {e('interp_creation', R.interp_creation_rules())} "
-        "FROM {interp} WHERE _rank = 1",
-        f"SELECT {e('interp_derived', R.interp_derived_rules())} FROM "
-        "(SELECT tid, explode(derived) AS dq FROM {interp2} WHERE _rank = 1)",
-        f"SELECT {e('interp_links', R.interp_links_rules())} FROM {{interp3}}",
-        # R22 similarity links: per (feature, pair) for ALL pairs
-        f"""SELECT {e('r22', R.r22_rules())} FROM (
-  SELECT concat('{SAPPHO}feature/', family, '/', tgt) AS feat_uri,
-         concat('{SAPPHO}relation/', w1, '_', w2) AS rel
-  FROM {{pairs}}
-  UNION ALL
-  SELECT concat('{SAPPHO}feature/work_ref/', tgt),
-         concat('{SAPPHO}relation/', least(work, tgt), '_', greatest(work, tgt))
-  FROM {{workref2}} WHERE work <> tgt
-)""",
-        # P67 reference links per act
-        f"""SELECT {e('p67', R.p67_rules())} FROM (
-  SELECT act, CASE WHEN family = 'person_ref'
-                   THEN concat('{SAPPHO}person/', tgt)
-                   ELSE concat('{SAPPHO}place/', tgt) END AS p67_target
-  FROM {{acts2}} WHERE family IN ('person_ref', 'place_ref')
-  UNION ALL
-  SELECT a.act, concat('{SAPPHO}person/', a.tgt) AS p67_target
-  FROM {{acts3}} a
-  LEFT SEMI JOIN {{charp}} c ON a.tgt = c.cq
-  WHERE a.family = 'character'
-  UNION ALL
-  SELECT act, concat('{SAPPHO}expression/', tgt) AS p67_target
-  FROM {{acts4}} WHERE family = 'work_ref'
-)""",
-        # feature nodes over the qualifying (family, tgt) set
-        f"""SELECT {e('feat', R.feat_node_rules())} FROM (
-  SELECT {lab_hint('l')} f.family, f.tgt, coalesce(l.__lv, f.tgt) AS tlbl,
-         concat('{SAPPHO}feature/', f.family, '/', f.tgt) AS feat_uri
-  FROM (SELECT DISTINCT family, tgt FROM {{qfw2}}) f
-  LEFT JOIN {{lab2}} l ON f.tgt = l.__lk
-)""",
-        # person nodes: person_ref targets ∪ person-typed character targets
-        f"""SELECT {e('person', R.person_node_rules())} FROM (
-  SELECT {lab_hint('l')} p.tgt, coalesce(l.__lv, p.tgt) AS tlbl FROM (
-    SELECT DISTINCT tgt FROM {{qfw3}} WHERE family = 'person_ref'
-    UNION
-    SELECT t.tgt FROM (SELECT DISTINCT tgt FROM {{qfw4}}
-                       WHERE family = 'character') t
-    LEFT SEMI JOIN {{charp2}} c ON t.tgt = c.cq
-  ) p LEFT JOIN {{lab3}} l ON p.tgt = l.__lk
-)""",
-        # person_ref feature nodes for person-characters
-        f"""SELECT {e('charp_feat', R.charp_feat_rules())} FROM (
-  SELECT {lab_hint('l')} t.tgt, coalesce(l.__lv, t.tgt) AS tlbl
-  FROM (SELECT DISTINCT tgt FROM {{qfw5}} WHERE family = 'character') t
-  LEFT SEMI JOIN {{charp3}} c ON t.tgt = c.cq
-  LEFT JOIN {{lab4}} l ON t.tgt = l.__lk
-)""",
-        # place nodes
-        f"""SELECT {e('place', R.place_node_rules())} FROM (
-  SELECT {lab_hint('l')} t.tgt, coalesce(l.__lv, t.tgt) AS tlbl
-  FROM (SELECT DISTINCT tgt FROM {{qfw6}} WHERE family = 'place_ref') t
-  LEFT JOIN {{lab5}} l ON t.tgt = l.__lk
-)""",
-        # work_ref feature nodes — every target, no ≥2 gate
-        f"""SELECT {e('workref_feat', R.workref_feat_rules())} FROM (
-  SELECT {lab_hint('l')} t.tgt, coalesce(l.__lv, t.tgt) AS tlbl
-  FROM (SELECT DISTINCT tgt FROM {{workref3}}) t
-  LEFT JOIN {{lab6}} l ON t.tgt = l.__lk
-)""",
-        # expressions ensured across processors
-        f"""SELECT {e('expr', R.expr_rules())} FROM (
-  SELECT {lab_hint('l')} u.q, coalesce(l.__lv, u.q) AS qlbl FROM (
-    SELECT DISTINCT q FROM (
-      SELECT w1 AS q FROM {{pairs2}} UNION ALL SELECT w2 FROM {{pairs3}}
-      UNION ALL SELECT wa FROM {{int31b}} UNION ALL SELECT wb FROM {{int31c}}
-      UNION ALL SELECT src FROM {{cite2}} UNION ALL SELECT tgt FROM {{cite3}}
-      UNION ALL SELECT tgt FROM {{workref4}}
-      UNION ALL SELECT work FROM {{workref5}} WHERE work <> tgt
-    )
-  ) u LEFT JOIN {{lab7}} l ON u.q = l.__lk
-)""",
-        # citation text passages (relations.py:795-816)
-        f"""SELECT {e('tp', R.tp_rules())} FROM (
-  SELECT {lab_hint('ls', 'lt')} c.src, c.tgt,
-         coalesce(ls.__lv, c.src) AS slbl, coalesce(lt.__lv, c.tgt) AS tlbl,
-         concat('{SAPPHO}relation/', least(c.src, c.tgt), '_',
-                greatest(c.src, c.tgt)) AS rel
-  FROM {{cite4}} c
-  LEFT JOIN {{lab8}} ls ON c.src = ls.__lk
-  LEFT JOIN {{lab9}} lt ON c.tgt = lt.__lk
-)""",
-    ]
-    # alignment block (relations.py:879-902) + header + ID-Type block
-    consts = [(s, p, o, is_iri, lang, dtype)
-              for (s, p, o, lang, dtype, is_iri)
-              in sorted(relations_alignment_triples(),
-                        key=lambda t: tuple("" if v is None else str(v)
-                                            for v in t))]
-    branches.append(_const_values_sql(consts))
-    header = None
-    if include_header:
-        from ..model import (ECRM, LRMOO_ONTO, INTRO, OWL_SAMEAS, RDF_TYPE,
-                             RDFS_LABEL)
-        onto = SAPPHO + "ontology/relations"
-        header = _const_values_sql([
-            (onto, RDF_TYPE, "http://www.w3.org/2002/07/owl#Ontology"),
-            (onto, "http://www.w3.org/2002/07/owl#imports", ECRM),
-            (onto, "http://www.w3.org/2002/07/owl#imports", LRMOO_ONTO),
-            (onto, "http://www.w3.org/2002/07/owl#imports", INTRO),
-            (R.ID_TYPE, RDF_TYPE, ECRM + "E55_Type"),
-            (R.ID_TYPE, RDFS_LABEL, "Wikidata ID", False, "en"),
-            (R.ID_TYPE, OWL_SAMEAS, _WD + "Q43649390"),
-        ])
-    query = _wrap("\nUNION ALL\n".join(branches), header, dedupe)
-    return spark.sql(
-        query,
-        rels=rels, acts=acts, interp=interp_all, interp2=interp_all,
-        interp3=interp_all, pairs=pairs, pairs2=pairs, pairs3=pairs,
-        workref2=workref, workref3=workref, workref4=workref,
-        workref5=workref, acts2=acts, acts3=acts, acts4=acts,
-        charp=charp, charp2=charp, charp3=charp,
-        qfw2=qfw, qfw3=qfw, qfw4=qfw, qfw5=qfw, qfw6=qfw,
-        int31b=int31, int31c=int31, cite2=cite_kept, cite3=cite_kept,
-        cite4=cite_kept, lab2=lab, lab3=lab, lab4=lab, lab5=lab, lab6=lab,
-        lab7=lab, lab8=lab, lab9=lab,
-    )
-
-
-# --------------------------------------------------------------- merge
-
-def merge_stage_sql(spark: SparkSession, graphs: list[DataFrame]) -> DataFrame:
-    """SQL spelling of plans/merge.merge_stage's default path (full-key
-    dedup strategy + lineage checkpoint): one query for union → full-key
-    DISTINCT → label-window dedup, a checkpoint, then one query for the
-    ontology-node rewrite. Plan shape matches the DataFrame build: the
-    dedup exchanges on the full 6-tuple key (skew-immune) and only the
-    label fraction re-shuffles for the window."""
-    from ..model import OWL, RDF_TYPE, RDFS_LABEL, SAPPHO as _SP, LRMOO_ONTO, ECRM, INTRO
-
-    n = len(graphs)
-    union = "\nUNION ALL\n".join(
-        f"SELECT subj, pred, obj, obj_is_iri, lang, dtype FROM {{g{i}}}"
-        for i in range(n))
-    q1 = f"""
-WITH g AS (SELECT DISTINCT * FROM (
-{union}
-)),
-lbl AS (
-  SELECT subj, pred, obj, obj_is_iri, lang, dtype FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY subj
-      ORDER BY (lang IS NULL) ASC, coalesce(lang, '') ASC, obj ASC,
-               coalesce(dtype, '') ASC, obj_is_iri ASC) AS _rn
-    FROM g WHERE pred = '{RDFS_LABEL}'
-  ) WHERE _rn = 1
-)
-SELECT * FROM g WHERE pred <> '{RDFS_LABEL}'
-UNION ALL
-SELECT * FROM lbl"""
-    ck = spark.sql(q1, **{f"g{i}": df for i, df in enumerate(graphs)}) \
-        .transform(lazy_checkpoint)
-
-    onto = _SP + "ontology/all"
-    header = _const_values_sql([
-        (onto, RDF_TYPE, OWL + "Ontology"),
-        (onto, OWL + "imports", ECRM),
-        (onto, OWL + "imports", LRMOO_ONTO),
-        (onto, OWL + "imports", INTRO),
-    ])
-    q2 = f"""
-SELECT /*+ BROADCAST(o) */ k.subj, k.pred, k.obj, k.obj_is_iri, k.lang, k.dtype
-FROM {{ck}} k
-LEFT ANTI JOIN (
-  SELECT DISTINCT subj FROM {{ck2}}
-  WHERE pred = '{RDF_TYPE}' AND obj = '{OWL + "Ontology"}'
-) o ON k.subj = o.subj
-UNION ALL
-{header}"""
-    return spark.sql(q2, ck=ck, ck2=ck)

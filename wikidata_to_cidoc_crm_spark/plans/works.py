@@ -19,7 +19,9 @@ Determinism/bug positions (SURVEY.md §4.4):
 Scale notes: every property join is an equi-join on the work QID. The
 statement slices are filtered by pid *before* joining (scan-level pushdown);
 on a cluster the statements table is bucketed by subject_qid so these joins
-co-partition without re-shuffling; label joins broadcast.
+co-partition without re-shuffling; label joins broadcast (gated on the
+label dimension's size, LABEL_BROADCAST_MAX). The stage compiles to one
+``spark.sql`` statement.
 """
 
 from __future__ import annotations
@@ -27,8 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.dates import year_of
-from ..functions.uris import mint, qid_from_uri, wd_entity_uri
+from ..functions.uris import mint, wd_entity_uri
 from ..model import (
     ECRM,
     LRMOO,
@@ -38,14 +39,11 @@ from ..model import (
     RDFS_LABEL,
     RDFS_SEEALSO,
     SAPPHO,
-    WD,
     XSD,
     Rule,
-    dedupe_triples,
-    emit_triples,
 )
-from .constants import works_header
-from ..session import lazy_checkpoint
+from .constants import works_header_triples
+from .sql_stages import _const_values_sql, _emit_inline_sql, _wrap
 
 XSD_GYEAR = XSD + "gYear"
 ID_TYPE_WIKIDATA = SAPPHO + "id_type/wikidata"
@@ -54,130 +52,14 @@ GENRE_TYPE_WIKIDATA = SAPPHO + "genre_type/wikidata"
 WIKIDATA_ID_TYPE_SAMEAS = "http://www.wikidata.org/wiki/Q43649390"
 
 
-def _slice(statements: DataFrame, pid: str, out: str,
-           entity_valued: bool = True) -> DataFrame:
-    s = statements.filter(F.col("pid") == pid)
-    return s.select(F.col("subject_qid").alias("qid"),
-                    F.col("object_value").alias(out))
+_WORK_SLICES = [("P136", "genre_qid"), ("P50", "author_qid"),
+                ("P291", "pub_place_qid"), ("P123", "publisher_qid"),
+                ("P953", "digital_copy"), ("P98", "editor_qid"),
+                ("P1433", "published_in"), ("P361", "part_of")]
 
-
-def wide_works(
-    work_qids: DataFrame,
-    statements: DataFrame,
-    labels: DataFrame,
-    broadcast_labels: bool | None = None,
-) -> DataFrame:
-    if broadcast_labels is None:
-        # gate the forced label broadcast on dimension size — same
-        # shuffle-join fallback as relations_stage (LABEL_BROADCAST_MAX);
-        # at real-Wikidata label volume a forced broadcast would OOM.
-        from .relations import LABEL_BROADCAST_MAX
-
-        broadcast_labels = labels.count() <= LABEL_BROADCAST_MAX
-    _maybe_bcast = F.broadcast if broadcast_labels else (lambda df: df)
-    stmts = statements.join(
-        work_qids.withColumnRenamed("qid", "subject_qid"), "subject_qid", "left_semi"
-    )
-    w = work_qids
-
-    # P1476 titles with language filter (works.py:254-255)
-    t = statements.filter(F.col("pid") == "P1476")
-    title_de = t.filter(F.col("object_lang") == "de").select(
-        F.col("subject_qid").alias("qid"), F.col("object_value").alias("title_de"))
-    title_en = t.filter(F.col("object_lang") == "en").select(
-        F.col("subject_qid").alias("qid"), F.col("object_value").alias("title_en"))
-    w = w.join(title_de, "qid", "left").join(title_en, "qid", "left")
-
-    for pid, out in [("P136", "genre_qid"), ("P50", "author_qid"),
-                     ("P291", "pub_place_qid"), ("P123", "publisher_qid"),
-                     ("P953", "digital_copy"), ("P98", "editor_qid"),
-                     ("P1433", "published_in"), ("P361", "part_of")]:
-        w = w.join(_slice(stmts, pid, out), "qid", "left")
-
-    # MIN(pub_date) per work (works.py:252)
-    pub = (
-        stmts.filter(F.col("pid") == "P577")
-        .groupBy("subject_qid")
-        .agg(F.min("object_value").alias("pub_date_raw"))
-        .withColumnRenamed("subject_qid", "qid")
-    )
-    w = w.join(pub, "qid", "left")
-
-    # creation date = P571 ∪ P2754 (works.py:265) — union keeps multiplicity
-    creation = (
-        stmts.filter(F.col("pid").isin(["P571", "P2754"]))
-        .select(F.col("subject_qid").alias("qid"),
-                F.col("object_value").alias("creation_date_raw"))
-    )
-    w = w.join(creation, "qid", "left")
-
-    # label-service joins: ONE canonical (qid, en, de) build side shared by
-    # all six label joins — identical build-side subtrees let Spark reuse a
-    # single broadcast exchange (ReusedExchange) instead of building the
-    # label hash relation six times (the build is single-threaded and was
-    # the works stage's dominant fixed cost at large label dimensions).
-    svc_all = (
-        labels.groupBy("qid").pivot("lang", ["en", "de"]).agg(F.min("label"))
-        .select(F.col("qid").alias("_lq"), F.col("en").alias("_len"),
-                F.col("de").alias("_lde"))
-        .transform(lazy_checkpoint)
-    )
-    for key, out in [("qid", "work_label"), ("genre_qid", "genre_label"),
-                     ("author_qid", "author_label"), ("pub_place_qid", "pub_place_label"),
-                     ("publisher_qid", "publisher_label"), ("editor_qid", "editor_label")]:
-        w = w.join(_maybe_bcast(svc_all), F.col(key) == F.col("_lq"), "left") \
-            .withColumn(
-                out,
-                F.coalesce(F.col("_len"), F.col("_lde"),
-                           F.col(key) if key != "qid" else F.col("qid")),
-            ).drop("_lq", "_len", "_lde")
-
-    # fetch_label for publishedIn/partOf parents: de label required,
-    # else "Untitled"@en (works.py:285-305) — same shared-build-side shape
-    dl_all = (
-        labels.filter(F.col("lang") == "de")
-        .select(F.col("qid").alias("_dq"), F.col("label").alias("_dl"))
-        .transform(lazy_checkpoint)
-    )
-    for key, out in [("published_in", "published_in_de"), ("part_of", "part_of_de")]:
-        w = w.join(_maybe_bcast(dl_all), F.col(key) == F.col("_dq"), "left") \
-            .withColumnRenamed("_dl", out).drop("_dq")
-
-    # label_for (works.py:308-316): title_de→de, title_en→en, workLabel→'de',
-    # else Untitled→en. work_label is never null here (QID fallback), matching
-    # the label service which always returns a value.
-    label = F.coalesce("title_de", "title_en", "work_label", F.lit("Untitled"))
-    lang = (
-        F.when(F.col("title_de").isNotNull(), "de")
-        .when(F.col("title_en").isNotNull(), "en")
-        .when(F.col("work_label").isNotNull(), "de")
-        .otherwise("en")
-    )
-    # manifestation label (works.py:318-330 + override at 452-462):
-    # publishedIn → fetch_label(parent), elif partOf → fetch_label(parent),
-    # else expression label
-    manif_label = (
-        F.when(F.col("published_in").isNotNull(),
-               F.coalesce("published_in_de", F.lit("Untitled")))
-        .when(F.col("part_of").isNotNull(),
-              F.coalesce("part_of_de", F.lit("Untitled")))
-        .otherwise(label)
-    )
-    manif_lang = (
-        F.when(F.col("published_in").isNotNull(),
-               F.when(F.col("published_in_de").isNotNull(), "de").otherwise("en"))
-        .when(F.col("part_of").isNotNull(),
-              F.when(F.col("part_of_de").isNotNull(), "de").otherwise("en"))
-        .otherwise(lang)
-    )
-    return (
-        w.withColumn("label", label)
-        .withColumn("label_lang", lang)
-        .withColumn("manif_label", manif_label)
-        .withColumn("manif_lang", manif_lang)
-        .withColumn("creation_year", year_of("creation_date_raw"))
-        .withColumn("pub_year", year_of("pub_date_raw"))
-    )
+_WORK_LABELS = [("qid", "work_label"), ("genre_qid", "genre_label"),
+                ("author_qid", "author_label"), ("pub_place_qid", "pub_place_label"),
+                ("publisher_qid", "publisher_label"), ("editor_qid", "editor_label")]
 
 
 def work_rules() -> list[Rule]:
@@ -400,17 +282,108 @@ def works_stage(
     dedupe: bool = True,
     broadcast_labels: bool | None = None,
 ) -> DataFrame:
-    import os as _os
+    from .relations import LABEL_BROADCAST_MAX
 
-    if _os.environ.get("SPARK_GRAFT_SQL_STAGES", "1") != "0":
-        from .sql_stages import works_stage_sql
+    if broadcast_labels is None:
+        broadcast_labels = labels.count() <= LABEL_BROADCAST_MAX
+    emit = _emit_inline_sql(spark, work_rules(), "works")
+    header = _const_values_sql(sorted(works_header_triples())) \
+        if include_header else None
 
-        return works_stage_sql(
-            spark, work_qids, statements, labels,
-            include_header=include_header, dedupe=dedupe,
-            broadcast_labels=broadcast_labels)
-    wide = wide_works(work_qids, statements, labels, broadcast_labels)
-    triples = emit_triples(wide, work_rules())
-    if include_header:
-        triples = triples.unionByName(works_header(spark))
-    return dedupe_triples(triples) if dedupe else triples
+    slice_ctes = ",\n".join(
+        f"sl_{pid} AS (SELECT subject_qid AS qid, object_value AS v "
+        f"FROM stmts WHERE pid = '{pid}')"
+        for pid, _ in _WORK_SLICES)
+    slice_joins = "\n  ".join(
+        f"LEFT JOIN sl_{pid} {pid.lower()} ON {pid.lower()}.qid = w.qid"
+        for pid, _ in _WORK_SLICES)
+    svc_keys = ["w.qid", "p136.v", "p50.v", "p291.v", "p123.v", "p98.v"]
+    svc_joins = "\n  ".join(
+        f"LEFT JOIN svc s{i} ON s{i}._lq = {key}"
+        for i, key in enumerate(svc_keys))
+    svc_cols = ",\n    ".join(
+        # label-service en→de→key fallback; the work's own label falls back
+        # to its qid (works.py label service always returns a value)
+        f"coalesce(s{i}._len, s{i}._lde, {key}) AS {out}"
+        for i, (key, (_, out)) in enumerate(zip(svc_keys, _WORK_LABELS)))
+    if broadcast_labels:
+        bl = ", ".join([f"BROADCAST(s{i})" for i in range(6)]
+                       + ["BROADCAST(d1)", "BROADCAST(d2)"])
+        hint = f"/*+ {bl} */ "
+    else:
+        hint = ""
+
+    # reference parity of the CTEs: title_* = P1476 by language
+    # (works.py:254-255); pub = MIN(P577) per work (works.py:252); creation =
+    # P571 ∪ P2754, multiplicity kept (works.py:265); svc = label service
+    # en→de→QID; dl = fetch_label's required de label, else "Untitled"@en
+    # (works.py:285-305); label/label_lang = label_for (works.py:308-316);
+    # manif_* = manifestation label (works.py:318-330, override 452-462).
+    # work-QID membership broadcasts unconditionally (dimension-bounded,
+    # same rule as relations' in_W) so the statements scan never shuffles
+    # for the semi join — the inlined stmts copies each stay map-side.
+    query = _wrap(f"""
+WITH stmts AS (
+  SELECT /*+ BROADCAST(wq) */ subject_qid, pid, object_value
+  FROM {{statements}}
+  LEFT SEMI JOIN {{works2}} wq ON subject_qid = wq.qid
+),
+title_de AS (SELECT subject_qid AS qid, object_value AS v FROM {{statements}}
+             WHERE pid = 'P1476' AND object_lang = 'de'),
+title_en AS (SELECT subject_qid AS qid, object_value AS v FROM {{statements}}
+             WHERE pid = 'P1476' AND object_lang = 'en'),
+{slice_ctes},
+pub AS (SELECT subject_qid AS qid, min(object_value) AS pub_date_raw
+        FROM stmts WHERE pid = 'P577' GROUP BY subject_qid),
+creation AS (SELECT subject_qid AS qid, object_value AS creation_date_raw
+             FROM stmts WHERE pid IN ('P571', 'P2754')),
+svc AS (SELECT qid AS _lq,
+               min(CASE WHEN lang = 'en' THEN label END) AS _len,
+               min(CASE WHEN lang = 'de' THEN label END) AS _lde
+        FROM {{labels}} GROUP BY qid),
+dl AS (SELECT qid AS _dq, label AS _dl FROM {{labels}} WHERE lang = 'de'),
+joined AS (
+  SELECT {hint}
+    w.qid, td.v AS title_de, te.v AS title_en,
+    p136.v AS genre_qid, p50.v AS author_qid, p291.v AS pub_place_qid,
+    p123.v AS publisher_qid, p953.v AS digital_copy, p98.v AS editor_qid,
+    p1433.v AS published_in, p361.v AS part_of,
+    pub.pub_date_raw, cr.creation_date_raw,
+    {svc_cols},
+    d1._dl AS published_in_de, d2._dl AS part_of_de
+  FROM {{works}} w
+  LEFT JOIN title_de td ON td.qid = w.qid
+  LEFT JOIN title_en te ON te.qid = w.qid
+  {slice_joins}
+  LEFT JOIN pub ON pub.qid = w.qid
+  LEFT JOIN creation cr ON cr.qid = w.qid
+  {svc_joins}
+  LEFT JOIN dl d1 ON d1._dq = p1433.v
+  LEFT JOIN dl d2 ON d2._dq = p361.v
+),
+wide AS (
+  SELECT *,
+    coalesce(title_de, title_en, work_label, 'Untitled') AS label,
+    CASE WHEN title_de IS NOT NULL THEN 'de'
+         WHEN title_en IS NOT NULL THEN 'en'
+         WHEN work_label IS NOT NULL THEN 'de'
+         ELSE 'en' END AS label_lang,
+    substring(creation_date_raw, 1, 4) AS creation_year,
+    substring(pub_date_raw, 1, 4) AS pub_year
+  FROM joined
+),
+wide2 AS (
+  SELECT *,
+    CASE WHEN published_in IS NOT NULL THEN coalesce(published_in_de, 'Untitled')
+         WHEN part_of IS NOT NULL THEN coalesce(part_of_de, 'Untitled')
+         ELSE label END AS manif_label,
+    CASE WHEN published_in IS NOT NULL
+           THEN (CASE WHEN published_in_de IS NOT NULL THEN 'de' ELSE 'en' END)
+         WHEN part_of IS NOT NULL
+           THEN (CASE WHEN part_of_de IS NOT NULL THEN 'de' ELSE 'en' END)
+         ELSE label_lang END AS manif_lang
+  FROM wide
+)
+SELECT {emit} FROM wide2""", header, dedupe)
+    return spark.sql(query, statements=statements, works=work_qids,
+                     works2=work_qids, labels=labels)

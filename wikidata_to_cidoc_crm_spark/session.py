@@ -15,7 +15,18 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def default_cores() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
+def default_driver_memory() -> str:
+    """``$SPARK_DRIVER_MEM``, else half of the host's physical memory in
+    whole GiB (at least 1g): local mode runs every task inside the driver
+    JVM, and a fixed size can exceed a small host."""
+    if "SPARK_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_DRIVER_MEM"]
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, total // (2 << 30))}g"
 
 
 def get_spark(
@@ -27,7 +38,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``cores=None`` → ``local[$SPARK_GRAFT_CPUS]`` (default 32).
+    ``cores=None`` → ``local[default_cores()]``; the driver heap is
+    ``default_driver_memory()``.
     ``shuffle_partitions`` defaults to the core count — at cluster scale this
     is instead sized as ~2-3x total executor cores (and AQE coalesces).
     ``master`` overrides the local-mode default — used by the scaling bench
@@ -51,7 +63,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # broadcast builds sit downstream of lazily-checkpointed subtrees,
