@@ -2,7 +2,8 @@
 
 Runs the headline KG-construction pipeline plus representative operator
 queries at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
+``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this process may run on)
+and prints ONE JSON line::
 
     {"metric": "triples_per_sec", "value": N, "unit": "sec",
      "queries": {...}, "sf": ...}
@@ -20,7 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from wikidata_to_cidoc_crm_spark.session import get_spark  # noqa: E402
+from wikidata_to_cidoc_crm_spark.session import default_cores, get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -30,7 +31,7 @@ def main() -> None:
     # here and in tools/scaling_bench.py; general sessions use disk.
     os.environ.setdefault("SPARK_GRAFT_TMPFS_SCRATCH", "1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = default_cores()
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:

@@ -8,7 +8,7 @@ from wikidata_to_cidoc_crm_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cores=8, shuffle_partitions=8)
+    s = get_spark("tests", shuffle_partitions=8)
     yield s
 
 

@@ -53,6 +53,29 @@ def test_stage_runner_resume(spark, world, dims, tmp_path):
     assert out3 == out1
 
 
+def test_stage_runner_torn_metadata_rebuilds(spark, world, dims, tmp_path):
+    """A torn ``_metrics.json`` (crash mid-write) is a cache miss: the next
+    run rebuilds the stage instead of crashing on every resume."""
+    from wikidata_to_cidoc_crm_spark.pipeline import StageRunner
+
+    qids = spark.createDataFrame([(p["qid"],) for p in world.persons[:5]], "qid string")
+    built = []
+
+    def build():
+        built.append(1)
+        return authors_stage(spark, qids, dims["wd_statements"], dims["wd_labels"])
+
+    out1 = triples_to_python_set(StageRunner(spark, str(tmp_path)).run("authors", "fp1", build))
+    meta_path = tmp_path / "authors._metrics.json"
+    meta_path.write_text(meta_path.read_text()[:10])
+
+    r2 = StageRunner(spark, str(tmp_path))
+    out2 = triples_to_python_set(r2.run("authors", "fp1", build))
+    assert len(built) == 2 and not r2.metrics[0]["reused"]
+    assert out2 == out1
+    assert not list(tmp_path.glob("*.tmp"))
+
+
 def test_sinks_roundtrip_and_catalog_probe(spark, tmp_path):
     """write_triples: no Iceberg catalog in the sandbox -> bucket-partitioned
     parquet with identical layout; read_triples_table restores the frame."""

@@ -37,16 +37,13 @@ def test_multi_hop_uses_broadcast_for_dims(spark):
 
 
 def test_triple_fanout_is_shuffle_free(spark, dims):
-    from pyspark.sql import functions as F
-
-    from wikidata_to_cidoc_crm_spark.functions.uris import mint
     from wikidata_to_cidoc_crm_spark.model import Rule
-    from wikidata_to_cidoc_crm_spark.plans.sql_stages import _emit_inline_sql
+    from wikidata_to_cidoc_crm_spark.plans.sql_stages import _emit_inline_sql, mint
 
-    emit = _emit_inline_sql(spark, [
-        Rule(mint("person", "qid"), "p:x", F.col("label"), obj_is_iri=False),
-        Rule(mint("person", "qid"), "p:y", F.col("lang"), obj_is_iri=False),
-    ], "test:fanout")
+    emit = _emit_inline_sql([
+        Rule(mint("person", "qid"), "p:x", "label", obj_is_iri=False),
+        Rule(mint("person", "qid"), "p:y", "lang", obj_is_iri=False),
+    ])
     out = spark.sql(f"SELECT {emit} FROM {{t}}", t=dims["wd_labels"])
     plan = _plan(out, "simple")
     assert "Exchange" not in plan  # pure Project+Generate, no shuffle

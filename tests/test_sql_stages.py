@@ -8,6 +8,8 @@ shape of the compiled fan-out."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from wikidata_to_cidoc_crm_spark.model import triples_to_python_set
 
@@ -84,3 +86,19 @@ def test_triples_to_python_set_guard_raises(spark):
     with pytest.raises(ValueError, match="refusing to collect"):
         triples_to_python_set(big, max_rows=5)
     assert len(triples_to_python_set(big, max_rows=100)) == 10
+
+
+_tricky = st.text(alphabet=st.one_of(
+    st.sampled_from(["'", "\\", "%", "_", "\n", "\r", "\t", '"', "é", "ß", "中", "😀"]),
+    st.characters(blacklist_categories=("Cs",)),
+), max_size=40)
+
+
+@settings(max_examples=60, deadline=None)
+@given(s=_tricky)
+def test_q_round_trips_through_the_sql_parser(spark, s):
+    """Every rule constant reaches the emitted SQL through ``_q``; the
+    parsed literal must be the original string."""
+    from wikidata_to_cidoc_crm_spark.plans.sql_stages import _q
+
+    assert spark.sql(f"SELECT {_q(s)} AS v").first()["v"] == s

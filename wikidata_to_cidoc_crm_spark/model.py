@@ -8,10 +8,11 @@ replaces that with:
 * one canonical triple DataFrame schema ``(subj, pred, obj, obj_is_iri,
   lang, dtype)`` (SURVEY.md §1.2),
 * a declarative :class:`Rule` table per mapping stage — one rule per
-  reference ``g.add`` line — compiled by ``plans/sql_stages.py`` into a
-  single ``inline(array_compact(array(...)))`` projection, i.e. a
-  generated *triple fan-out* that stays entirely inside whole-stage
-  codegen (SURVEY.md §2.2 P13),
+  reference ``g.add`` line, its terms written as SQL expression text —
+  assembled by ``plans/sql_stages.py`` into a single
+  ``inline(array_compact(array(...)))`` projection, i.e. a generated
+  *triple fan-out* that stays entirely inside whole-stage codegen
+  (SURVEY.md §2.2 P13),
 * set semantics restored by a DISTINCT on the full triple key.
 
 Scale notes: the emission projection is narrow (strings only), shuffles
@@ -23,7 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 # --- Namespaces (behavioral parity: authors.py:33-40, works.py:34-43,
@@ -86,20 +87,22 @@ def intro(term: str) -> str:
 class Rule:
     """One triple-emission rule ≙ one ``g.add`` call in the reference.
 
-    ``subj``/``obj`` are Column expressions over the wide entity DataFrame;
-    ``pred`` is a constant IRI. ``lang`` may be a constant string or a
-    Column (works.py:468 uses a data-dependent lang). ``cond`` adds an
-    emission predicate beyond the implicit subj/obj non-null check.
-    ``ref`` cites the reference line implemented, for parity audits.
+    ``subj``, ``obj``, ``lang`` and ``cond`` are SQL expression text over
+    the stage's wide entity rows: a column name such as ``label``, an
+    expression built by ``sql_stages.mint``, or a constant quoted with
+    ``sql_stages._q`` (works.py:468 uses a data-dependent lang column).
+    ``cond`` adds an emission predicate beyond the implicit subj/obj
+    non-null check. ``pred`` and ``dtype`` are constant IRIs. ``ref``
+    cites the reference line implemented, for parity audits.
     """
 
-    subj: Column
+    subj: str
     pred: str
-    obj: Column
+    obj: str
     obj_is_iri: bool = True
-    lang: Column | str | None = None
+    lang: str | None = None
     dtype: str | None = None
-    cond: Column | None = None
+    cond: str | None = None
     ref: str = ""
 
 

@@ -37,6 +37,17 @@ from .session import lazy_checkpoint
 TRIPLE_BUCKETS = 64
 
 
+def _read_meta(path: str) -> dict | None:
+    """A stage's checkpoint metadata, or None when it is missing, torn or
+    malformed — the stage then rebuilds as on a cache miss."""
+    try:
+        with open(path) as f:
+            meta = json.load(f)
+    except (OSError, ValueError):
+        return None
+    return meta if isinstance(meta, dict) else None
+
+
 class StageRunner:
     """Checkpointed stage execution with lineage metrics.
 
@@ -135,17 +146,15 @@ class StageRunner:
             meta_path = os.path.join(self.dir, f"{name}._metrics.json")
             from .sources.sinks import read_triples_table, write_triples
 
-            if os.path.exists(meta_path):
-                with open(meta_path) as f:
-                    meta = json.load(f)
-                if meta.get("fingerprint") == fingerprint:
-                    # resume from the recorded target — an Iceberg table id
-                    # when a catalog was configured, the parquet path
-                    # otherwise (reading `path` unconditionally would fail
-                    # on Iceberg runs: no parquet was ever written there)
-                    df = read_triples_table(self.spark, meta.get("target", path))
-                    self.metrics.append({**meta, "reused": True})
-                    return df
+            meta = _read_meta(meta_path)
+            if meta is not None and meta.get("fingerprint") == fingerprint:
+                # resume from the recorded target — an Iceberg table id
+                # when a catalog was configured, the parquet path
+                # otherwise (reading `path` unconditionally would fail
+                # on Iceberg runs: no parquet was ever written there)
+                df = read_triples_table(self.spark, meta.get("target", path))
+                self.metrics.append({**meta, "reused": True})
+                return df
             df = build()
             # partition triple-shaped outputs by subject hash bucket
             # (north rule: repartition by subject-hash). write_triples uses
@@ -161,8 +170,12 @@ class StageRunner:
                 "wall_sec": round(time.time() - t0, 2),
                 "reused": False,
             }
-            with open(meta_path, "w") as f:
+            # write-then-rename: a crash mid-write leaves the old file or
+            # none, never a torn one
+            tmp = f"{meta_path}.tmp"
+            with open(tmp, "w") as f:
                 json.dump(meta, f)
+            os.replace(tmp, meta_path)
             self.metrics.append(meta)
             return out.drop("subj_bucket") if "subj_bucket" in out.columns else out
         # no checkpoint dir: truncate lineage in memory so downstream plans

@@ -28,9 +28,7 @@ dedup. The stage compiles to one ``spark.sql`` statement.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..functions.uris import mint, timespan_uri, wd_entity_uri
 from ..model import (
     ECRM,
     OWL_SAMEAS,
@@ -42,7 +40,16 @@ from ..model import (
     XSD,
     Rule,
 )
-from .sql_stages import _const_values_sql, _emit_inline_sql, _wrap
+from .sql_stages import (
+    EN,
+    _const_values_sql,
+    _emit_inline_sql,
+    _q,
+    _wrap,
+    mint,
+    timespan_uri,
+    wd_entity_uri,
+)
 
 AUTHOR_PIDS = ["P21", "P19", "P20", "P569", "P570", "P18"]
 XSD_DATE = XSD + "date"
@@ -55,55 +62,55 @@ def _event_rules(kind: str, date_col: str, place_qid: str, place_label: str,
     """Birth/death block (authors.py:299-335). Event exists iff date or place."""
     person = mint("person", "qid")
     event = mint(kind, "qid")
-    has_event = F.col(date_col).isNotNull() | F.col(place_qid).isNotNull()
+    has_event = f"{date_col} IS NOT NULL OR {place_qid} IS NOT NULL"
     ts = timespan_uri(date_col)
     place = mint("place", place_qid)
     ref = "authors.py:299-335"
     return [
         Rule(person, ECRM + inverse_prop, event, cond=has_event, ref=ref),
         Rule(event, ECRM + direct_prop, person, cond=has_event, ref=ref),
-        Rule(event, RDF_TYPE, ECRM + cls, cond=has_event, ref=ref),
+        Rule(event, RDF_TYPE, _q(ECRM + cls), cond=has_event, ref=ref),
         Rule(event, RDFS_LABEL,
-             F.format_string(f"{kind.capitalize()} of %s", "label"),
-             obj_is_iri=False, lang="en", cond=has_event, ref="authors.py:309"),
+             f"format_string({_q(kind.capitalize() + ' of %s')}, label)",
+             obj_is_iri=False, lang=EN, cond=has_event, ref="authors.py:309"),
         Rule(event, PROV_DERIVED, wd_entity_uri("qid"), cond=has_event,
              ref="authors.py:310"),
         # timespan (authors.py:313-321)
-        Rule(ts, RDF_TYPE, ECRM + "E52_Time-Span", ref="authors.py:316"),
-        Rule(ts, RDFS_LABEL, F.col(date_col), obj_is_iri=False,
+        Rule(ts, RDF_TYPE, _q(ECRM + "E52_Time-Span"), ref="authors.py:316"),
+        Rule(ts, RDFS_LABEL, date_col, obj_is_iri=False,
              dtype=XSD_DATE, ref="authors.py:317"),
         Rule(event, ECRM + "P4_has_time-span", ts, ref="authors.py:319"),
         Rule(ts, ECRM + "P4i_is_time-span_of", event, ref="authors.py:320"),
         # place (authors.py:323-334)
         Rule(event, ECRM + "P7_took_place_at", place, ref="authors.py:327"),
         Rule(place, ECRM + "P7i_witnessed", event, ref="authors.py:328"),
-        Rule(place, RDF_TYPE, ECRM + "E53_Place", ref="authors.py:329"),
+        Rule(place, RDF_TYPE, _q(ECRM + "E53_Place"), ref="authors.py:329"),
         Rule(place, OWL_SAMEAS, wd_entity_uri(place_qid), ref="authors.py:330"),
-        Rule(place, RDFS_LABEL, F.col(place_label), obj_is_iri=False,
-             lang="en", ref="authors.py:332-334"),
+        Rule(place, RDFS_LABEL, place_label, obj_is_iri=False,
+             lang=EN, ref="authors.py:332-334"),
     ]
 
 
 def author_rules() -> list[Rule]:
     person = mint("person", "qid")
     identifier = mint("identifier", "qid")
-    id_type = F.lit(ID_TYPE_WIKIDATA)
+    id_type = _q(ID_TYPE_WIKIDATA)
     rules = [
         # person core (authors.py:281-293)
-        Rule(person, RDF_TYPE, ECRM + "E21_Person", ref="authors.py:281"),
+        Rule(person, RDF_TYPE, _q(ECRM + "E21_Person"), ref="authors.py:281"),
         Rule(person, OWL_SAMEAS, wd_entity_uri("qid"), ref="authors.py:282"),
-        Rule(person, RDFS_LABEL, F.col("label"), obj_is_iri=False, lang="en",
+        Rule(person, RDFS_LABEL, "label", obj_is_iri=False, lang=EN,
              ref="authors.py:283"),
         Rule(person, ECRM + "P1_is_identified_by", identifier, ref="authors.py:285"),
         Rule(identifier, ECRM + "P1i_identifies", person, ref="authors.py:286"),
-        Rule(identifier, RDF_TYPE, ECRM + "E42_Identifier", ref="authors.py:287"),
-        Rule(identifier, RDFS_LABEL, F.col("qid"), obj_is_iri=False,
+        Rule(identifier, RDF_TYPE, _q(ECRM + "E42_Identifier"), ref="authors.py:287"),
+        Rule(identifier, RDFS_LABEL, "qid", obj_is_iri=False,
              ref="authors.py:288"),
         Rule(identifier, ECRM + "P2_has_type", id_type, ref="authors.py:289"),
         Rule(id_type, ECRM + "P2i_is_type_of", identifier, ref="authors.py:290"),
-        Rule(id_type, RDF_TYPE, ECRM + "E55_Type", ref="authors.py:291"),
-        Rule(id_type, RDFS_LABEL, F.lit("Wikidata ID"), obj_is_iri=False,
-             lang="en", ref="authors.py:292"),
+        Rule(id_type, RDF_TYPE, _q(ECRM + "E55_Type"), ref="authors.py:291"),
+        Rule(id_type, RDFS_LABEL, _q("Wikidata ID"), obj_is_iri=False,
+             lang=EN, ref="authors.py:292"),
     ]
     rules += _event_rules("birth", "birth_date", "birth_place_qid",
                           "birth_place_label", "E67_Birth",
@@ -113,40 +120,42 @@ def author_rules() -> list[Rule]:
                           "P100i_died_in", "P100_was_death_of")
 
     # gender block (authors.py:337-355) — requires gender AND genderLabel
-    has_gender = F.col("gender_qid").isNotNull() & F.col("gender_label").isNotNull()
+    has_gender = "gender_qid IS NOT NULL AND gender_label IS NOT NULL"
     gender = mint("gender", "gender_qid")
-    gtype = F.lit(GENDER_TYPE_WIKIDATA)
+    gtype = _q(GENDER_TYPE_WIKIDATA)
     rules += [
-        Rule(gender, RDF_TYPE, ECRM + "E55_Type", cond=has_gender, ref="authors.py:341"),
-        Rule(gender, RDFS_LABEL, F.col("gender_label"), obj_is_iri=False,
-             lang="en", cond=has_gender, ref="authors.py:342"),
+        Rule(gender, RDF_TYPE, _q(ECRM + "E55_Type"), cond=has_gender,
+             ref="authors.py:341"),
+        Rule(gender, RDFS_LABEL, "gender_label", obj_is_iri=False,
+             lang=EN, cond=has_gender, ref="authors.py:342"),
         Rule(gender, OWL_SAMEAS, wd_entity_uri("gender_qid"), cond=has_gender,
              ref="authors.py:343"),
         Rule(gender, ECRM + "P2_has_type", gtype, cond=has_gender, ref="authors.py:344"),
         Rule(gtype, ECRM + "P2i_is_type_of", gender, cond=has_gender, ref="authors.py:345-349"),
-        Rule(gtype, RDF_TYPE, ECRM + "E55_Type", cond=has_gender, ref="authors.py:351"),
-        Rule(gtype, RDFS_LABEL, F.lit("Wikidata Gender"), obj_is_iri=False,
-             lang="en", cond=has_gender, ref="authors.py:352"),
-        Rule(mint("person", "qid"), ECRM + "P2_has_type", gender,
+        Rule(gtype, RDF_TYPE, _q(ECRM + "E55_Type"), cond=has_gender,
+             ref="authors.py:351"),
+        Rule(gtype, RDFS_LABEL, _q("Wikidata Gender"), obj_is_iri=False,
+             lang=EN, cond=has_gender, ref="authors.py:352"),
+        Rule(person, ECRM + "P2_has_type", gender,
              cond=has_gender, ref="authors.py:354"),
-        Rule(gender, ECRM + "P2i_is_type_of", mint("person", "qid"),
+        Rule(gender, ECRM + "P2i_is_type_of", person,
              cond=has_gender, ref="authors.py:355"),
     ]
 
     # image block (authors.py:357-363; intended semantics per SURVEY §4.4.1)
-    has_image = F.col("image_url").isNotNull()
+    has_image = "image_url IS NOT NULL"
     visual = mint("visual_item", "qid")
     rules += [
-        Rule(visual, RDF_TYPE, ECRM + "E36_Visual_Item", cond=has_image,
+        Rule(visual, RDF_TYPE, _q(ECRM + "E36_Visual_Item"), cond=has_image,
              ref="authors.py:359"),
         Rule(visual, RDFS_LABEL,
-             F.format_string("Visual representation of %s", "label"),
-             obj_is_iri=False, lang="en", cond=has_image, ref="authors.py:360"),
+             "format_string('Visual representation of %s', label)",
+             obj_is_iri=False, lang=EN, cond=has_image, ref="authors.py:360"),
         Rule(visual, ECRM + "P138_represents", person, cond=has_image,
              ref="authors.py:361"),
         Rule(person, ECRM + "P138i_has_representation", visual, cond=has_image,
              ref="authors.py:361"),
-        Rule(visual, RDFS_SEEALSO, F.col("image_url"), cond=has_image,
+        Rule(visual, RDFS_SEEALSO, "image_url", cond=has_image,
              ref="authors.py:362 (intended)"),
         Rule(visual, PROV_DERIVED, wd_entity_uri("qid"), cond=has_image,
              ref="authors.py:363 (intended)"),
@@ -170,7 +179,7 @@ def authors_stage(
         broadcast_labels = labels.count() <= LABEL_BROADCAST_MAX
     hint = ("/*+ BROADCAST(l0), BROADCAST(l1), BROADCAST(l2), BROADCAST(l3) */ "
             if broadcast_labels else "")
-    emit = _emit_inline_sql(spark, author_rules(), "authors")
+    emit = _emit_inline_sql(author_rules())
     header = _const_values_sql(sorted(
         (s, p, o, ii, lang, dt)
         for (s, p, o, lang, dt, ii) in authors_header_triples()

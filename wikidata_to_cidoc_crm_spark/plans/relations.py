@@ -39,11 +39,10 @@ broadcast; the final dedup shuffles on the full triple key.
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..functions.uris import mint, wd_entity_uri
 from ..model import (
     ECRM,
     INTRO,
@@ -58,7 +57,15 @@ from ..model import (
     Rule,
 )
 from ..session import lazy_checkpoint
-from .sql_stages import _const_values_sql, _emit_inline_sql, _wrap
+from .sql_stages import (
+    EN,
+    _const_values_sql,
+    _emit_inline_sql,
+    _q,
+    _wrap,
+    mint,
+    wd_entity_uri,
+)
 
 ID_TYPE = SAPPHO + "id_type/wikidata"
 
@@ -87,15 +94,16 @@ FAMILIES = [
 LABEL_BROADCAST_MAX = 20_000_000
 
 
-def _identifier_rules(entity, qid_col: str) -> list[Rule]:
+def _identifier_rules(entity: str, qid_col: str) -> list[Rule]:
     """add_identifier (relations.py:170-180): 7 triples, lang-tagged label."""
     ident = mint("identifier", qid_col)
+    id_type = _q(ID_TYPE)
     ref = "relations.py:170-180"
     return [
-        Rule(ident, RDF_TYPE, ECRM + "E42_Identifier", ref=ref),
-        Rule(ident, RDFS_LABEL, F.col(qid_col), obj_is_iri=False, lang="en", ref=ref),
-        Rule(ident, ECRM + "P2_has_type", F.lit(ID_TYPE), ref=ref),
-        Rule(F.lit(ID_TYPE), ECRM + "P2i_is_type_of", ident, ref=ref),
+        Rule(ident, RDF_TYPE, _q(ECRM + "E42_Identifier"), ref=ref),
+        Rule(ident, RDFS_LABEL, qid_col, obj_is_iri=False, lang=EN, ref=ref),
+        Rule(ident, ECRM + "P2_has_type", id_type, ref=ref),
+        Rule(id_type, ECRM + "P2i_is_type_of", ident, ref=ref),
         Rule(ident, PROV_DERIVED, wd_entity_uri(qid_col), ref=ref),
         Rule(entity, ECRM + "P1_is_identified_by", ident, ref=ref),
         Rule(ident, ECRM + "P1i_identifies", entity, ref=ref),
@@ -105,195 +113,173 @@ def _identifier_rules(entity, qid_col: str) -> list[Rule]:
 # --- emission rule tables, one per source block of relations_stage ---
 
 def rel_rules() -> list[Rule]:
-    rel_label = F.format_string(
-        "Intertextual relation between %s and %s", "la", "lb")
     return [
-        Rule(F.col("rel"), RDF_TYPE, INTRO + "INT31_IntertextualRelation",
+        Rule("rel", RDF_TYPE, _q(INTRO + "INT31_IntertextualRelation"),
              ref="relations.py:286"),
-        Rule(F.col("rel"), RDFS_LABEL, rel_label, obj_is_iri=False, lang="en",
-             ref="relations.py:287-289"),
+        Rule("rel", RDFS_LABEL,
+             "format_string('Intertextual relation between %s and %s', la, lb)",
+             obj_is_iri=False, lang=EN, ref="relations.py:287-289"),
     ]
 
 
 def act_rules() -> list[Rule]:
     return [
-        Rule(F.col("act"), RDF_TYPE, INTRO + "INT2_ActualizationOfFeature",
+        Rule("act", RDF_TYPE, _q(INTRO + "INT2_ActualizationOfFeature"),
              ref="relations.py:246"),
-        Rule(F.col("act"), RDFS_LABEL, F.col("alabel"), obj_is_iri=False,
-             lang="en", ref="relations.py:247"),
-        Rule(F.col("feat_uri"), INTRO + "R17i_featureIsActualizedIn", F.col("act"),
+        Rule("act", RDFS_LABEL, "alabel", obj_is_iri=False, lang=EN,
+             ref="relations.py:247"),
+        Rule("feat_uri", INTRO + "R17i_featureIsActualizedIn", "act",
              ref="relations.py:249"),
-        Rule(F.col("act"), INTRO + "R17_actualizesFeature", F.col("feat_uri"),
+        Rule("act", INTRO + "R17_actualizesFeature", "feat_uri",
              ref="relations.py:250"),
-        Rule(F.col("act"), INTRO + "R18i_actualizationFoundOn", F.col("expr"),
+        Rule("act", INTRO + "R18i_actualizationFoundOn", "expr",
              ref="relations.py:252"),
-        Rule(F.col("expr"), INTRO + "R18_showsActualization", F.col("act"),
+        Rule("expr", INTRO + "R18_showsActualization", "act",
              ref="relations.py:253"),
         # first-pair-wins R24 links (relations.py:255-258)
-        Rule(F.col("act"), INTRO + "R24i_isRelatedEntity", F.col("rel"),
-             ref="relations.py:255"),
-        Rule(F.col("rel"), INTRO + "R24_hasRelatedEntity", F.col("act"),
-             ref="relations.py:256"),
-        Rule(F.col("expr"), INTRO + "R24i_isRelatedEntity", F.col("rel"),
-             ref="relations.py:257"),
-        Rule(F.col("rel"), INTRO + "R24_hasRelatedEntity", F.col("expr"),
-             ref="relations.py:258"),
+        Rule("act", INTRO + "R24i_isRelatedEntity", "rel", ref="relations.py:255"),
+        Rule("rel", INTRO + "R24_hasRelatedEntity", "act", ref="relations.py:256"),
+        Rule("expr", INTRO + "R24i_isRelatedEntity", "rel", ref="relations.py:257"),
+        Rule("rel", INTRO + "R24_hasRelatedEntity", "expr", ref="relations.py:258"),
     ]
 
 
-def _interp_cols():
-    interp_feat = F.concat(F.lit(SAPPHO + "feature/interpretation/"), F.col("tid"))
-    interp_act = F.concat(F.lit(SAPPHO + "actualization/interpretation/"), F.col("tid"))
-    return interp_feat, interp_act
+_INTERP_FEAT = mint("feature/interpretation", "tid")
+_INTERP_ACT = mint("actualization/interpretation", "tid")
 
 
 def interp_creation_rules() -> list[Rule]:
-    interp_feat, interp_act = _interp_cols()
     return [
-        Rule(interp_feat, RDF_TYPE, INTRO + "INT_Interpretation",
+        Rule(_INTERP_FEAT, RDF_TYPE, _q(INTRO + "INT_Interpretation"),
              ref="relations.py:210"),
-        Rule(interp_feat, RDFS_LABEL, F.col("ilabel"), obj_is_iri=False,
-             lang="en", ref="relations.py:211"),
-        Rule(interp_act, RDF_TYPE, INTRO + "INT2_ActualizationOfFeature",
+        Rule(_INTERP_FEAT, RDFS_LABEL, "ilabel", obj_is_iri=False, lang=EN,
+             ref="relations.py:211"),
+        Rule(_INTERP_ACT, RDF_TYPE, _q(INTRO + "INT2_ActualizationOfFeature"),
              ref="relations.py:214"),
-        Rule(interp_act, RDFS_LABEL, F.col("ilabel"), obj_is_iri=False,
-             lang="en", ref="relations.py:215"),
-        Rule(interp_feat, INTRO + "R17i_featureIsActualizedIn", interp_act,
+        Rule(_INTERP_ACT, RDFS_LABEL, "ilabel", obj_is_iri=False, lang=EN,
+             ref="relations.py:215"),
+        Rule(_INTERP_FEAT, INTRO + "R17i_featureIsActualizedIn", _INTERP_ACT,
              ref="relations.py:224"),
-        Rule(interp_act, INTRO + "R17_actualizesFeature", interp_feat,
+        Rule(_INTERP_ACT, INTRO + "R17_actualizesFeature", _INTERP_FEAT,
              ref="relations.py:225"),
     ]
 
 
 def interp_derived_rules() -> list[Rule]:
-    _, interp_act = _interp_cols()
-    return [Rule(interp_act, PROV_DERIVED, wd_entity_uri("dq"),
+    return [Rule(_INTERP_ACT, PROV_DERIVED, wd_entity_uri("dq"),
                  ref="relations.py:219-221")]
 
 
 def interp_links_rules() -> list[Rule]:
-    _, interp_act = _interp_cols()
     return [
-        Rule(interp_act, INTRO + "R21_identifies", F.col("target"),
+        Rule(_INTERP_ACT, INTRO + "R21_identifies", "target",
              ref="relations.py:227"),
-        Rule(F.col("target"), INTRO + "R21i_isIdentifiedBy", interp_act,
+        Rule("target", INTRO + "R21i_isIdentifiedBy", _INTERP_ACT,
              ref="relations.py:228"),
     ]
 
 
 def r22_rules() -> list[Rule]:
     return [
-        Rule(F.col("feat_uri"), INTRO + "R22_providesSimilarityForRelation",
-             F.col("rel"), ref="relations.py:396-398"),
-        Rule(F.col("rel"), INTRO + "R22i_relationIsBasedOnSimilarity",
-             F.col("feat_uri"), ref="relations.py:396-398"),
+        Rule("feat_uri", INTRO + "R22_providesSimilarityForRelation", "rel",
+             ref="relations.py:396-398"),
+        Rule("rel", INTRO + "R22i_relationIsBasedOnSimilarity", "feat_uri",
+             ref="relations.py:396-398"),
     ]
 
 
 def p67_rules() -> list[Rule]:
     return [
-        Rule(F.col("act"), ECRM + "P67_refers_to", F.col("p67_target"),
+        Rule("act", ECRM + "P67_refers_to", "p67_target",
              ref="relations.py:552-558"),
-        Rule(F.col("p67_target"), ECRM + "P67i_is_referred_to_by", F.col("act"),
+        Rule("p67_target", ECRM + "P67i_is_referred_to_by", "act",
              ref="relations.py:552-558"),
     ]
 
 
 def feat_node_rules() -> list[Rule]:
-    cls_map = F.create_map(*[x for f in FAMILIES for x in (F.lit(f[0]), F.lit(f[4]))])
-    flabel_col = (
-        F.when(F.col("family") == "plot", F.format_string("%s (plot)", "tlbl"))
-        .when(F.col("family") == "topic", F.format_string("%s (topic)", "tlbl"))
-        .when(F.col("family") == "motif", F.format_string("%s (motif)", "tlbl"))
-        .when(F.col("family") == "person_ref",
-              F.format_string("Reference to %s (person)", "tlbl"))
-        .when(F.col("family") == "place_ref",
-              F.format_string("Reference to %s (place)", "tlbl"))
-        .otherwise(F.col("tlbl"))  # character (no suffix, relations.py:737)
-    )
-    is_entity_feat = F.col("family").isin(["plot", "topic", "motif", "character"])
+    cls = "CASE family " + " ".join(
+        f"WHEN {_q(f[0])} THEN {_q(f[4])}" for f in FAMILIES) + " END"
+    # character has no suffix (relations.py:737)
+    flabel = "CASE family " + " ".join(
+        f"WHEN {_q(f[0])} THEN format_string({_q(f[5])}, tlbl)"
+        for f in FAMILIES if f[0] != "character") + " ELSE tlbl END"
+    is_entity_feat = "family IN ('plot', 'topic', 'motif', 'character')"
     return [
-        Rule(F.col("feat_uri"), RDF_TYPE, cls_map[F.col("family")],
+        Rule("feat_uri", RDF_TYPE, cls, ref="relations.py:182-203"),
+        Rule("feat_uri", RDFS_LABEL, flabel, obj_is_iri=False, lang=EN,
              ref="relations.py:182-203"),
-        Rule(F.col("feat_uri"), RDFS_LABEL, flabel_col,
-             obj_is_iri=False, lang="en", ref="relations.py:182-203"),
-        Rule(F.col("feat_uri"), OWL_SAMEAS, wd_entity_uri("tgt"),
+        Rule("feat_uri", OWL_SAMEAS, wd_entity_uri("tgt"),
              cond=is_entity_feat, ref="relations.py:196-198"),
-    ] + [
-        Rule(r.subj, r.pred, r.obj, obj_is_iri=r.obj_is_iri, lang=r.lang,
-             dtype=r.dtype, cond=is_entity_feat, ref=r.ref)
-        for r in _identifier_rules(F.col("feat_uri"), "tgt")
-    ]
+    ] + [replace(r, cond=is_entity_feat)
+         for r in _identifier_rules("feat_uri", "tgt")]
 
 
 def person_node_rules() -> list[Rule]:
+    person = mint("person", "tgt")
     return [
-        Rule(mint("person", "tgt"), RDF_TYPE, ECRM + "E21_Person",
-             ref="relations.py:530-537"),
-        Rule(mint("person", "tgt"), RDFS_LABEL, F.col("tlbl"), obj_is_iri=False,
-             lang="en", ref="relations.py:531"),
-        Rule(mint("person", "tgt"), OWL_SAMEAS, wd_entity_uri("tgt"),
-             ref="relations.py:532"),
-    ] + _identifier_rules(mint("person", "tgt"), "tgt")
+        Rule(person, RDF_TYPE, _q(ECRM + "E21_Person"), ref="relations.py:530-537"),
+        Rule(person, RDFS_LABEL, "tlbl", obj_is_iri=False, lang=EN,
+             ref="relations.py:531"),
+        Rule(person, OWL_SAMEAS, wd_entity_uri("tgt"), ref="relations.py:532"),
+    ] + _identifier_rules(person, "tgt")
 
 
 def charp_feat_rules() -> list[Rule]:
+    feat = mint("feature/person_ref", "tgt")
     return [
-        Rule(F.concat(F.lit(SAPPHO + "feature/person_ref/"), "tgt"), RDF_TYPE,
-             INTRO + "INT18_Reference", ref="relations.py:681-683"),
-        Rule(F.concat(F.lit(SAPPHO + "feature/person_ref/"), "tgt"), RDFS_LABEL,
-             F.format_string("Reference to %s (person)", "tlbl"),
-             obj_is_iri=False, lang="en", ref="relations.py:683"),
+        Rule(feat, RDF_TYPE, _q(INTRO + "INT18_Reference"),
+             ref="relations.py:681-683"),
+        Rule(feat, RDFS_LABEL, "format_string('Reference to %s (person)', tlbl)",
+             obj_is_iri=False, lang=EN, ref="relations.py:683"),
     ]
 
 
 def place_node_rules() -> list[Rule]:
+    place = mint("place", "tgt")
     return [
-        Rule(mint("place", "tgt"), RDF_TYPE, ECRM + "E53_Place",
-             ref="relations.py:584-591"),
-        Rule(mint("place", "tgt"), RDFS_LABEL, F.col("tlbl"), obj_is_iri=False,
-             lang="en", ref="relations.py:585"),
-        Rule(mint("place", "tgt"), OWL_SAMEAS, wd_entity_uri("tgt"),
-             ref="relations.py:586"),
-    ] + _identifier_rules(mint("place", "tgt"), "tgt")
+        Rule(place, RDF_TYPE, _q(ECRM + "E53_Place"), ref="relations.py:584-591"),
+        Rule(place, RDFS_LABEL, "tlbl", obj_is_iri=False, lang=EN,
+             ref="relations.py:585"),
+        Rule(place, OWL_SAMEAS, wd_entity_uri("tgt"), ref="relations.py:586"),
+    ] + _identifier_rules(place, "tgt")
 
 
 def workref_feat_rules() -> list[Rule]:
+    feat = mint("feature/work_ref", "tgt")
     return [
-        Rule(F.concat(F.lit(SAPPHO + "feature/work_ref/"), "tgt"), RDF_TYPE,
-             INTRO + "INT18_Reference", ref="relations.py:641-644"),
-        Rule(F.concat(F.lit(SAPPHO + "feature/work_ref/"), "tgt"), RDFS_LABEL,
-             F.format_string("Reference to %s (expression)", "tlbl"),
-             obj_is_iri=False, lang="en", ref="relations.py:644"),
+        Rule(feat, RDF_TYPE, _q(INTRO + "INT18_Reference"),
+             ref="relations.py:641-644"),
+        Rule(feat, RDFS_LABEL,
+             "format_string('Reference to %s (expression)', tlbl)",
+             obj_is_iri=False, lang=EN, ref="relations.py:644"),
     ]
 
 
 def expr_rules() -> list[Rule]:
+    expr = mint("expression", "q")
     return [
-        Rule(mint("expression", "q"), RDF_TYPE, LRMOO + "F2_Expression",
-             ref="relations.py:184"),
-        Rule(mint("expression", "q"), RDFS_LABEL,
-             F.format_string("Expression of %s", "qlbl"), obj_is_iri=False,
-             lang="en", ref="relations.py:185"),
-        Rule(mint("expression", "q"), OWL_SAMEAS, wd_entity_uri("q"),
-             ref="relations.py:186"),
+        Rule(expr, RDF_TYPE, _q(LRMOO + "F2_Expression"), ref="relations.py:184"),
+        Rule(expr, RDFS_LABEL, "format_string('Expression of %s', qlbl)",
+             obj_is_iri=False, lang=EN, ref="relations.py:185"),
+        Rule(expr, OWL_SAMEAS, wd_entity_uri("q"), ref="relations.py:186"),
     ]
 
 
 def tp_rules() -> list[Rule]:
     rules: list[Rule] = []
     for host, other, hl in [("tgt", "src", "tlbl"), ("src", "tgt", "slbl")]:
-        tp = F.concat(F.lit(SAPPHO + "textpassage/"), F.col(host), F.lit("_"), F.col(other))
+        tp = mint("textpassage", f"concat({host}, '_', {other})")
         host_expr = mint("expression", host)
         rules += [
-            Rule(tp, RDF_TYPE, INTRO + "INT21_TextPassage", ref="relations.py:801"),
-            Rule(tp, RDFS_LABEL, F.format_string("Text passage in %s", hl),
-                 obj_is_iri=False, lang="en", ref="relations.py:802"),
+            Rule(tp, RDF_TYPE, _q(INTRO + "INT21_TextPassage"), ref="relations.py:801"),
+            Rule(tp, RDFS_LABEL, f"format_string('Text passage in %s', {hl})",
+                 obj_is_iri=False, lang=EN, ref="relations.py:802"),
             Rule(tp, PROV_DERIVED, wd_entity_uri("tgt"), ref="relations.py:803"),
             Rule(host_expr, INTRO + "R30_hasTextPassage", tp, ref="relations.py:805"),
             Rule(tp, INTRO + "R30i_isTextPassageOf", host_expr, ref="relations.py:806"),
-            Rule(F.col("rel"), INTRO + "R24_hasRelatedEntity", tp, ref="relations.py:807"),
-            Rule(tp, INTRO + "R24i_isRelatedEntity", F.col("rel"), ref="relations.py:808"),
+            Rule("rel", INTRO + "R24_hasRelatedEntity", tp, ref="relations.py:807"),
+            Rule(tp, INTRO + "R24i_isRelatedEntity", "rel", ref="relations.py:808"),
         ]
     return rules
 
@@ -608,17 +594,16 @@ SELECT *, row_number() OVER (
 FROM cand""", rels=rels, acts=acts).transform(lazy_checkpoint)
 
     # --- ONE emission query over the checkpointed blocks ---
-    e = lambda name, rules: _emit_inline_sql(spark, rules, f"relations:{name}")  # noqa: E731
     branches = [
-        f"SELECT {e('rel', rel_rules())} FROM {{rels}}",
-        f"SELECT {e('act', act_rules())} FROM {{acts}}",
-        f"SELECT {e('interp_creation', interp_creation_rules())} "
+        f"SELECT {_emit_inline_sql(rel_rules())} FROM {{rels}}",
+        f"SELECT {_emit_inline_sql(act_rules())} FROM {{acts}}",
+        f"SELECT {_emit_inline_sql(interp_creation_rules())} "
         "FROM {interp} WHERE _rank = 1",
-        f"SELECT {e('interp_derived', interp_derived_rules())} FROM "
+        f"SELECT {_emit_inline_sql(interp_derived_rules())} FROM "
         "(SELECT tid, explode(derived) AS dq FROM {interp2} WHERE _rank = 1)",
-        f"SELECT {e('interp_links', interp_links_rules())} FROM {{interp3}}",
+        f"SELECT {_emit_inline_sql(interp_links_rules())} FROM {{interp3}}",
         # R22 similarity links: per (feature, pair) for ALL pairs
-        f"""SELECT {e('r22', r22_rules())} FROM (
+        f"""SELECT {_emit_inline_sql(r22_rules())} FROM (
   SELECT concat('{SAPPHO}feature/', family, '/', tgt) AS feat_uri,
          concat('{SAPPHO}relation/', w1, '_', w2) AS rel
   FROM {{pairs}}
@@ -628,7 +613,7 @@ FROM cand""", rels=rels, acts=acts).transform(lazy_checkpoint)
   FROM {{workref2}} WHERE work <> tgt
 )""",
         # P67 reference links per act
-        f"""SELECT {e('p67', p67_rules())} FROM (
+        f"""SELECT {_emit_inline_sql(p67_rules())} FROM (
   SELECT act, CASE WHEN family = 'person_ref'
                    THEN concat('{SAPPHO}person/', tgt)
                    ELSE concat('{SAPPHO}place/', tgt) END AS p67_target
@@ -643,14 +628,14 @@ FROM cand""", rels=rels, acts=acts).transform(lazy_checkpoint)
   FROM {{acts4}} WHERE family = 'work_ref'
 )""",
         # feature nodes over the qualifying (family, tgt) set
-        f"""SELECT {e('feat', feat_node_rules())} FROM (
+        f"""SELECT {_emit_inline_sql(feat_node_rules())} FROM (
   SELECT {lab_hint('l')} f.family, f.tgt, coalesce(l.__lv, f.tgt) AS tlbl,
          concat('{SAPPHO}feature/', f.family, '/', f.tgt) AS feat_uri
   FROM (SELECT DISTINCT family, tgt FROM {{qfw2}}) f
   LEFT JOIN {{lab2}} l ON f.tgt = l.__lk
 )""",
         # person nodes: person_ref targets ∪ person-typed character targets
-        f"""SELECT {e('person', person_node_rules())} FROM (
+        f"""SELECT {_emit_inline_sql(person_node_rules())} FROM (
   SELECT {lab_hint('l')} p.tgt, coalesce(l.__lv, p.tgt) AS tlbl FROM (
     SELECT DISTINCT tgt FROM {{qfw3}} WHERE family = 'person_ref'
     UNION
@@ -660,26 +645,26 @@ FROM cand""", rels=rels, acts=acts).transform(lazy_checkpoint)
   ) p LEFT JOIN {{lab3}} l ON p.tgt = l.__lk
 )""",
         # person_ref feature nodes for person-characters
-        f"""SELECT {e('charp_feat', charp_feat_rules())} FROM (
+        f"""SELECT {_emit_inline_sql(charp_feat_rules())} FROM (
   SELECT {lab_hint('l')} t.tgt, coalesce(l.__lv, t.tgt) AS tlbl
   FROM (SELECT DISTINCT tgt FROM {{qfw5}} WHERE family = 'character') t
   LEFT SEMI JOIN {{charp3}} c ON t.tgt = c.cq
   LEFT JOIN {{lab4}} l ON t.tgt = l.__lk
 )""",
         # place nodes
-        f"""SELECT {e('place', place_node_rules())} FROM (
+        f"""SELECT {_emit_inline_sql(place_node_rules())} FROM (
   SELECT {lab_hint('l')} t.tgt, coalesce(l.__lv, t.tgt) AS tlbl
   FROM (SELECT DISTINCT tgt FROM {{qfw6}} WHERE family = 'place_ref') t
   LEFT JOIN {{lab5}} l ON t.tgt = l.__lk
 )""",
         # work_ref feature nodes — every target, no ≥2 gate
-        f"""SELECT {e('workref_feat', workref_feat_rules())} FROM (
+        f"""SELECT {_emit_inline_sql(workref_feat_rules())} FROM (
   SELECT {lab_hint('l')} t.tgt, coalesce(l.__lv, t.tgt) AS tlbl
   FROM (SELECT DISTINCT tgt FROM {{workref3}}) t
   LEFT JOIN {{lab6}} l ON t.tgt = l.__lk
 )""",
         # expressions ensured across processors
-        f"""SELECT {e('expr', expr_rules())} FROM (
+        f"""SELECT {_emit_inline_sql(expr_rules())} FROM (
   SELECT {lab_hint('l')} u.q, coalesce(l.__lv, u.q) AS qlbl FROM (
     SELECT DISTINCT q FROM (
       SELECT w1 AS q FROM {{pairs2}} UNION ALL SELECT w2 FROM {{pairs3}}
@@ -691,7 +676,7 @@ FROM cand""", rels=rels, acts=acts).transform(lazy_checkpoint)
   ) u LEFT JOIN {{lab7}} l ON u.q = l.__lk
 )""",
         # citation text passages (relations.py:795-816)
-        f"""SELECT {e('tp', tp_rules())} FROM (
+        f"""SELECT {_emit_inline_sql(tp_rules())} FROM (
   SELECT {lab_hint('ls', 'lt')} c.src, c.tgt,
          coalesce(ls.__lv, c.src) AS slbl, coalesce(lt.__lv, c.tgt) AS tlbl,
          concat('{SAPPHO}relation/', least(c.src, c.tgt), '_',

@@ -8,74 +8,65 @@ the salted pair join and the first-partner window are spelled out in the
 SQL text of each stage module.
 
 The triple-emission ``Rule`` tables stay the single source of truth for
-what a stage emits. ``_emit_inline_sql`` turns a table into one
-``inline(array_compact(array(CASE ...)))`` fan-out by converting the rule
-Columns to SQL text through the session's ColumnNode→Expression converter
-(classic mode). ``_const_values_sql`` spells a constant triple block as a
-VALUES select, and ``_wrap`` unions emission and header under an optional
-full-key DISTINCT.
+what a stage emits. Their terms are SQL expression text (constants quoted
+with ``_q`` at the rule site; ``mint``/``wd_entity_uri``/``timespan_uri``
+build the IRI expressions), so ``_emit_inline_sql`` is plain string
+assembly into one ``inline(array_compact(array(CASE ...)))`` fan-out.
+``_const_values_sql`` spells a constant triple block as a VALUES select,
+and ``_wrap`` unions emission and header under an optional full-key
+DISTINCT.
 """
 
 from __future__ import annotations
 
-import threading
-
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
-_compile_lock = threading.Lock()
-_EMIT_CACHE: dict[str, str] = {}
-
-
-def _col_sql(spark: SparkSession, col) -> str:
-    """Unresolved Column → parseable SQL text (classic-mode converter).
-
-    Spark's FunctionRegistry registers operators under function names
-    (``and``, ``>``, ``isnotnull`` …), so ``Expression.sql()`` output
-    round-trips through the parser; the golden and DuckDB-twin suites pin
-    the round-trip by comparing full stage outputs."""
-    return spark._jsparkSession.converter().apply(col._jc.node()).sql()
-
-
-def _emit_inline_sql(spark: SparkSession, rules, cache_key: str) -> str:
-    """Compile a Rule table to ``inline(array_compact(array(CASE …)))``:
-    one struct per rule, null when the rule's condition or the subject/
-    object non-null check fails, pruned by ``array_compact`` and expanded
-    by one Generate, so the fan-out shuffles nothing and stays inside
-    whole-stage codegen. Cached per rule table: the py4j conversion costs
-    ~0.5 s for a 90-rule list and the tables are static."""
-    with _compile_lock:
-        if cache_key in _EMIT_CACHE:
-            return _EMIT_CACHE[cache_key]
-        structs = []
-        for r in rules:
-            subj = F.lit(r.subj) if isinstance(r.subj, str) else r.subj
-            obj = F.lit(r.obj) if isinstance(r.obj, str) else r.obj
-            cond = subj.isNotNull() & obj.isNotNull()
-            if r.cond is not None:
-                cond = cond & r.cond
-            if r.lang is None:
-                langc = F.lit(None).cast("string")
-            elif isinstance(r.lang, str):
-                langc = F.lit(r.lang)
-            else:
-                langc = r.lang.cast("string")
-            structs.append(F.when(cond, F.struct(
-                subj.cast("string").alias("subj"),
-                F.lit(r.pred).alias("pred"),
-                obj.cast("string").alias("obj"),
-                F.lit(bool(r.obj_is_iri)).alias("obj_is_iri"),
-                langc.alias("lang"),
-                F.lit(r.dtype).cast("string").alias("dtype"),
-            )))
-        arr = F.array_compact(F.array(*structs))
-        sql = f"inline({_col_sql(spark, arr)})"
-        _EMIT_CACHE[cache_key] = sql
-        return sql
+from ..model import SAPPHO, WD
 
 
 def _q(s) -> str:
     return "'" + str(s).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+EN = _q("en")
+
+
+def mint(kind: str, key: str) -> str:
+    """``https://sappho-digital.com/{kind}/{key}``; ``key`` is SQL text
+    (the reference's f-string mints, e.g. authors.py:277-279)."""
+    return f"concat({_q(f'{SAPPHO}{kind}/')}, {key})"
+
+
+def wd_entity_uri(qid: str) -> str:
+    """``http://www.wikidata.org/entity/{qid}`` (authors.py:267)."""
+    return f"concat({_q(WD)}, {qid})"
+
+
+def timespan_uri(date_value: str) -> str:
+    """date ``YYYY-MM-DD`` → ``timespan/YYYYMMDD``; year → ``timespan/YYYY``
+    (authors.py:295-296, works.py:435-443)."""
+    return mint("timespan", f"regexp_replace({date_value}, '-', '')")
+
+
+def _emit_inline_sql(rules) -> str:
+    """Compile a Rule table to ``inline(array_compact(array(CASE …)))``:
+    one struct per rule, null when the rule's condition or the subject/
+    object non-null check fails, pruned by ``array_compact`` and expanded
+    by one Generate, so the fan-out shuffles nothing and stays inside
+    whole-stage codegen."""
+    structs = []
+    for r in rules:
+        cond = f"({r.subj}) IS NOT NULL AND ({r.obj}) IS NOT NULL"
+        if r.cond is not None:
+            cond += f" AND ({r.cond})"
+        lang = "NULL" if r.lang is None else r.lang
+        dtype = "NULL" if r.dtype is None else _q(r.dtype)
+        structs.append(
+            f"CASE WHEN {cond} THEN named_struct("
+            f"'subj', CAST({r.subj} AS STRING), 'pred', {_q(r.pred)}, "
+            f"'obj', CAST({r.obj} AS STRING), "
+            f"'obj_is_iri', {'true' if r.obj_is_iri else 'false'}, "
+            f"'lang', CAST({lang} AS STRING), "
+            f"'dtype', CAST({dtype} AS STRING)) END")
+    return "inline(array_compact(array(\n  " + ",\n  ".join(structs) + ")))"
 
 
 def _const_values_sql(triples) -> str:

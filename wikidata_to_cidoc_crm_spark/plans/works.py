@@ -27,9 +27,7 @@ label dimension's size, LABEL_BROADCAST_MAX). The stage compiles to one
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..functions.uris import mint, wd_entity_uri
 from ..model import (
     ECRM,
     LRMOO,
@@ -43,7 +41,15 @@ from ..model import (
     Rule,
 )
 from .constants import works_header_triples
-from .sql_stages import _const_values_sql, _emit_inline_sql, _wrap
+from .sql_stages import (
+    EN,
+    _const_values_sql,
+    _emit_inline_sql,
+    _q,
+    _wrap,
+    mint,
+    wd_entity_uri,
+)
 
 XSD_GYEAR = XSD + "gYear"
 ID_TYPE_WIKIDATA = SAPPHO + "id_type/wikidata"
@@ -66,21 +72,20 @@ def work_rules() -> list[Rule]:
     work = mint("work", "qid")
     expr = mint("expression", "qid")
     wd_uri = wd_entity_uri("qid")
-    lbl = F.col("label")
     rules = [
         # work core (works.py:361-364)
-        Rule(work, RDF_TYPE, LRMOO + "F1_Work", ref="works.py:361"),
-        Rule(work, RDFS_LABEL, F.format_string("Work of %s", "label"),
-             obj_is_iri=False, lang="en", ref="works.py:362"),
+        Rule(work, RDF_TYPE, _q(LRMOO + "F1_Work"), ref="works.py:361"),
+        Rule(work, RDFS_LABEL, "format_string('Work of %s', label)",
+             obj_is_iri=False, lang=EN, ref="works.py:362"),
         Rule(work, LRMOO + "R3_is_realised_in", expr, ref="works.py:363"),
         Rule(expr, LRMOO + "R3i_realises", work, ref="works.py:364"),
     ]
     # work creation (works.py:367-372)
     wc = mint("work_creation", "qid")
     rules += [
-        Rule(wc, RDF_TYPE, LRMOO + "F27_Work_Creation", ref="works.py:367"),
-        Rule(wc, RDFS_LABEL, F.format_string("Work creation of %s", "label"),
-             obj_is_iri=False, lang="en", ref="works.py:368"),
+        Rule(wc, RDF_TYPE, _q(LRMOO + "F27_Work_Creation"), ref="works.py:367"),
+        Rule(wc, RDFS_LABEL, "format_string('Work creation of %s', label)",
+             obj_is_iri=False, lang=EN, ref="works.py:368"),
         Rule(wc, LRMOO + "R16_created", work, ref="works.py:369"),
         Rule(work, LRMOO + "R16i_was_created_by", wc, ref="works.py:370"),
         Rule(wc, PROV_DERIVED, wd_uri, ref="works.py:371"),
@@ -90,32 +95,32 @@ def work_rules() -> list[Rule]:
     rules += [
         Rule(wc, ECRM + "P14_carried_out_by", author, ref="works.py:376"),
         Rule(author, ECRM + "P14i_performed", wc, ref="works.py:377"),
-        Rule(author, RDF_TYPE, ECRM + "E21_Person", ref="works.py:379"),
-        Rule(author, RDFS_LABEL, F.col("author_label"), obj_is_iri=False,
+        Rule(author, RDF_TYPE, _q(ECRM + "E21_Person"), ref="works.py:379"),
+        Rule(author, RDFS_LABEL, "author_label", obj_is_iri=False,
              ref="works.py:380 (no lang tag)"),
         Rule(author, OWL_SAMEAS, wd_entity_uri("author_qid"), ref="works.py:381"),
     ]
     # expression core + identifier + id_type + title (works.py:385-403)
     ident = mint("identifier", "qid")
-    id_type = F.lit(ID_TYPE_WIKIDATA)
+    id_type = _q(ID_TYPE_WIKIDATA)
     title = mint("title/expression", "qid")
     rules += [
-        Rule(expr, RDF_TYPE, LRMOO + "F2_Expression", ref="works.py:385"),
-        Rule(expr, RDFS_LABEL, F.format_string("Expression of %s", "label"),
-             obj_is_iri=False, lang="en", ref="works.py:386"),
+        Rule(expr, RDF_TYPE, _q(LRMOO + "F2_Expression"), ref="works.py:385"),
+        Rule(expr, RDFS_LABEL, "format_string('Expression of %s', label)",
+             obj_is_iri=False, lang=EN, ref="works.py:386"),
         Rule(expr, ECRM + "P1_is_identified_by", ident, ref="works.py:388"),
         Rule(ident, ECRM + "P1i_identifies", expr, ref="works.py:389"),
-        Rule(ident, RDF_TYPE, ECRM + "E42_Identifier", ref="works.py:390"),
-        Rule(ident, RDFS_LABEL, F.col("qid"), obj_is_iri=False, ref="works.py:391"),
+        Rule(ident, RDF_TYPE, _q(ECRM + "E42_Identifier"), ref="works.py:390"),
+        Rule(ident, RDFS_LABEL, "qid", obj_is_iri=False, ref="works.py:391"),
         Rule(ident, ECRM + "P2_has_type", id_type, ref="works.py:392"),
         Rule(id_type, ECRM + "P2i_is_type_of", ident, ref="works.py:393"),
-        Rule(id_type, RDF_TYPE, ECRM + "E55_Type", ref="works.py:396"),
-        Rule(id_type, RDFS_LABEL, F.lit("Wikidata ID"), obj_is_iri=False,
-             lang="en", ref="works.py:397"),
-        Rule(id_type, OWL_SAMEAS, F.lit(WIKIDATA_ID_TYPE_SAMEAS), ref="works.py:398"),
+        Rule(id_type, RDF_TYPE, _q(ECRM + "E55_Type"), ref="works.py:396"),
+        Rule(id_type, RDFS_LABEL, _q("Wikidata ID"), obj_is_iri=False,
+             lang=EN, ref="works.py:397"),
+        Rule(id_type, OWL_SAMEAS, _q(WIKIDATA_ID_TYPE_SAMEAS), ref="works.py:398"),
         Rule(expr, ECRM + "P102_has_title", title, ref="works.py:400"),
         Rule(title, ECRM + "P102i_is_title_of", expr, ref="works.py:401"),
-        Rule(title, RDF_TYPE, ECRM + "E35_Title", ref="works.py:402"),
+        Rule(title, RDF_TYPE, _q(ECRM + "E35_Title"), ref="works.py:402"),
         # reference self-loop bug replicated (SURVEY §4.4.2)
         Rule(title, ECRM + "P190i_is_content_of", title, ref="works.py:403"),
         Rule(expr, OWL_SAMEAS, wd_uri, ref="works.py:421"),
@@ -123,27 +128,27 @@ def work_rules() -> list[Rule]:
     ]
     # genre block (works.py:405-419)
     genre = mint("genre", "genre_qid")
-    gtype = F.lit(GENRE_TYPE_WIKIDATA)
-    has_genre = F.col("genre_qid").isNotNull()
+    gtype = _q(GENRE_TYPE_WIKIDATA)
+    has_genre = "genre_qid IS NOT NULL"
     rules += [
-        Rule(genre, RDF_TYPE, ECRM + "E55_Type", ref="works.py:410"),
-        Rule(genre, RDFS_LABEL, F.col("genre_label"), obj_is_iri=False,
-             lang="en", ref="works.py:411"),
+        Rule(genre, RDF_TYPE, _q(ECRM + "E55_Type"), ref="works.py:410"),
+        Rule(genre, RDFS_LABEL, "genre_label", obj_is_iri=False,
+             lang=EN, ref="works.py:411"),
         Rule(genre, OWL_SAMEAS, wd_entity_uri("genre_qid"), ref="works.py:412"),
         Rule(genre, ECRM + "P2_has_type", gtype, ref="works.py:413"),
         Rule(gtype, ECRM + "P2i_is_type_of", genre, ref="works.py:414"),
-        Rule(gtype, RDF_TYPE, ECRM + "E55_Type", cond=has_genre, ref="works.py:415"),
-        Rule(gtype, RDFS_LABEL, F.lit("Wikidata Genre"), obj_is_iri=False,
-             lang="en", cond=has_genre, ref="works.py:416"),
+        Rule(gtype, RDF_TYPE, _q(ECRM + "E55_Type"), cond=has_genre, ref="works.py:415"),
+        Rule(gtype, RDFS_LABEL, _q("Wikidata Genre"), obj_is_iri=False,
+             lang=EN, cond=has_genre, ref="works.py:416"),
         Rule(expr, ECRM + "P2_has_type", genre, ref="works.py:418"),
         Rule(genre, ECRM + "P2i_is_type_of", expr, ref="works.py:419"),
     ]
     # expression creation (works.py:425-436)
     ec = mint("expression_creation", "qid")
     rules += [
-        Rule(ec, RDF_TYPE, LRMOO + "F28_Expression_Creation", ref="works.py:426"),
-        Rule(ec, RDFS_LABEL, F.format_string("Expression creation of %s", "label"),
-             obj_is_iri=False, lang="en", ref="works.py:427"),
+        Rule(ec, RDF_TYPE, _q(LRMOO + "F28_Expression_Creation"), ref="works.py:426"),
+        Rule(ec, RDFS_LABEL, "format_string('Expression creation of %s', label)",
+             obj_is_iri=False, lang=EN, ref="works.py:427"),
         Rule(ec, LRMOO + "R17_created", expr, ref="works.py:428"),
         Rule(expr, LRMOO + "R17i_was_created_by", ec, ref="works.py:429"),
         Rule(ec, LRMOO + "R19_created_a_realisation_of", work, ref="works.py:430"),
@@ -155,8 +160,8 @@ def work_rules() -> list[Rule]:
     # creation timespan (works.py:437-446)
     cts = mint("timespan", "creation_year")
     rules += [
-        Rule(cts, RDF_TYPE, ECRM + "E52_Time-Span", ref="works.py:441"),
-        Rule(cts, RDFS_LABEL, F.col("creation_year"), obj_is_iri=False,
+        Rule(cts, RDF_TYPE, _q(ECRM + "E52_Time-Span"), ref="works.py:441"),
+        Rule(cts, RDFS_LABEL, "creation_year", obj_is_iri=False,
              dtype=XSD_GYEAR, ref="works.py:442"),
         Rule(ec, ECRM + "P4_has_time-span", cts, ref="works.py:444"),
         Rule(cts, ECRM + "P4i_is_time-span_of", ec, ref="works.py:445"),
@@ -166,25 +171,25 @@ def work_rules() -> list[Rule]:
     mtitle = mint("title/manifestation", "qid")
     mtstr = mint("title_string/manifestation", "qid")
     rules += [
-        Rule(manif, RDF_TYPE, LRMOO + "F3_Manifestation", ref="works.py:450"),
-        Rule(manif, RDFS_LABEL, F.format_string("Manifestation of %s", "label"),
-             obj_is_iri=False, lang="en", ref="works.py:451"),
+        Rule(manif, RDF_TYPE, _q(LRMOO + "F3_Manifestation"), ref="works.py:450"),
+        Rule(manif, RDFS_LABEL, "format_string('Manifestation of %s', label)",
+             obj_is_iri=False, lang=EN, ref="works.py:451"),
         Rule(manif, LRMOO + "R4_embodies", expr, ref="works.py:452"),
         Rule(expr, LRMOO + "R4i_is_embodied_in", manif, ref="works.py:453"),
         Rule(manif, ECRM + "P102_has_title", mtitle, ref="works.py:463"),
         Rule(mtitle, ECRM + "P102i_is_title_of", manif, ref="works.py:464"),
-        Rule(mtitle, RDF_TYPE, ECRM + "E35_Title", ref="works.py:465"),
+        Rule(mtitle, RDF_TYPE, _q(ECRM + "E35_Title"), ref="works.py:465"),
         Rule(mtitle, ECRM + "P190_has_symbolic_content", mtstr, ref="works.py:466"),
-        Rule(mtitle, RDFS_LABEL, F.col("manif_label"), obj_is_iri=False,
-             lang=F.col("manif_lang"), ref="works.py:467"),
+        Rule(mtitle, RDFS_LABEL, "manif_label", obj_is_iri=False,
+             lang="manif_lang", ref="works.py:467"),
     ]
     # manifestation creation (works.py:470-479)
     mc = mint("manifestation_creation", "qid")
     rules += [
-        Rule(mc, RDF_TYPE, LRMOO + "F30_Manifestation_Creation", ref="works.py:472"),
+        Rule(mc, RDF_TYPE, _q(LRMOO + "F30_Manifestation_Creation"), ref="works.py:472"),
         Rule(mc, RDFS_LABEL,
-             F.format_string("Manifestation creation of %s", "label"),
-             obj_is_iri=False, lang="en", ref="works.py:473"),
+             "format_string('Manifestation creation of %s', label)",
+             obj_is_iri=False, lang=EN, ref="works.py:473"),
         Rule(mc, LRMOO + "R24_created", manif, ref="works.py:474"),
         Rule(manif, LRMOO + "R24i_was_created_through", mc, ref="works.py:475"),
         Rule(mc, PROV_DERIVED, wd_uri, ref="works.py:476"),
@@ -194,9 +199,9 @@ def work_rules() -> list[Rule]:
     # publisher (works.py:481-490)
     publisher = mint("publisher", "publisher_qid")
     rules += [
-        Rule(publisher, RDF_TYPE, ECRM + "E74_Group", ref="works.py:486"),
-        Rule(publisher, RDFS_LABEL, F.col("publisher_label"), obj_is_iri=False,
-             lang="en", ref="works.py:487"),
+        Rule(publisher, RDF_TYPE, _q(ECRM + "E74_Group"), ref="works.py:486"),
+        Rule(publisher, RDFS_LABEL, "publisher_label", obj_is_iri=False,
+             lang=EN, ref="works.py:487"),
         Rule(publisher, OWL_SAMEAS, wd_entity_uri("publisher_qid"), ref="works.py:488"),
         Rule(mc, ECRM + "P14_carried_out_by", publisher, ref="works.py:489"),
         Rule(publisher, ECRM + "P14i_performed", mc, ref="works.py:490"),
@@ -204,8 +209,8 @@ def work_rules() -> list[Rule]:
     # publication timespan (works.py:492-501)
     pts = mint("timespan", "pub_year")
     rules += [
-        Rule(pts, RDF_TYPE, ECRM + "E52_Time-Span", ref="works.py:497"),
-        Rule(pts, RDFS_LABEL, F.col("pub_year"), obj_is_iri=False,
+        Rule(pts, RDF_TYPE, _q(ECRM + "E52_Time-Span"), ref="works.py:497"),
+        Rule(pts, RDFS_LABEL, "pub_year", obj_is_iri=False,
              dtype=XSD_GYEAR, ref="works.py:498"),
         Rule(mc, ECRM + "P4_has_time-span", pts, ref="works.py:500"),
         Rule(pts, ECRM + "P4i_is_time-span_of", mc, ref="works.py:501"),
@@ -213,9 +218,9 @@ def work_rules() -> list[Rule]:
     # publication place (works.py:503-512)
     pplace = mint("place", "pub_place_qid")
     rules += [
-        Rule(pplace, RDF_TYPE, ECRM + "E53_Place", ref="works.py:508"),
-        Rule(pplace, RDFS_LABEL, F.col("pub_place_label"), obj_is_iri=False,
-             lang="en", ref="works.py:509"),
+        Rule(pplace, RDF_TYPE, _q(ECRM + "E53_Place"), ref="works.py:508"),
+        Rule(pplace, RDFS_LABEL, "pub_place_label", obj_is_iri=False,
+             lang=EN, ref="works.py:509"),
         Rule(pplace, OWL_SAMEAS, wd_entity_uri("pub_place_qid"), ref="works.py:510"),
         Rule(mc, ECRM + "P7_took_place_at", pplace, ref="works.py:511"),
         Rule(pplace, ECRM + "P7i_witnessed", mc, ref="works.py:512"),
@@ -224,14 +229,14 @@ def work_rules() -> list[Rule]:
     editor = mint("person", "editor_qid")
     eid = mint("identifier", "editor_qid")
     rules += [
-        Rule(editor, RDF_TYPE, ECRM + "E21_Person", ref="works.py:517"),
-        Rule(editor, RDFS_LABEL, F.col("editor_label"), obj_is_iri=False,
+        Rule(editor, RDF_TYPE, _q(ECRM + "E21_Person"), ref="works.py:517"),
+        Rule(editor, RDFS_LABEL, "editor_label", obj_is_iri=False,
              ref="works.py:518 (no lang tag)"),
         Rule(editor, OWL_SAMEAS, wd_entity_uri("editor_qid"), ref="works.py:519"),
         Rule(editor, ECRM + "P1_is_identified_by", eid, ref="works.py:522"),
         Rule(eid, ECRM + "P1i_identifies", editor, ref="works.py:523"),
-        Rule(eid, RDF_TYPE, ECRM + "E42_Identifier", ref="works.py:524"),
-        Rule(eid, RDFS_LABEL, F.col("editor_qid"), obj_is_iri=False, ref="works.py:525"),
+        Rule(eid, RDF_TYPE, _q(ECRM + "E42_Identifier"), ref="works.py:524"),
+        Rule(eid, RDFS_LABEL, "editor_qid", obj_is_iri=False, ref="works.py:525"),
         Rule(eid, ECRM + "P2_has_type", id_type, ref="works.py:526"),
         Rule(id_type, ECRM + "P2i_is_type_of", eid, ref="works.py:527"),
         Rule(mc, ECRM + "P14_carried_out_by", editor, ref="works.py:529"),
@@ -241,33 +246,33 @@ def work_rules() -> list[Rule]:
     ip = mint("item_production", "qid")
     item = mint("item", "qid")
     rules += [
-        Rule(ip, RDF_TYPE, LRMOO + "F32_Item_Production_Event", ref="works.py:535"),
+        Rule(ip, RDF_TYPE, _q(LRMOO + "F32_Item_Production_Event"), ref="works.py:535"),
         Rule(ip, RDFS_LABEL,
-             F.format_string("Item production event of %s", "label"),
-             obj_is_iri=False, lang="en", ref="works.py:536"),
+             "format_string('Item production event of %s', label)",
+             obj_is_iri=False, lang=EN, ref="works.py:536"),
         Rule(ip, LRMOO + "R27_materialized", manif, ref="works.py:537"),
         Rule(manif, LRMOO + "R27i_was_materialized_by", ip, ref="works.py:538"),
         Rule(ip, LRMOO + "R28_produced", item, ref="works.py:539"),
         Rule(item, LRMOO + "R28i_was_produced_by", ip, ref="works.py:540"),
-        Rule(item, RDF_TYPE, LRMOO + "F5_Item", ref="works.py:542"),
-        Rule(item, RDFS_LABEL, F.format_string("Item of %s", "label"),
-             obj_is_iri=False, lang="en", ref="works.py:543"),
+        Rule(item, RDF_TYPE, _q(LRMOO + "F5_Item"), ref="works.py:542"),
+        Rule(item, RDFS_LABEL, "format_string('Item of %s', label)",
+             obj_is_iri=False, lang=EN, ref="works.py:543"),
         Rule(item, LRMOO + "R7_exemplifies", manif, ref="works.py:544"),
         Rule(manif, LRMOO + "R7i_is_exemplified_by", item, ref="works.py:545"),
     ]
     # digital copy (works.py:548-554)
     digital = mint("digital", "qid")
-    has_digital = F.col("digital_copy").isNotNull()
+    has_digital = "digital_copy IS NOT NULL"
     rules += [
-        Rule(digital, RDF_TYPE, ECRM + "E73_Information_Object",
+        Rule(digital, RDF_TYPE, _q(ECRM + "E73_Information_Object"),
              cond=has_digital, ref="works.py:549"),
-        Rule(digital, RDFS_LABEL, F.format_string("Digital copy of %s", "label"),
-             obj_is_iri=False, lang="en", cond=has_digital, ref="works.py:550"),
+        Rule(digital, RDFS_LABEL, "format_string('Digital copy of %s', label)",
+             obj_is_iri=False, lang=EN, cond=has_digital, ref="works.py:550"),
         Rule(digital, ECRM + "P138_represents", expr, cond=has_digital,
              ref="works.py:551"),
         Rule(expr, ECRM + "P138i_has_representation", digital,
              cond=has_digital, ref="works.py:552"),
-        Rule(digital, RDFS_SEEALSO, F.col("digital_copy"), cond=has_digital,
+        Rule(digital, RDFS_SEEALSO, "digital_copy", cond=has_digital,
              ref="works.py:553"),
     ]
     return rules
@@ -286,7 +291,7 @@ def works_stage(
 
     if broadcast_labels is None:
         broadcast_labels = labels.count() <= LABEL_BROADCAST_MAX
-    emit = _emit_inline_sql(spark, work_rules(), "works")
+    emit = _emit_inline_sql(work_rules())
     header = _const_values_sql(sorted(works_header_triples())) \
         if include_header else None
 
