@@ -1,7 +1,8 @@
 """align_stage's full-graph dedup branch (``assume_distinct=False``, for
 inputs that may repeat triples) must give the same triple set as the
 default branch, which dedups only the fraction that can collide with the
-alignment delta — on a distinct merged graph of the full fixture world."""
+alignment delta — on a distinct merged graph of the full fixture world.
+Building the stage launches no Spark job."""
 
 from __future__ import annotations
 
@@ -37,3 +38,17 @@ def test_full_dedup_path_equals_distinct_path(spark, dims, merged):
         len(full), len(distinct),
         sorted(full - distinct)[:8], sorted(distinct - full)[:8])
     assert len(full) > merged.count()  # the alignment delta is not empty
+
+
+def test_align_build_launches_no_jobs(spark, dims, merged):
+    """Building the stage plans it and runs nothing: no collect or count
+    of the presence flags (or anything else) on the driver."""
+    sc = spark.sparkContext
+    group = "align-build-zero-jobs"
+    sc.setJobGroup(group, "align_stage build")
+    try:
+        align_stage(spark, merged, dims["wd_external_ids"])
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

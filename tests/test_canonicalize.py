@@ -10,6 +10,7 @@ from wikidata_to_cidoc_crm_spark.plans.canonicalize import canonical_map, canoni
 
 P = ECRM + "E21_Person"
 KNOWS = "http://example.org/knows"
+NOTE = "http://example.org/note"
 
 
 def _graph(spark):
@@ -23,6 +24,8 @@ def _graph(spark):
         ("p/Q3", RDFS_LABEL, "Bettina von Arnim", False, "en", None),
         # an edge that points at the duplicate
         ("p/Q3", KNOWS, "p/Q2", True, None, None),
+        # a literal that merely spells the duplicate's URI
+        ("p/Q3", NOTE, "p/Q2", False, None, None),
     ]
     return spark.createDataFrame(rows, TRIPLE_SCHEMA)
 
@@ -40,6 +43,10 @@ def test_canonicalize_rewrites_and_links(spark):
     assert ("p/Q3", KNOWS, "p/Q2") not in triples
     assert ("p/Q1", OWL_SAMEAS, "p/Q2") in triples   # merge recorded
     assert not any(s == "p/Q2" for s, _, _ in triples)  # subject rewritten
+    rows = [tuple(r) for r in out.collect()]
+    # a literal object is never rewritten, and survives the dedup
+    assert rows.count(("p/Q3", NOTE, "p/Q2", False, None, None)) == 1
+    assert ("p/Q3", NOTE, "p/Q1") not in triples
 
 
 def test_canonicalize_noop_without_duplicates(spark, world, dims):

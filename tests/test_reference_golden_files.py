@@ -6,6 +6,8 @@ equivalent input statements."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from wikidata_to_cidoc_crm_spark.fixtures import LABEL_SCHEMA, STATEMENT_SCHEMA
@@ -14,6 +16,12 @@ from wikidata_to_cidoc_crm_spark.plans.authors import authors_stage
 from wikidata_to_cidoc_crm_spark.sources.ttl import parse_ttl_file
 
 GOLDEN = "/root/reference/examples/outputs/authors.ttl"
+
+# the reference checkout is not part of this repository; without it these
+# parity checks cannot run (the oracles and DuckDB twins still pin the stages)
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(os.path.dirname(GOLDEN)),
+    reason=f"reference golden outputs absent: {os.path.dirname(GOLDEN)}")
 
 # the Wikidata facts behind the example (reverse-read from the golden file;
 # equivalently what the authors SPARQL at authors.py:187-200 returns)

@@ -64,12 +64,6 @@ TRIPLE_SCHEMA = T.StructType(
     ]
 )
 
-# Full RDF-term identity: an IRI and a plain literal with the same lexical
-# form are *different* terms, so obj_is_iri is part of the dedup key. (It
-# also makes dropDuplicates deterministic across partitionings — no
-# arbitrary winner between an IRI-flagged and literal-flagged duplicate.)
-TRIPLE_KEY = ["subj", "pred", "obj", "obj_is_iri", "lang", "dtype"]
-
 
 def ecrm(term: str) -> str:
     return ECRM + term
@@ -104,14 +98,6 @@ class Rule:
     dtype: str | None = None
     cond: str | None = None
     ref: str = ""
-
-
-def dedupe_triples(df: DataFrame) -> DataFrame:
-    """Set semantics of the rdflib Graph (duplicate ``g.add`` is a no-op).
-
-    Shuffle key is the full triple → uniform distribution even under
-    subject skew (a head QID's triples differ in pred/obj)."""
-    return df.dropDuplicates(TRIPLE_KEY)
 
 
 def triples_to_python_set(df: DataFrame, max_rows: int = 1_000_000) -> set[tuple]:

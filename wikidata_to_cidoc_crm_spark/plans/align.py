@@ -5,13 +5,21 @@ Behavioral spec: ``/root/reference/src/wiki2crm/map_and_align.py:207-1005``.
 * J17 enrichment: subjects owl:sameAs a Wikidata entity gain sameAs links to
   external vocabularies (templated URLs, map_and_align.py:118-178);
 * A7 existence-gated constant blocks: presence flags for classes/predicates
-  are computed in ONE pass (two tiny distinct-collects), then the matching
-  SKOS constant blocks union in (align_spec.SKOS_BLOCKS);
+  are one dimension-sized (kind, val) relation, and the satisfied SKOS and
+  definition blocks (align_spec) union in as ONE block-tagged VALUES branch;
 * J10–J15 property-chain materializations (has_manifestation / has_portrayal
   / has_representation / about / expr_references / has_character) as 2–3-hop
   self-joins over the triple table;
 * J16 temporal direction: relation text-passage pairs compared by creation
-  year (expression-creation, manifestation-creation fallback).
+  year (expression-creation, manifestation-creation fallback);
+* S7/P10 dbpedia CURIEs expand to full IRIs in the final select (the
+  reference rewrites the serialized file, map_and_align.py:996-1004).
+
+Every dynamic part is a ``Rule`` table over a CTE of the final statement,
+emitted through ``sql_stages._emit_inline_sql`` like the mapping stages.
+The stage is four ``spark.sql`` statements: the pred-routed sub-graph
+``tsub``, the presence flags and the relation ``directions`` are lazy
+checkpoints (as is the input), and the final statement reads them.
 
 Positions on reference bugs (SURVEY §4.4):
 * 4.4.4 — the reference attaches R12/R13 direction triples to the variable
@@ -30,13 +38,12 @@ Positions on reference bugs (SURVEY §4.4):
 Scale notes: the chain joins are equi-joins on subject/object URIs over a
 triple table partitioned by subject hash; each hop co-partitions on the
 join key. Presence flags are a dimension-sized distinct PLAN (no driver
-collect): conditional blocks semi-join a broadcast one-row gate.
+collect): conditional parts semi-join a broadcast one-row gate.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..model import (
     ECRM,
@@ -45,8 +52,9 @@ from ..model import (
     OWL_SAMEAS,
     RDF_TYPE,
     RDFS_LABEL,
-    dedupe_triples,
+    Rule,
 )
+from ..session import lazy_checkpoint
 from .align_spec import (
     ABOUT_DEF,
     EXPR_REFERENCES_DEF,
@@ -60,46 +68,110 @@ from .align_spec import (
     SKOS_BLOCKS,
     SP,
 )
-from ..session import lazy_checkpoint
+from .sql_stages import _const_values_sql, _emit_inline_sql, _q, _wrap
 
 L, I, E = LRMOO, INTRO, ECRM
 
+# ~30 alignment joins each filter a handful of predicates out of the graph;
+# scanning the FULL checkpoint per join is O(parts · |G|) I/O. One
+# pred-routed sub-checkpoint (the union of every predicate any part touches
+# — a small fraction of a real graph) turns that into O(parts · |G_sub|);
+# `present` still derives from the full graph.
+_PART_PREDS = [
+    OWL_SAMEAS, RDF_TYPE,
+    L + "R3_is_realised_in", L + "R4i_is_embodied_in",
+    L + "R7i_is_exemplified_by", I + "R18_showsActualization",
+    I + "R17_actualizesFeature", E + "P67_refers_to",
+    I + "R24_hasRelatedEntity", I + "R30i_isTextPassageOf",
+    L + "R17i_was_created_by", E + "P4_has_time-span",
+    L + "R24_created",
+]
 
-def _mk(df: DataFrame, s, pred: str, o) -> DataFrame:
-    """Materialized-triple projection onto the canonical schema."""
-    s = F.col(s) if isinstance(s, str) else s
-    o = F.col(o) if isinstance(o, str) else o
-    return df.select(
-        s.alias("subj"), F.lit(pred).alias("pred"), o.alias("obj"),
-        F.lit(True).alias("obj_is_iri"),
-        F.lit(None).cast("string").alias("lang"),
-        F.lit(None).cast("string").alias("dtype"),
-    )
+# J17 (map_and_align.py:118-178); dbpedia CURIEs are admitted here and
+# expanded in the final select
+_ENRICH = [Rule("s", OWL_SAMEAS, "uri", ref="map_and_align.py:167-178")]
+
+# Derived properties: (requirements, definition block, dynamic parts). A
+# requirement is (kind, val): 'class' → an instance of val exists, 'pred'
+# → a triple with predicate val exists. A part is (source, rules); the
+# sources are CTEs of the final statement or the ``directions`` checkpoint
+# (rel, younger_expr, older_expr, younger_tp, older_tp).
+_DERIVED = [
+    ((("class", L + "F1_Work"), ("class", L + "F3_Manifestation")),
+     HAS_MANIFESTATION_DEF,
+     [("manif", [Rule("s", SP + "has_manifestation", "o",
+                      ref="map_and_align.py:580-606")])]),
+    ((("class", L + "F1_Work"), ("class", L + "F5_Item")),
+     HAS_PORTRAYAL_DEF,
+     [("portrayal", [Rule("s", SP + "has_portrayal", "o",
+                          ref="map_and_align.py:608-633")])]),
+    ((("class", L + "F2_Expression"), ("class", L + "F5_Item")),
+     HAS_REPRESENTATION_DEF,
+     [("representation", [Rule("s", SP + "has_representation", "o",
+                               ref="map_and_align.py:635-658")])]),
+    ((("class", I + "INT_Topic"),),
+     ABOUT_DEF,
+     [("topics", [Rule("s", SP + "about", "o",
+                       ref="map_and_align.py:696-720")])]),
+    # expr_relation + intended-semantics R12/R13 directions (660-694, 723-776)
+    ((("class", I + "INT31_IntertextualRelation"),),
+     EXPR_RELATION_DEF,
+     [("pairs", [Rule("e1", SP + "expr_relation", "e2"),
+                 Rule("e2", SP + "expr_relation", "e1")]),
+      ("{directions}", [
+          Rule("rel", I + "R13_hasReferringEntity", "younger_expr"),
+          Rule("younger_expr", I + "R13i_isReferringEntity", "rel"),
+          Rule("rel", I + "R12_hasReferredToEntity", "older_expr"),
+          Rule("older_expr", I + "R12i_isReferredToEntity", "rel")])]),
+    ((("pred", I + "R30i_isTextPassageOf"),),
+     POSSIBLY_CITES_DEF,
+     [("{directions}", [
+         Rule("younger_expr", SP + "expr_possibly_cites", "older_expr"),
+         Rule("older_expr", SP + "expr_possibly_cited_by", "younger_expr"),
+         Rule("younger_expr", SP + "tp_possibly_cites", "older_tp"),
+         Rule("older_tp", SP + "tp_possibly_cited_by", "younger_expr")])]),
+    # instance-level references_person/place (870-920); the place condition
+    # reproduces the reference's elif exactly: place AND NOT person. The
+    # person/place *definition* blocks never fire (SURVEY §4.4.5).
+    ((("pred", E + "P67_refers_to"),),
+     EXPR_REFERENCES_DEF,
+     [("refs", [Rule("expr", SP + "expr_references", "target"),
+                Rule("expr", SP + "references_person", "target", cond="__p"),
+                Rule("expr", SP + "references_place", "target",
+                     cond="__q AND NOT __p")])]),
+    ((("class", I + "INT_Character"),),
+     HAS_CHARACTER_DEF,
+     [("chars", [Rule("s", SP + "has_character", "o",
+                      ref="map_and_align.py:962-991"),
+                 Rule("o", SP + "is_character_in", "s")])]),
+]
+
+_TRIPLE_COLS = "subj, pred, obj, obj_is_iri, lang, dtype"
 
 
-def _triple_struct(s, pred: str, o) -> F.Column:
-    s = F.col(s) if isinstance(s, str) else s
-    o = F.col(o) if isinstance(o, str) else o
-    return F.struct(
-        s.alias("subj"), F.lit(pred).alias("pred"), o.alias("obj"),
-        F.lit(True).alias("obj_is_iri"),
-        F.lit(None).cast("string").alias("lang"),
-        F.lit(None).cast("string").alias("dtype"),
-    )
+def _po(name: str, pred: str) -> str:
+    """CTE ``name(s, o)``: the ``pred`` edges of ``tsub``."""
+    # loud failure beats silently-empty joins if a predicate is ever used
+    # without being routed into the sub-checkpoint
+    if pred not in _PART_PREDS:
+        raise AssertionError(f"predicate {pred} not in _PART_PREDS")
+    return (f"{name} AS (SELECT subj AS s, obj AS o FROM {{tsub}} "
+            f"WHERE pred = {_q(pred)})")
 
 
-def _fan(df: DataFrame, emits: list[tuple]) -> DataFrame:
-    """Emit several (optionally conditional) triples per source row through
-    ONE ``inline(array_compact(array(...)))`` Generate — the align spelling
-    of the mapping stages' rule fan-out.  ``emits`` rows are
-    ``(cond_or_None, s, pred, o)``; a null condition drops that element via
-    ``array_compact``.  Replaces one union branch (and one re-execution of
-    the shared source subtree) per emitted triple with a single branch."""
-    elems = []
-    for cond, s, pred, o in emits:
-        tr = _triple_struct(s, pred, o)
-        elems.append(tr if cond is None else F.when(cond, tr))
-    return df.select(F.inline(F.array_compact(F.array(*elems))))
+def _typed(name: str, cls: str) -> str:
+    """CTE ``name(e)``: the distinct instances of ``cls``."""
+    return (f"{name} AS (SELECT DISTINCT subj AS e FROM {{tsub}} "
+            f"WHERE pred = {_q(RDF_TYPE)} AND obj = {_q(cls)})")
+
+
+def _gate(name: str, reqs: tuple) -> str:
+    """CTE with one row iff every (kind, val) requirement appears in the
+    graph (`present` has distinct rows, so the match count equals
+    len(reqs) exactly when all requirements hold)."""
+    cond = " OR ".join(f"(kind = {_q(k)} AND val = {_q(v)})" for k, v in reqs)
+    return (f"{name} AS (SELECT 1 AS __g FROM (SELECT count(*) AS __n "
+            f"FROM {{present}} WHERE {cond}) WHERE __n = {len(reqs)})")
 
 
 def align_stage(
@@ -111,387 +183,198 @@ def align_stage(
     """``assume_distinct`` (default) encodes the PRECONDITION that ``g`` is
     a distinct triple set (every upstream stage ends in a dedup). The final
     assembly exploits this: only triples whose predicate a dynamic part can
-    emit (recorded by ``mk``) or whose subject a constant block can emit
-    can collide with the alignment delta, so the set-union dedup shuffles
-    ONLY that fraction plus the delta — the rest of the graph streams
-    through map-side (no full-graph exchange). Callers with possibly
-    duplicated input (e.g. an externally supplied TTL graph) MUST pass
-    ``assume_distinct=False``: the stage then falls back to the full-graph
-    set-union dedup and runs the dbpedia CURIE normalization over the
-    whole output, matching the reference's serialized-file rewrite
-    (map_and_align.py:996-1004) for arbitrary inputs."""
+    emit or whose subject a constant block can emit can collide with the
+    alignment delta, so the set-union dedup shuffles ONLY that fraction
+    plus the delta — the rest of the graph streams through map-side (no
+    full-graph exchange). Callers with possibly duplicated input (e.g. an
+    externally supplied TTL graph) MUST pass ``assume_distinct=False``: the
+    stage then falls back to the full-graph set-union dedup and runs the
+    dbpedia CURIE normalization over the whole output, matching the
+    reference's serialized-file rewrite (map_and_align.py:996-1004) for
+    arbitrary inputs.
+
+    Building the stage runs zero Spark jobs: every conditional part is
+    gated by a broadcast LEFT SEMI join against a one-row aggregate over
+    the lazily checkpointed presence flags, never by a driver collect."""
     g = g.transform(lazy_checkpoint)
-    t = g.select("subj", "pred", "obj")
+    preds = ", ".join(map(_q, _PART_PREDS))
+    tsub = spark.sql(
+        f"SELECT subj, pred, obj FROM {{g}} WHERE pred IN ({preds})", g=g,
+    ).transform(lazy_checkpoint)
 
-    # predicates any dynamic (non-constant-block) part can emit — a triple
-    # of g can only equal a delta triple if it shares the predicate
-    dyn_preds: set[str] = set()
+    # presence flags (A7): the distinct (kind, val) pairs of the graph
+    present = spark.sql(f"""
+SELECT DISTINCT kind, val FROM (
+  SELECT inline(array(named_struct('kind', 'pred', 'val', pred),
+                      named_struct('kind', 'class', 'val', cls)))
+  FROM (SELECT DISTINCT pred,
+               CASE WHEN pred = {_q(RDF_TYPE)} THEN obj END AS cls
+        FROM {{g}})
+) WHERE val IS NOT NULL""", g=g).transform(lazy_checkpoint)
 
-    def mk(df: DataFrame, s, pred: str, o) -> DataFrame:
-        dyn_preds.add(pred)
-        return _mk(df, s, pred, o)
+    # directions (map_and_align.py:660-694): per INT31 relation with exactly
+    # two text passages of two expressions, the younger and older side by
+    # creation year (get_creation_year, 184-194: expression creation, else
+    # manifestation creation; min for determinism)
+    directions = spark.sql(f"""
+WITH {_po("r24", I + "R24_hasRelatedEntity")},
+{_po("r30i", I + "R30i_isTextPassageOf")},
+{_po("r17i", L + "R17i_was_created_by")},
+{_po("p4", E + "P4_has_time-span")},
+{_po("r24c", L + "R24_created")},
+{_po("r4i", L + "R4i_is_embodied_in")},
+{_typed("rels31", I + "INT31_IntertextualRelation")},
+tp_expr AS (
+  SELECT DISTINCT r24.s AS rel, r30i.s AS tp, r30i.o AS expr
+  FROM r24 LEFT SEMI JOIN rels31 ON r24.s = rels31.e
+  JOIN r30i ON r24.o = r30i.s
+),
+cand AS (
+  SELECT rel, min_by(expr, tp) AS expr1, max_by(expr, tp) AS expr2,
+         min(tp) AS tp1, max(tp) AS tp2
+  FROM tp_expr GROUP BY rel
+  HAVING count(*) = 2 AND count(DISTINCT expr) = 2
+),
+labels AS (SELECT subj AS ts, obj AS y FROM {{g}}
+           WHERE pred = {_q(RDFS_LABEL)}),
+y_ec AS (
+  SELECT r17i.s AS ex, min(l.y) AS y_ec
+  FROM r17i JOIN p4 ON r17i.o = p4.s JOIN labels l ON p4.o = l.ts
+  GROUP BY r17i.s
+),
+y_mc AS (
+  SELECT r4i.s AS ex, min(l.y) AS y_mc
+  FROM r4i JOIN r24c ON r4i.o = r24c.o JOIN p4 ON r24c.s = p4.s
+  JOIN labels l ON p4.o = l.ts
+  GROUP BY r4i.s
+),
+years AS (
+  SELECT coalesce(a.ex, b.ex) AS ex,
+         CAST(coalesce(a.y_ec, b.y_mc) AS INT) AS yr
+  FROM y_ec a FULL OUTER JOIN y_mc b ON a.ex = b.ex
+)
+SELECT c.rel,
+  CASE WHEN y1.yr < y2.yr THEN c.expr2 ELSE c.expr1 END AS younger_expr,
+  CASE WHEN y1.yr < y2.yr THEN c.expr1 ELSE c.expr2 END AS older_expr,
+  CASE WHEN y1.yr < y2.yr THEN c.tp2 ELSE c.tp1 END AS younger_tp,
+  CASE WHEN y1.yr < y2.yr THEN c.tp1 ELSE c.tp2 END AS older_tp
+FROM cand c JOIN years y1 ON c.expr1 = y1.ex JOIN years y2 ON c.expr2 = y2.ex
+WHERE y1.yr IS NOT NULL AND y2.yr IS NOT NULL""", tsub=tsub, g=g) \
+        .transform(lazy_checkpoint)
 
-    # ~30 alignment parts each filter a handful of predicates out of the
-    # graph; scanning the FULL checkpoint per part is O(parts · |G|) I/O.
-    # One pred-routed sub-checkpoint (the union of every predicate any
-    # part touches — a small fraction of a real graph) turns that into
-    # O(parts · |G_sub|); `present` still derives from the full graph.
-    _PART_PREDS = [
-        OWL_SAMEAS, RDF_TYPE,
-        L + "R3_is_realised_in", L + "R4i_is_embodied_in",
-        L + "R7i_is_exemplified_by", I + "R18_showsActualization",
-        I + "R17_actualizesFeature", E + "P67_refers_to",
-        I + "R24_hasRelatedEntity", I + "R30i_isTextPassageOf",
-        L + "R17i_was_created_by", E + "P4_has_time-span",
-        L + "R24_created",
+    ctes = [
+        _po("r3", L + "R3_is_realised_in"),
+        _po("r4i", L + "R4i_is_embodied_in"),
+        _po("r7i", L + "R7i_is_exemplified_by"),
+        _po("r18", I + "R18_showsActualization"),    # expr -> act
+        _po("r17", I + "R17_actualizesFeature"),     # act -> feature
+        _po("p67", E + "P67_refers_to"),             # act -> target
+        _po("r24", I + "R24_hasRelatedEntity"),      # rel -> related entity
+        _typed("f1", L + "F1_Work"),
+        _typed("f2", L + "F2_Expression"),
+        _typed("rels31", I + "INT31_IntertextualRelation"),
+        _typed("topic", I + "INT_Topic"),
+        _typed("character", I + "INT_Character"),
+        _typed("person", E + "E21_Person"),
+        _typed("place", E + "E53_Place"),
+        """manif AS (
+  SELECT r3.s, r4i.o FROM r3 LEFT SEMI JOIN f1 ON r3.s = f1.e
+  JOIN r4i ON r3.o = r4i.s)""",
+        """portrayal AS (
+  SELECT r3.s, r7i.o FROM r3 LEFT SEMI JOIN f1 ON r3.s = f1.e
+  JOIN r4i ON r3.o = r4i.s JOIN r7i ON r4i.o = r7i.s)""",
+        """representation AS (
+  SELECT r4i.s, r7i.o FROM r4i LEFT SEMI JOIN f2 ON r4i.s = f2.e
+  JOIN r7i ON r4i.o = r7i.s)""",
+        """topics AS (
+  SELECT r18.s, r17.o FROM r18 LEFT SEMI JOIN f2 ON r18.s = f2.e
+  JOIN r17 ON r18.o = r17.s LEFT SEMI JOIN topic ON r17.o = topic.e)""",
+        """rel_exprs AS (
+  SELECT DISTINCT r24.s AS rel, r18.s AS expr
+  FROM r24 LEFT SEMI JOIN rels31 ON r24.s = rels31.e
+  JOIN r18 ON r24.o = r18.o)""",
+        """pairs AS (
+  SELECT a.expr AS e1, b.expr AS e2 FROM rel_exprs a
+  JOIN rel_exprs b ON a.rel = b.rel WHERE a.expr <> b.expr)""",
+        # person/place markers as flags (typed sets are distinct, so the
+        # left joins cannot multiply rows)
+        """refs AS (
+  SELECT r.expr, r.target, pe.e IS NOT NULL AS __p, pl.e IS NOT NULL AS __q
+  FROM (SELECT DISTINCT r18.s AS expr, p67.o AS target
+        FROM r18 LEFT SEMI JOIN f2 ON r18.s = f2.e
+        JOIN p67 ON r18.o = p67.s) r
+  LEFT JOIN person pe ON r.target = pe.e
+  LEFT JOIN place pl ON r.target = pl.e)""",
+        """chars AS (
+  SELECT r18.s, r18.o FROM r18 LEFT SEMI JOIN f2 ON r18.s = f2.e
+  JOIN r17 ON r18.o = r17.s LEFT SEMI JOIN character ON r17.o = character.e)""",
     ]
-    tsub = t.filter(F.col("pred").isin(_PART_PREDS)).transform(lazy_checkpoint)
-
-    def po(p: str) -> DataFrame:
-        # loud failure beats silently-empty joins if a predicate is ever
-        # used without being routed into the sub-checkpoint
-        if p not in _PART_PREDS:
-            raise AssertionError(f"predicate {p} not in _PART_PREDS")
-        return tsub.filter(F.col("pred") == p).select(
-            F.col("subj").alias("s"), F.col("obj").alias("o"))
-
-    def typed(cls: str) -> DataFrame:
-        return (
-            tsub.filter((F.col("pred") == RDF_TYPE) & (F.col("obj") == cls))
-            .select(F.col("subj").alias("e")).distinct()
-        )
-
-    # --- presence flags (A7), fully lazy ---
-    # The flags used to be collect()ed, which forced a full-graph distinct
-    # on the driver before align's plan could even finish building —
-    # serializing plan construction with upstream execution. Instead
-    # `present` is a dimension-sized (kind, val) plan checkpointed once,
-    # and every conditional block is gated with a broadcast LEFT SEMI join
-    # against a 1-row-iff-satisfied aggregate over it: identical gating
-    # semantics, zero driver actions at build time.
-    present = (
-        t.select(
-            "pred",
-            F.when(F.col("pred") == RDF_TYPE, F.col("obj")).alias("cls"),
-        )
-        .distinct()
-        .select(F.explode(F.array(
-            F.struct(F.lit("pred").alias("kind"), F.col("pred").alias("val")),
-            F.struct(F.lit("class").alias("kind"), F.col("cls").alias("val")),
-        )).alias("pr"))
-        .select("pr.kind", "pr.val")
-        .filter(F.col("val").isNotNull())
-        .distinct()
-        .transform(lazy_checkpoint)
-    )
-
-    _gate_cache: dict[tuple, DataFrame] = {}
-
-    def _gate(*reqs: tuple[str, str]) -> DataFrame:
-        """One row iff every (kind, val) requirement appears in the graph
-        (`present` has distinct rows, so the match count equals len(reqs)
-        exactly when all requirements hold). Cached per requirement set so
-        every part of a block shares ONE gate subtree (ReusedExchange)."""
-        if reqs not in _gate_cache:
-            cond = F.lit(False)
-            for kind, val in reqs:
-                cond = cond | ((F.col("kind") == kind) & (F.col("val") == val))
-            _gate_cache[reqs] = (
-                present.filter(cond)
-                .agg(F.count("*").alias("__n"))
-                .filter(F.col("__n") == len(reqs))
-                .select(F.lit(1).alias("__g")))
-        return _gate_cache[reqs]
-
-    def _gated(df: DataFrame, *reqs: tuple[str, str]) -> DataFrame:
-        return df.join(F.broadcast(_gate(*reqs)), F.lit(True), "left_semi")
-
-    # ALL conditional constant blocks resolve through ONE requirements
-    # semi-join (block → requirement rows vs `present`), not one gate per
-    # block — a single small union branch in the final plan
-    _const_blocks: list[tuple[tuple[tuple[str, str], ...], list]] = [
-        (((kind, val),), triples) for kind, val, triples in SKOS_BLOCKS]
-
-    parts: list[DataFrame] = []
-
-    # fan-out emission: triples that share one source DataFrame and one
-    # presence gate emit through a single inline() branch instead of one
-    # union branch each (~21 → ~11 branches; each dropped branch cost a
-    # scheduled AQE stage wave plus a re-execution of the shared,
-    # un-checkpointed source subtree)
-    def emit_group(src: DataFrame, reqs, emits: list[tuple]) -> None:
-        for _c, _s, p, _o in emits:
-            dyn_preds.add(p)
-        parts.append(_gated(_fan(src, emits), *reqs))
-
-    # subjects any constant block can emit — a triple of g can only equal
-    # a constant-block triple if it shares the subject
-    const_subjs: set[str] = set()
-
-    def _flush_consts() -> None:
-        from ..model import TRIPLE_SCHEMA as _TS
-
-        req_rows, need_rows, cand_rows = [], [], []
-        for b, (reqs, triples) in enumerate(_const_blocks):
-            need_rows.append((b, len(reqs)))
-            req_rows += [(b, k, v) for k, v in reqs]
-            for tr in triples:
-                st, pr, ob = tr[0], tr[1], tr[2]
-                const_subjs.add(st)
-                cand_rows.append((
-                    b, st, pr, ob,
-                    tr[3] if len(tr) > 3 else True,
-                    tr[4] if len(tr) > 4 else None,
-                    tr[5] if len(tr) > 5 else None))
-        reqs_df = spark.createDataFrame(req_rows, "block int, kind string, val string")
-        need_df = spark.createDataFrame(need_rows, "block int, n_req int")
-        ok = (
-            reqs_df.join(present, ["kind", "val"], "left_semi")
-            .groupBy("block").agg(F.count("*").alias("__n_ok"))
-            .join(F.broadcast(need_df), "block")
-            .filter(F.col("__n_ok") == F.col("n_req"))
-            .select("block"))
-        cand = spark.createDataFrame(
-            [tuple(r) for r in cand_rows],
-            "block int, " + ", ".join(
-                f"{f.name} {f.dataType.simpleString()}" for f in _TS.fields))
-        parts.append(
-            cand.join(F.broadcast(ok), "block", "left_semi")
-            .drop("block").coalesce(1))
-
-    # --- J17 enrichment ---
+    emitted: list[list[Rule]] = []
+    branches: list[str] = []
     if external_ids is not None:
-        same = po(OWL_SAMEAS).withColumn(
-            "qid", F.regexp_extract("o", r"^http://www\.wikidata\.org/entity/(Q\d+)$", 1)
-        ).filter(F.col("qid") != "")
-        tmpl = F.create_map(*[
-            x for k, v in EXTERNAL_ID_TEMPLATES.items()
-            for x in (F.lit(k), F.lit(v))
-        ])
-        # dbpedia CURIEs are admitted here and expanded by the S7/P10
-        # normalize_dbpedia post-pass below (map_and_align.py:996-1004)
-        enr = same.join(external_ids, "qid").withColumn(
-            "uri", F.replace(tmpl[F.col("id_type")], F.lit("{v}"), F.col("value"))
-        ).filter(F.col("uri").rlike("^(https?://|dbpedia:)"))
-        parts.append(mk(enr, "s", OWL_SAMEAS, "uri"))
+        # `{v}` is a format placeholder to spark.sql: escape the braces
+        tmpl = " ".join(
+            f"WHEN {_q(k)} THEN {_q(v)}" for k, v in EXTERNAL_ID_TEMPLATES.items()
+        ).replace("{", "{{").replace("}", "}}")
+        wd_re = _q(r"^http://www\.wikidata\.org/entity/(Q\d+)$")
+        ctes += [_po("same", OWL_SAMEAS), f"""enr AS (
+  SELECT s, uri FROM (
+    SELECT sa.s, replace(CASE x.id_type {tmpl} END, '{{{{v}}}}', x.value) AS uri
+    FROM (SELECT s, regexp_extract(o, {wd_re}, 1) AS qid FROM same) sa
+    JOIN {{ext}} x ON sa.qid = x.qid
+    WHERE sa.qid <> ''
+  ) WHERE uri RLIKE '^(https?://|dbpedia:)')"""]
+        emitted.append(_ENRICH)
+        branches.append(f"SELECT {_emit_inline_sql(_ENRICH)} FROM enr")
+    for i, (reqs, _, parts) in enumerate(_DERIVED):
+        ctes.append(_gate(f"gate{i}", reqs))
+        for src, rules in parts:
+            emitted.append(rules)
+            branches.append(
+                f"SELECT /*+ BROADCAST(gate{i}) */ {_emit_inline_sql(rules)}\n"
+                f"FROM {src} LEFT SEMI JOIN gate{i} ON true")
 
-    r3 = po(L + "R3_is_realised_in")
-    r4i = po(L + "R4i_is_embodied_in")
-    r7i = po(L + "R7i_is_exemplified_by")
-    r18 = po(I + "R18_showsActualization")      # expr -> act
-    r17 = po(I + "R17_actualizesFeature")       # act -> feature
-    p67 = po(E + "P67_refers_to")               # act -> target
+    # ALL constant blocks resolve through ONE requirements semi-join
+    # (block → requirement rows vs `present`): a single union branch
+    blocks = [(((kind, val),), triples) for kind, val, triples in SKOS_BLOCKS]
+    blocks += [(reqs, block) for reqs, block, _ in _DERIVED]
+    req_rows = ",\n  ".join(
+        f"({b}, {_q(k)}, {_q(v)}, {len(reqs)})"
+        for b, (reqs, _) in enumerate(blocks) for k, v in reqs)
+    ctes.append(f"""ok AS (
+  SELECT r.block FROM (VALUES
+  {req_rows}) AS r(block, kind, val, n_req)
+  LEFT SEMI JOIN {{present}} p ON r.kind = p.kind AND r.val = p.val
+  GROUP BY r.block, r.n_req HAVING count(*) = r.n_req)""")
+    consts = [(*t, b) for b, (_, triples) in enumerate(blocks) for t in triples]
+    branches.append(
+        f"SELECT /*+ BROADCAST(ok), COALESCE(1) */ {_TRIPLE_COLS}\n"
+        f"FROM ({_const_values_sql(consts)}) c\n"
+        "LEFT SEMI JOIN ok ON c.block = ok.block")
+    ctes.append("delta AS (\n" + "\nUNION ALL\n".join(branches) + ")")
 
-    f1 = typed(L + "F1_Work")
-    f2 = typed(L + "F2_Expression")
-
-    # has_manifestation (map_and_align.py:580-606)
-    _req = (("class", L + "F1_Work"), ("class", L + "F3_Manifestation"))
-    _const_blocks.append((_req, HAS_MANIFESTATION_DEF))
-    hops = (
-        r3.join(f1, r3.s == f1.e, "left_semi")
-        .join(r4i.withColumnRenamed("s", "o1").withColumnRenamed("o", "mani"),
-              F.col("o") == F.col("o1"))
-    )
-    parts.append(_gated(mk(hops, "s", SP + "has_manifestation", "mani"), *_req))
-
-    # has_portrayal (608-633)
-    _req = (("class", L + "F1_Work"), ("class", L + "F5_Item"))
-    _const_blocks.append((_req, HAS_PORTRAYAL_DEF))
-    hops = (
-        r3.join(f1, r3.s == f1.e, "left_semi")
-        .join(r4i.withColumnRenamed("s", "o1").withColumnRenamed("o", "mani"),
-              F.col("o") == F.col("o1"))
-        .join(r7i.withColumnRenamed("s", "m1").withColumnRenamed("o", "item"),
-              F.col("mani") == F.col("m1"))
-    )
-    parts.append(_gated(mk(hops, "s", SP + "has_portrayal", "item"), *_req))
-
-    # has_representation (635-658)
-    _req = (("class", L + "F2_Expression"), ("class", L + "F5_Item"))
-    _const_blocks.append((_req, HAS_REPRESENTATION_DEF))
-    hops = (
-        r4i.join(f2, r4i.s == f2.e, "left_semi")
-        .join(r7i.withColumnRenamed("s", "m1").withColumnRenamed("o", "item"),
-              F.col("o") == F.col("m1"))
-    )
-    parts.append(_gated(mk(hops, "s", SP + "has_representation", "item"), *_req))
-
-    # --- directions (660-694): per INT31 rel with exactly two text passages ---
-    r24 = po(I + "R24_hasRelatedEntity")        # rel -> related entity
-    r30i = po(I + "R30i_isTextPassageOf")       # tp -> expr
-    rels31 = typed(I + "INT31_IntertextualRelation")
-    tp_expr = (
-        r24.join(rels31, r24.s == rels31.e, "left_semi")
-        .join(r30i.withColumnRenamed("s", "tp").withColumnRenamed("o", "expr"),
-              F.col("o") == F.col("tp"))
-        .select(F.col("s").alias("rel"), "tp", "expr")
-        .distinct()
-    )
-    cand = (
-        tp_expr.groupBy("rel")
-        .agg(
-            F.count("*").alias("n_tp"),
-            F.countDistinct("expr").alias("n_expr"),
-            F.min_by("expr", "tp").alias("expr1"),
-            F.max_by("expr", "tp").alias("expr2"),
-            F.min("tp").alias("tp1"),
-            F.max("tp").alias("tp2"),
-        )
-        .filter((F.col("n_tp") == 2) & (F.col("n_expr") == 2))
-    )
-    # creation year (get_creation_year, 184-194): expression creation, else
-    # manifestation creation; min for determinism
-    labels = t.filter(F.col("pred") == RDFS_LABEL).select(
-        F.col("subj").alias("ts"), F.col("obj").alias("y"))
-    r17i = po(L + "R17i_was_created_by")        # expr -> ec
-    p4 = po(E + "P4_has_time-span")             # event -> ts
-    r24c = po(L + "R24_created")                # mc -> manif
-    y_ec = (
-        r17i.join(p4.withColumnRenamed("s", "ec").withColumnRenamed("o", "ts"),
-                  F.col("o") == F.col("ec"))
-        .join(labels, "ts")
-        .groupBy(F.col("s").alias("ex")).agg(F.min("y").alias("y_ec"))
-    )
-    y_mc = (
-        r4i.join(r24c.withColumnRenamed("s", "mc").withColumnRenamed("o", "mani"),
-                 F.col("o") == F.col("mani"))
-        .join(p4.withColumnRenamed("s", "mc2").withColumnRenamed("o", "ts"),
-              F.col("mc") == F.col("mc2"))
-        .join(labels, "ts")
-        .groupBy(F.col("s").alias("ex")).agg(F.min("y").alias("y_mc"))
-    )
-    years = y_ec.join(y_mc, "ex", "full_outer").select(
-        "ex", F.coalesce("y_ec", "y_mc").cast("int").alias("yr"))
-    directions = (
-        cand.join(years.withColumnRenamed("ex", "expr1").withColumnRenamed("yr", "y1"),
-                  "expr1")
-        .join(years.withColumnRenamed("ex", "expr2").withColumnRenamed("yr", "y2"),
-              "expr2")
-        .filter(F.col("y1").isNotNull() & F.col("y2").isNotNull())
-        .select(
-            "rel",
-            F.when(F.col("y1") < F.col("y2"), F.col("expr2")).otherwise(F.col("expr1")).alias("younger_expr"),
-            F.when(F.col("y1") < F.col("y2"), F.col("expr1")).otherwise(F.col("expr2")).alias("older_expr"),
-            F.when(F.col("y1") < F.col("y2"), F.col("tp2")).otherwise(F.col("tp1")).alias("younger_tp"),
-            F.when(F.col("y1") < F.col("y2"), F.col("tp1")).otherwise(F.col("tp2")).alias("older_tp"),
-        )
-        .transform(lazy_checkpoint)
-    )
-
-    # about (696-720)
-    _req = (("class", I + "INT_Topic"),)
-    _const_blocks.append((_req, ABOUT_DEF))
-    hops = (
-        r18.join(f2, r18.s == f2.e, "left_semi")
-        .join(r17.withColumnRenamed("s", "act").withColumnRenamed("o", "feat"),
-              F.col("o") == F.col("act"))
-        .join(typed(I + "INT_Topic").withColumnRenamed("e", "feat2"),
-              F.col("feat") == F.col("feat2"), "left_semi")
-    )
-    parts.append(_gated(mk(hops, "s", SP + "about", "feat"), *_req))
-
-    # expr_relation (723-776) + intended-semantics R12/R13 directions
-    _req = (("class", I + "INT31_IntertextualRelation"),)
-    _const_blocks.append((_req, EXPR_RELATION_DEF))
-    rel_exprs = (
-        r24.join(rels31, r24.s == rels31.e, "left_semi")
-        .join(r18.withColumnRenamed("s", "ex").withColumnRenamed("o", "act"),
-              F.col("o") == F.col("act"))
-        .select(F.col("s").alias("rel"), F.col("ex").alias("expr"))
-        .distinct()
-    )
-    pairs = (
-        rel_exprs.withColumnRenamed("expr", "e1")
-        .join(rel_exprs.withColumnRenamed("expr", "e2"), "rel")
-        .filter(F.col("e1") != F.col("e2"))
-    )
-    emit_group(pairs, _req, [
-        (None, "e1", SP + "expr_relation", "e2"),
-        (None, "e2", SP + "expr_relation", "e1"),
-    ])
-    emit_group(directions, _req, [
-        (None, "rel", I + "R13_hasReferringEntity", "younger_expr"),
-        (None, "younger_expr", I + "R13i_isReferringEntity", "rel"),
-        (None, "rel", I + "R12_hasReferredToEntity", "older_expr"),
-        (None, "older_expr", I + "R12i_isReferredToEntity", "rel"),
-    ])
-
-    # expr/tp possibly cites (778-869)
-    _req = (("pred", I + "R30i_isTextPassageOf"),)
-    _const_blocks.append((_req, POSSIBLY_CITES_DEF))
-    emit_group(directions, _req, [
-        (None, "younger_expr", SP + "expr_possibly_cites", "older_expr"),
-        (None, "older_expr", SP + "expr_possibly_cited_by", "younger_expr"),
-        (None, "younger_expr", SP + "tp_possibly_cites", "older_tp"),
-        (None, "older_tp", SP + "tp_possibly_cited_by", "younger_expr"),
-    ])
-
-    # expr_references (+ instance-level references_person/place, 870-920);
-    # the person/place *definition* blocks never fire (SURVEY §4.4.5)
-    _req = (("pred", E + "P67_refers_to"),)
-    _const_blocks.append((_req, EXPR_REFERENCES_DEF))
-    refs = (
-        r18.join(f2, r18.s == f2.e, "left_semi")
-        .join(p67.withColumnRenamed("s", "act").withColumnRenamed("o", "target"),
-              F.col("o") == F.col("act"))
-        .select(F.col("s").alias("expr"), "target")
-        .distinct()
-    )
-    is_person = typed(E + "E21_Person").withColumnRenamed("e", "target")
-    is_place = typed(E + "E53_Place").withColumnRenamed("e", "target")
-    # person/place markers as nullable flags (typed sets are distinct, so
-    # the left joins cannot multiply rows); the place condition reproduces
-    # the reference's elif exactly: place AND NOT person
-    flagged = (
-        refs.join(is_person.withColumn("__p", F.lit(True)), "target", "left")
-        .join(is_place.withColumn("__q", F.lit(True)), "target", "left"))
-    emit_group(flagged, _req, [
-        (None, "expr", SP + "expr_references", "target"),
-        (F.coalesce(F.col("__p"), F.lit(False)),
-         "expr", SP + "references_person", "target"),
-        (F.coalesce(F.col("__q"), F.lit(False)) & F.col("__p").isNull(),
-         "expr", SP + "references_place", "target"),
-    ])
-
-    # has_character (962-991)
-    _req = (("class", I + "INT_Character"),)
-    _const_blocks.append((_req, HAS_CHARACTER_DEF))
-    hops = (
-        r18.join(f2, r18.s == f2.e, "left_semi")
-        .join(r17.withColumnRenamed("s", "act").withColumnRenamed("o", "feat"),
-              F.col("o") == F.col("act"))
-        .join(typed(I + "INT_Character").withColumnRenamed("e", "feat2"),
-              F.col("feat") == F.col("feat2"), "left_semi")
-    )
-    emit_group(hops, _req, [
-        (None, "s", SP + "has_character", "o"),
-        (None, "o", SP + "is_character_in", "s"),
-    ])
-
-    _flush_consts()
-    delta = parts[0]
-    for p in parts[1:]:
-        delta = delta.unionByName(p)
-    # S7/P10: expand dbpedia CURIEs before the sink (the reference rewrites
-    # the serialized file, map_and_align.py:996-1004; the engine normalizes
-    # the column instead). CURIEs only enter via the enrichment part, so
-    # the pass runs on the collision branch; g's rows are CURIE-free.
-    from ..sources.readers import normalize_dbpedia
-
-    if not assume_distinct:
-        # arbitrary (possibly duplicated) input: full-graph set-union dedup
-        # + whole-output CURIE normalization, the pre-delta-dedup behavior
-        return dedupe_triples(normalize_dbpedia(g.unionByName(delta)))
     # Delta-dedup (see docstring): an input triple can equal a delta
     # triple only if it shares a dynamic part's predicate or a constant
     # block's subject. Everything else streams through with NO exchange;
-    # the dedup shuffles just that fraction plus the delta itself — the
-    # full-graph dropDuplicates this replaces was the stage's dominant
-    # shuffle at scale.
-    risk = (F.col("pred").isin(sorted(dyn_preds))
-            | F.col("subj").isin(sorted(const_subjs)))
-    g_safe = g.filter(~risk)
-    g_risk = g.filter(risk)
-    return g_safe.unionByName(
-        dedupe_triples(normalize_dbpedia(g_risk.unionByName(delta))))
+    # the DISTINCT shuffles just that fraction plus the delta itself.
+    # CURIEs only enter via the enrichment part, so the expansion runs on
+    # the colliding side; the rest of g is CURIE-free.
+    dyn_preds = sorted({r.pred for rules in emitted for r in rules})
+    const_subjs = sorted({t[0] for _, triples in blocks for t in triples})
+    risk = (f"pred IN ({', '.join(map(_q, dyn_preds))})\n"
+            f"   OR subj IN ({', '.join(map(_q, const_subjs))})")
+    if assume_distinct:
+        safe = f"SELECT {_TRIPLE_COLS} FROM {{g}} WHERE NOT (\n{risk})\nUNION ALL\n"
+        colliding = f"SELECT {_TRIPLE_COLS} FROM {{g}} WHERE {risk}"
+    else:
+        safe, colliding = "", f"SELECT {_TRIPLE_COLS} FROM {{g}}"
+    expanded = _wrap(f"""SELECT subj, pred,
+  CASE WHEN obj_is_iri AND startswith(obj, 'dbpedia:')
+       THEN concat('https://dbpedia.org/', substring(obj, 9)) ELSE obj END AS obj,
+  obj_is_iri, lang, dtype
+FROM ({colliding}
+UNION ALL
+SELECT * FROM delta)""", None, True)
+    query = "WITH " + ",\n".join(ctes) + "\n" + safe + expanded
+    return spark.sql(query, g=g, tsub=tsub, present=present,
+                     directions=directions, ext=external_ids)

@@ -71,26 +71,34 @@ def _emit_inline_sql(rules) -> str:
 
 def _const_values_sql(triples) -> str:
     """Constant triple block as a VALUES select (model-order tuples:
-    (s, p, o[, is_iri[, lang[, dtype]]]); is_iri defaults to true)."""
-    rows = []
+    (s, p, o[, is_iri[, lang[, dtype[, block]]]]); is_iri defaults to
+    true). An int ``block`` tag, given on every row or on none, adds a
+    trailing ``block`` column (align gates its constant blocks on it)."""
+    rows, tag = [], ""
     for t in triples:
         s, p, o = t[0], t[1], t[2]
         is_iri = t[3] if len(t) > 3 else True
         lang = t[4] if len(t) > 4 else None
         dtype = t[5] if len(t) > 5 else None
+        tag = f",{int(t[6])}" if len(t) > 6 else ""
         rows.append(
             f"({_q(s)},{_q(p)},{_q(o)},{'true' if is_iri else 'false'},"
             f"{'NULL' if lang is None else _q(lang)},"
-            f"{'NULL' if dtype is None else _q(dtype)})")
+            f"{'NULL' if dtype is None else _q(dtype)}{tag})")
+    block = ", block" if tag else ""
     return ("SELECT subj, pred, obj, obj_is_iri, CAST(lang AS STRING) AS lang, "
-            "CAST(dtype AS STRING) AS dtype FROM (VALUES "
+            f"CAST(dtype AS STRING) AS dtype{block} FROM (VALUES "
             + ",\n ".join(rows)
-            + ") AS hdr(subj, pred, obj, obj_is_iri, lang, dtype)")
+            + f") AS hdr(subj, pred, obj, obj_is_iri, lang, dtype{block})")
 
 
 def _wrap(emission_sql: str, header_sql: str | None, dedupe: bool) -> str:
-    """Emission ∪ header, optionally DISTINCT over the full triple key
-    (the set semantics of model.dedupe_triples)."""
+    """Emission ∪ header, optionally DISTINCT over the full triple key —
+    the set semantics of the reference's rdflib Graph (a duplicate
+    ``g.add`` is a no-op). ``obj_is_iri`` is part of term identity: an IRI
+    and a plain literal with the same lexical form are different terms,
+    and keying on it leaves no arbitrary winner between an IRI-flagged and
+    a literal-flagged duplicate across partitionings."""
     body = emission_sql
     if header_sql:
         body = f"{body}\nUNION ALL\n{header_sql}"

@@ -74,7 +74,7 @@ def get_spark(
         # their first materialization is slow
         .config("spark.sql.broadcastTimeout", "3600")
         # driver-side plan-construction cost levers (measured on the
-        # relations stage build, tools/plan_cost_experiment.py):
+        # relations stage build, BENCH/PLANCOST.md):
         # dataFrameDebugging (static conf) gates a per-DataFrame-call
         # inspect stack walk + an extra py4j origin round-trip (~5%);
         # constraint propagation is quadratic-ish on the ~90-rule union

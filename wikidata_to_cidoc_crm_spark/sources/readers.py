@@ -3,8 +3,8 @@
 S1  CSV QID scan            — load_qids (authors.py:236-249 parity)
 S5  triple-table scan       — read_triples (parquet/Iceberg stage tables)
 S6  Turtle sink             — sources.ttl.write_ttl (test-scale)
-S7  dbpedia regex post-pass — normalize_dbpedia (map_and_align.py:996-1004);
-                              a column op here, no file rewriting needed
+S7  dbpedia regex post-pass — a CASE in align_stage's final select
+                              (map_and_align.py:996-1004); no file rewriting
 """
 
 from __future__ import annotations
@@ -29,17 +29,3 @@ def read_triples(spark: SparkSession, path: str) -> DataFrame:
     if "subj_bucket" in df.columns:
         df = df.drop("subj_bucket")
     return df
-
-
-def normalize_dbpedia(triples: DataFrame) -> DataFrame:
-    """Expand 'dbpedia:Xyz' CURIEs in the object column to full IRIs
-    (map_and_align.py:996-1004 rewrites the serialized file; the engine
-    normalizes the column before writing instead)."""
-    return triples.withColumn(
-        "obj",
-        F.when(
-            F.col("obj_is_iri") & F.col("obj").startswith("dbpedia:"),
-            F.concat(F.lit("https://dbpedia.org/"),
-                     F.substring(F.col("obj"), 9, 10_000)),
-        ).otherwise(F.col("obj")),
-    )
