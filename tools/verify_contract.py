@@ -49,7 +49,7 @@ def value_hash(rows, colnames):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("verify-contract", cores=16, shuffle_partitions=16)
+    spark = get_spark("verify-contract")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")

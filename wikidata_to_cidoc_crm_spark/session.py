@@ -82,6 +82,17 @@ def get_spark(
         # non-null by construction (~25% of plan time)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.constraintPropagation.enabled", "false")
+        # generated-code cache (static conf). A pipeline execution is a few
+        # hundred small plans, and Spark's default cache of 100 classes
+        # holds none of its working set: at local[4] on the e2ebench inputs
+        # every warm run_pipeline execution recompiled ~880 classes and
+        # every warm operators execution 262. 1000 entries hold both: a
+        # warm execution then compiles 16-22 (pipeline) or 4-6 (operators).
+        # Class names keep their stage id: dropping it as well
+        # (spark.sql.codegen.useIdInClassName=false) also shares classes
+        # across plans, but at local[4] it left kg_validate stalled on
+        # execution memory for minutes (see CHANGES.md)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     # Shuffle/spill scratch on tmpfs — EXPLICIT OPT-IN via
     # SPARK_GRAFT_TMPFS_SCRATCH=1 (the sandbox bench harnesses set it; see
